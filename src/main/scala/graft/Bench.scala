@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.{Engine, Memo}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the events loader's NTZ→LTZ normalization (Tables.normalizeEventsTs)
-      // is value-preserving only under UTC — pin it like every other entry
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the library's documented session shape (Engine.session): native
-      // expressions + the rowImages feed rewrite resolve
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Engine.session(
+      master = Some(s"local[$cpus]"), shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF=k=v,k=v applies session confs before anything runs —
     // profiling aid (e.g. spark.graft.stream.stateStore=rocksdb to A/B the
@@ -34,7 +25,7 @@ object Bench {
     // attribution probe BASELINE.md prescribes for late-run inflation: if a
     // block is slow only when it runs late, the cause is session/machine
     // state, not the queries (fast-in-reverse == position-dependent).
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.entries.toSeq.sortBy(_._1)
     val selected = (if (sys.env.get("SPARK_GRAFT_REVERSE").contains("1"))
       ordered.reverse else ordered)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -62,231 +53,20 @@ object Bench {
       try SparkEntry.queries.get("st1_events_hourly_stream")
         .foreach(fn => fn(spark, sfDir).count())
       catch { case _: Throwable => () }
-    // pre-stage the date-partitioned events copy (memoized per JVM) so e3
-    // measures the pruned-scan query, not the one-time staging write —
-    // same treatment as the streaming entries' staged source
-    if (selected.exists(_._1 == "e3_events_daily_pruned"))
-      try graft.core.PartitionedTables.eventsByDateRoot(spark, sfDir)
-      catch { case _: Throwable => () }
-    // pre-build the stored d9 dedup index (ingest-time artifact) so d9
-    // times the delta-vs-index run — the operation the entry models
-    if (selected.exists(_._1 == "d9_incremental_dedup"))
-      try SparkEntry.d9IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // likewise the stored k6 navigation graph and g1 edge list: those
-    // entries time the beam SEARCH / the power iteration, not the
-    // ingest-time graph build
-    if (selected.exists(_._1 == "k6_beam_search"))
-      try SparkEntry.k6GraphDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "g1_pagerank"))
-      try SparkEntry.g1EdgesDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // and the staged d12 media blobs: the entry times decode→hash→pairing,
-    // not the one-time fixture PNG encode
-    if (selected.exists(_._1 == "d12_image_neardup"))
-      try SparkEntry.d12MediaDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // and the staged d14 video frames — same contract
-    if (selected.exists(_._1 == "d14_video_neardup"))
-      try SparkEntry.d14MediaDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // and the staged d15 audio blobs — same contract
-    if (selected.exists(_._1 == "d15_audio_neardup"))
-      try SparkEntry.d15MediaDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // and the stored IVF-PQ indexes (train + encode at ingest time): the
-    // k8/k13/st15 entries time the SEARCH against the artifact
-    if (selected.exists(n => n._1 == "k8_ivfpq_topk" ||
-        n._1 == "k16_ann_recall"))
-      try SparkEntry.k8IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "k13_index_incremental"))
-      try SparkEntry.k13IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "st15_vector_index_maintain"))
-      try SparkEntry.st15IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // and the stream-built BM25 postings index: st16 times the SEARCH
-    if (selected.exists(_._1 == "st16_bm25_index_maintain"))
-      try SparkEntry.st16IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // stream-built MG summaries / zone-mapped table / cluster state: the
-    // st17/st18/st18b/st19 entries time the SEARCH or pruned read against
-    // the maintained artifact (the same ingest-time contract as st15/st16)
-    if (selected.exists(_._1 == "st17_heavy_hitters_maintain"))
-      try SparkEntry.st17SummaryDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(n => n._1 == "st18_zonemap_range" ||
-        n._1 == "st18b_zonemap_secondary"))
-      try SparkEntry.st18TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "st19_cluster_maintain"))
-      try SparkEntry.st19ClusterDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // the stored hierarchical pyramid: k18 times the layered SEARCH, and
-    // k16's hier recall leg serves the same artifact
-    if (selected.exists(n => n._1 == "k18_hier_topk" ||
-        n._1 == "k16_ann_recall"))
-      try SparkEntry.k18IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // the persisted ANALYZE relation: a29 times the stats-PLANNED join,
-    // not the ANALYZE (a25 itself times that)
-    if (selected.exists(_._1 == "a29_stats_join"))
-      try SparkEntry.a29StatsDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // the committed shard table: p8 times the manifest read-back
-    if (selected.exists(_._1 == "p8_training_shards"))
-      try SparkEntry.p8ShardsDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // the post-takedown manifest snapshot / tombstoned postings index:
-    // u9 times the snapshot read, d16 the masked search — commit + delete
-    // are ingest-time artifacts
-    if (selected.exists(n => n._1 == "u9_takedown" ||
-        n._1 == "u19_dsv2_sql" || n._1 == "u32_cdf_read"))
-      try SparkEntry.u9TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u20_dsv2_write"))
-      try SparkEntry.u20TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u24_stream_tail"))
-      try SparkEntry.u24StreamDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(n =>
-        n._1 == "u21_dsv2_ddl" || n._1 == "u22_agg_pushdown" ||
-          n._1 == "u23_runtime_prune"))
-      try SparkEntry.u21TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "d16_index_takedown"))
-      try SparkEntry.d16IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u10_schema_evolution"))
-      try SparkEntry.u10TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "st20_hier_index_maintain"))
-      try SparkEntry.st20IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "d17_pyramid_takedown"))
-      try SparkEntry.d17IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "d18_cluster_takedown"))
-      try SparkEntry.d18ClusterDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u11_table_changes"))
-      try SparkEntry.u9TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u11b_cdf_catchup"))
-      try SparkEntry.u11bTableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u13_restore"))
-      try SparkEntry.u13TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "st21_cdf_consumer"))
-      try SparkEntry.st21StateDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u14_partition_ttl"))
-      try SparkEntry.u14TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u15_merge_upsert"))
-      try SparkEntry.u15TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "st24_native_sink"))
-      try SparkEntry.st24TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u28_multipart"))
-      try SparkEntry.u28TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u29_catalog_sql"))
-      try SparkEntry.u29Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u30_sql_update"))
-      try SparkEntry.u30TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u26_sql_delete"))
-      try SparkEntry.u26TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u27_sql_merge"))
-      try SparkEntry.u27TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u16_bloom_takedown"))
-      try SparkEntry.u16TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "st22_cdc_replica"))
-      try SparkEntry.st22ReplicaDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u18_deferred_takedown"))
-      try SparkEntry.u18TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "st23_streamed_takedown"))
-      try SparkEntry.st23TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // round-19 artifacts: the hidden-layout catalogs (u37/u38), the
-    // partition-overwrite table (u39), the row-image merge history (u40)
-    // and the rename-lifecycle catalog (u41) are ingest-time builds —
-    // the entries time the gated READ/pairing
-    if (selected.exists(_._1 == "u37_days_layout"))
-      try SparkEntry.u37Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u38_bucket_layout"))
-      try SparkEntry.u38Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u42_months_layout"))
-      try SparkEntry.u42Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u43_spj_join"))
-      try SparkEntry.u43Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u39_replace_where"))
-      try SparkEntry.u39TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u44_catalog_txn"))
-      try SparkEntry.u44CatalogDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u45_spj_days"))
-      try SparkEntry.u45Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u46_rename_source"))
-      try SparkEntry.u46Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u40_cdf_row_images"))
-      try SparkEntry.u40TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    // u33/u34 were DECLARED memo-warm from the start (the entries time the
-    // history read / the compacted-table scan; the five-version lifecycle
-    // and the catalog build are ingest-time artifacts) but were the only
-    // memoWarm entries missing their pre-stage block, so their first timed
-    // run silently paid ~2 s of one-time staging (r22 event-log
-    // attribution: warm floors are 0.08 s / 0.03 s). Additive harness fix,
-    // declared in OPTIMIZATION_r22.md.
-    if (selected.exists(_._1 == "u33_history"))
-      try SparkEntry.u33TableDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u34_multilevel_sql"))
-      try SparkEntry.u34Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    if (selected.exists(_._1 == "u41_rename_lifecycle"))
-      try SparkEntry.u41Catalog(spark, sfDir)
-      catch { case _: Throwable => () }
-    // u12 counts five stored artifacts; stage any its co-entries didn't
-    if (selected.exists(_._1 == "u12_freshness")) {
-      try SparkEntry.d18ClusterDir(spark, sfDir)
-      catch { case _: Throwable => () }
-      try SparkEntry.d17IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-      try SparkEntry.d9IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-      try SparkEntry.d16IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-      try SparkEntry.k8IndexDir(spark, sfDir)
-      catch { case _: Throwable => () }
-    }
+    // the selected entries' ingest-time artifacts (staged tables, indexes,
+    // media blobs), each built once and untimed, so every entry times the
+    // operation it models, not the artifact build. A failing build is
+    // fatal: swallowing it would silently move the build into the timed
+    // region of the first entry that reads the artifact.
+    selected.flatMap(_._2.staged).distinct.foreach(_.get((spark, sfDir)))
     // Deterministic order (hash-Map order varied run to run) and a cold
     // cache per query: otherwise first-touch parquet footer reads and
     // persisted RDDs shared across entries land on whichever query happens
     // to run first, making per-query numbers unattributable across rounds.
-    // SPARK_GRAFT_COLD=1 drops the cross-query pipeline memos before every
-    // entry, measuring each as a standalone rebuild; default keeps them, and
-    // the affected entries are flagged in the output as "memo_warm".
+    // SPARK_GRAFT_COLD=1 drops every memo (Engine.releaseCachedState) before
+    // every entry, measuring each as a standalone rebuild; default keeps
+    // them. Either way an entry is listed in "memo_warm" when its timed call
+    // was served at least one value an earlier call had built (Memo.hits).
     val cold = sys.env.get("SPARK_GRAFT_COLD").contains("1")
     // Per-query JVM probes (stderr, one JSON object per line): elapsed
     // wall-clock since the JVM started, used heap, and CUMULATIVE GC
@@ -307,16 +87,15 @@ object Bench {
     }
     val jvmT0 = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
     var sinceGc = 0
-    val results = selected.map { case (name, fn) =>
+    // One timed call, preceded by the untimed per-query isolation. Returns
+    // the elapsed seconds (None if the entry threw) and whether any memo hit
+    // served the call.
+    def timed(name: String, entry: SparkEntry.Entry): (Option[Double], Boolean) = {
       spark.catalog.clearCache()
-      if (cold) {
-        SparkEntry.invalidateMemos(spark)
-        // checkpoint/persist blocks aren't touched by clearCache and are
-        // only GC'd lazily via ContextCleaner — unpersist eagerly so cold
-        // runs don't accumulate dead blocks that skew later entries
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      // checkpoint/persist blocks aren't touched by clearCache and are only
+      // GC'd lazily via ContextCleaner — cold runs unpersist them eagerly
+      // with the memos, so dead blocks don't skew later entries
+      if (cold) Engine.releaseCachedState(spark)
       // Dead-checkpoint reaping (untimed): per-query localCheckpoint blocks
       // are reclaimed by the ContextCleaner only after driver GC collects
       // the dead RDD objects — and on a large-heap box GC may never run
@@ -326,33 +105,42 @@ object Bench {
       // a periodic GC lets the cleaner release those blocks so storage
       // pressure from query N's debris can't tax query N+1's execution
       // memory. Memoized checkpoints (d2/d7 pairs etc.) stay referenced and
-      // therefore stay persisted — memo_warm semantics are unchanged.
+      // therefore stay persisted.
       sinceGc += 1
       if (sinceGc >= 8) { System.gc(); sinceGc = 0 }
       // label the query's jobs (guide §1.5) so event-log/UI profiling can
       // attribute stages to entries; thread-local, cleared after the run
       spark.sparkContext.setJobDescription(s"bench:$name")
+      val hits0 = Memo.hits
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
+      val ok = try { entry.run(spark, sfDir).count(); true } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1L
+          false
       }
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
+      (Some(sec).filter(_ => ok), Memo.hits > hits0)
+    }
+    val results = selected.map { case (name, entry) =>
+      val (sec, warm) = timed(name, entry)
       val (gcMs, gcN) = gcNow()
       val rt = Runtime.getRuntime
       val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
       val sinceStart = (System.currentTimeMillis() - jvmT0) / 1e3
       val nPersist = spark.sparkContext.getPersistentRDDs.size
       System.err.println(
-        s"""[bench-probe] {"q":"$name","t_s":$sec,"since_start_s":$sinceStart,""" +
+        s"""[bench-probe] {"q":"$name","t_s":${sec.getOrElse(-1.0)},"since_start_s":$sinceStart,""" +
           s""""heap_used_mb":$heapMb,"gc_ms":$gcMs,"gc_count":$gcN,"persistent_rdds":$nPersist}""")
-      name -> sec
+      (name, sec, warm)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    def jsonList(names: Seq[String]): String =
+      names.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // a failed key is null, never a timing: it is listed in "failed", left
+    // out of the total and the minima, and the run exits non-zero
+    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v.getOrElse("null") }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = results.flatMap(_._2).sum
     // Min-of-N protocol for the round's watch list (BASELINE.md variance
     // band): queries whose round-over-round ratio has exceeded the 1.3x
     // band get 2 extra timed repeats here, and the reported minimum
@@ -361,7 +149,7 @@ object Bench {
     // every round. Repeats follow the main loop's exact protocol (cache
     // clear + periodic GC); the headline total does NOT include them.
     // Override the set with SPARK_GRAFT_MINIMA=q1,q2 (empty string = none).
-    val firstRun = results.toMap
+    val firstRun = results.collect { case (k, Some(v), _) => k -> v }.toMap
     // FENCE-WARM replay keys are EXCLUDED from the re-timed minima
     // (round-15 floor hygiene, prescribed by the r14 verdict): these
     // entries re-run a streamed ingest/absorb loop whose `batch=b<id>`
@@ -387,47 +175,33 @@ object Bench {
     val watchlist = sys.env.get("SPARK_GRAFT_MINIMA")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse {
-        val slowest = firstRun.toSeq.filter(_._2 > 0)
-          .sortBy(-_._2).take(8).map(_._1).toSet
+        val slowest = firstRun.toSeq.sortBy(-_._2).take(8).map(_._1).toSet
         (slowest ++ Set(
           "a24_heavy_hitters", "k8_ivfpq_topk", "d13_cc_twophase",
           "x20_importance_select", "p6_dsir_pipeline"))
           .diff(fenceWarmReplay)
       }
+    val repeatFailed = scala.collection.mutable.LinkedHashSet[String]()
     val minima = selected.collect {
-      case (name, fn) if watchlist.contains(name) =>
-        val reps = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          // the repeats must follow the main loop's EXACT protocol —
-          // under SPARK_GRAFT_COLD=1 that includes the memo invalidation,
-          // or a memo-backed query's "minimum" silently mixes a cold first
-          // run with memo-warm repeats
-          if (cold) {
-            SparkEntry.invalidateMemos(spark)
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
-          }
-          sinceGc += 1
-          if (sinceGc >= 8) { System.gc(); sinceGc = 0 }
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-          (System.nanoTime() - t0) / 1e9
-        }
-        val best = (reps ++ firstRun.get(name).filter(_ >= 0)).min
+      case (name, entry) if watchlist.contains(name) && firstRun.contains(name) =>
+        val reps = (1 to 2).map(_ => timed(name, entry)._1)
+        if (reps.contains(None)) repeatFailed += name
+        val runs = firstRun(name) +: reps.flatten
         System.err.println(
-          s"""[bench-minima] {"q":"$name","min_s":$best,"runs":[${(firstRun.get(name).toSeq ++ reps).mkString(",")}]}""")
-        name -> best
+          s"""[bench-minima] {"q":"$name","min_s":${runs.min},"runs":[${runs.mkString(",")}]}""")
+        name -> runs.min
     }
     val minimaJson = minima.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val warm = if (cold) "[]"
-      else SparkEntry.memoWarm.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val warm = jsonList(results.collect { case (k, _, true) => k }.sorted)
+    val failed = jsonList(
+      (results.collect { case (k, None, _) => k } ++ repeatFailed).distinct)
     // Headline total LAST: the driver captures a bounded TAIL of stdout, so
     // anything near the front of a long line can be truncated away (round 5
     // lost a10 + the total). Belt-and-braces, the same JSON also goes to a
     // file the driver/judge can read whole.
     val json =
-      s"""{"metric":"total","unit":"sec","queries":$qs,"memo_warm":$warm,"minima":$minimaJson,"sf":"$sfDir","value":$total}"""
+      s"""{"metric":"total","unit":"sec","queries":$qs,"memo_warm":$warm,"minima":$minimaJson,"failed":$failed,"sf":"$sfDir","value":$total}"""
     println(json)
     // a SPARK_GRAFT_ONLY subset run must not clobber the repo's full-run
     // headline artifact with a partial total — divert to BENCH.subset.json
@@ -440,5 +214,6 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
     spark.stop()
+    if (failed != "[]") sys.exit(1)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.ColumnSelection
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import graft.operators.Exporter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,160 +18,132 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Shared-stage memo for the dedup pipeline: d2 (pairs), d7 (clusters) and
-    * d8 (cleaned corpus) are stages of ONE pipeline — without this each entry
-    * rebuilt the whole MinHash+LSH+verify DAG from the scan (~60s of the
-    * round-3 bench was triple recompute). The materialization is an eager
-    * `localCheckpoint`, not `persist`: checkpoint blocks survive
-    * `spark.catalog.clearCache()` (the bench isolates queries with it) and
-    * truncate lineage, so downstream stages re-plan from a tiny materialized
-    * relation. Keyed per (session, dir); entries are deterministic, so reuse
-    * never changes results.
+  /** An entry's ingest-time artifact: a tracked scratch dir built once per
+    * (session, sf dir) and deleted on [[graft.core.Memo.releaseAll]]. Bench
+    * builds an entry's artifacts untimed, so the entry times the operation
+    * it models (the search, the pruned read), not the index build.
     */
-  private val pairMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val clusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  type Artifact = Memo[(SparkSession, String), String]
 
-  /** One-time STORED dedup index for the d9 incremental entry: the corpus
-    * generation's band keys + shingle sets written to a scratch path once
-    * per (session, dir) — the daily delta run then reads the index instead
-    * of re-shingling the corpus (Dedup.incrementalFromIndex). At a real
-    * deployment this is the ingest-time artifact on shared storage; here the
-    * memo stands in for "already ingested".
+  private def artifact(prefix: String, fast: Boolean = false)(
+      fill: (SparkSession, String, String) => Unit): Artifact =
+    Memo.dir[(SparkSession, String)](prefix, fast) {
+      case ((s, dir), path) => fill(s, dir, path)
+    }
+
+  /** An artifact whose scratch dir is the warehouse of a
+    * [[graft.sources.GraftCatalog]] registered under [[catalogName]];
+    * `fill` gets that name.
     */
-  private val dedupIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private def catalogArtifact(prefix: String)(
+      fill: (SparkSession, String, String) => Unit): Artifact =
+    artifact(prefix) { (s, dir, warehouse) =>
+      val cat = catalogName(warehouse)
+      s.conf.set(s"spark.sql.catalog.$cat",
+        classOf[graft.sources.GraftCatalog].getName)
+      s.conf.set(s"spark.sql.catalog.$cat.root", warehouse)
+      fill(s, dir, cat)
+    }
 
-  private val streamedIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val statsStateMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** The catalog name of a staged warehouse: its unique scratch dir name.
+    * The CatalogManager caches plugin instances by name, so a name must
+    * never be reused for a new root — a rebuild after a release gets a new
+    * dir, hence a new name, hence a fresh plugin.
+    */
+  def catalogName(warehouse: String): String =
+    java.nio.file.Paths.get(warehouse).getFileName.toString.replaceAll("\\W", "_")
+
+  /** One registered key: the query, and the artifacts it reads. */
+  final case class Entry(
+      run: (SparkSession, String) => DataFrame, staged: Seq[Artifact] = Nil)
+
+  private def staged(artifacts: Artifact*)(
+      run: (SparkSession, String) => DataFrame): Entry = Entry(run, artifacts)
 
   /** One-time STORED kNN graph (K5 at graphK=8) for the k6 beam-search
-    * entry — the same ingest-time-artifact contract as [[d9IndexDir]]: a
+    * entry — the same ingest-time-artifact contract as [[d9Index]]: a
     * real deployment builds the navigation graph once at indexing time and
     * every query traverses it; k6's number measures the SEARCH, not a
     * from-scratch index build per query.
     */
-  private val knnGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Build (once) and return the stored k6 navigation-graph path. */
-  def k6GraphDir(s: SparkSession, dir: String): String =
-    knnGraphMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_k6_graph")
-      graft.operators.Similarity.knnGraph(t(s, dir, "embeddings"), k = 8)
-        .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  private val g1EdgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private val d12MediaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val k6Graph = artifact("graft_k6_graph") { (s, dir, path) =>
+    graft.operators.Similarity.knnGraph(t(s, dir, "embeddings"), k = 8)
+      .write.mode("overwrite").parquet(path)
+  }
 
   /** Stored texture-PNG media table (media_id, content) for d12 — the
-    * ingest-time-artifact contract of [[d9IndexDir]]/[[k6GraphDir]] applied
+    * ingest-time-artifact contract of [[d9Index]]/[[k6Graph]] applied
     * to the multimodal fixture: a real pipeline DEDUPES blobs it already
     * ingested; synthesizing them is the harness's job, not the operator's.
     * Round 9 measured d12 at 12.3 s with ~all of it in the fixture's JDK
     * PNG ENCODE UDF — staging the blobs once lets d12's number measure
     * decode → dHash → pigeonhole pairing, the operator itself.
     */
-  def d12MediaDir(s: SparkSession, dir: String): String =
-    d12MediaMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_d12_media")
-      t(s, dir, "documents")
-        .select(
-          col("doc_id").as("media_id"),
-          graft.operators.Multimodal.encodeTexturePngFixture(col("doc_id"))
-            .as("content"))
-        // shard like d14MediaDir: one compact blob file = one scan split =
-        // single-core decode otherwise
-        .repartition(s.sparkContext.defaultParallelism, col("media_id"))
-        .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  private val d14MediaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val d12Media = artifact("graft_d12_media") { (s, dir, path) =>
+    t(s, dir, "documents")
+      .select(
+        col("doc_id").as("media_id"),
+        graft.operators.Multimodal.encodeTexturePngFixture(col("doc_id"))
+          .as("content"))
+      // shard like d14Media: one compact blob file = one scan split =
+      // single-core decode otherwise
+      .repartition(s.sparkContext.defaultParallelism, col("media_id"))
+      .write.mode("overwrite").parquet(path)
+  }
 
   /** Stored video-frame table (video_id, frame_idx, content) for d14 —
-    * the [[d12MediaDir]] ingest-time-artifact contract applied to the
+    * the [[d12Media]] ingest-time-artifact contract applied to the
     * VIDEO fixture: every other document becomes a 5-frame video
     * ([[graft.operators.Multimodal.encodeVideoFrameFixture]]), ids with
     * `id % 10 == 8` a temporally-shifted perturbed repost of id−2. Staged
     * once so the d14 entry times decode → per-frame dHash → banding →
     * alignment verify, not the fixture PNG encode.
     */
-  def d14MediaDir(s: SparkSession, dir: String): String =
-    d14MediaMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_d14_media")
-      t(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id").as("video_id"),
-          explode(expr("sequence(0, 4)")).as("frame_idx"))
-        .select(col("video_id"), col("frame_idx"),
-          graft.operators.Multimodal.encodeVideoFrameFixture(
-            col("video_id"), col("frame_idx")).as("content"))
-        // shard the staged blobs: tiny-blob fixtures compress to ONE scan
-        // split, which would serialize the per-frame JDK decode onto one
-        // core — at real scale media files are many-file by construction
-        .repartition(s.sparkContext.defaultParallelism, col("video_id"))
-        .write.mode("overwrite").parquet(path)
-      path
-    })
+  private val d14Media = artifact("graft_d14_media") { (s, dir, path) =>
+    t(s, dir, "documents")
+      .filter(col("doc_id") % 2 === 0)
+      .select(col("doc_id").as("video_id"),
+        explode(expr("sequence(0, 4)")).as("frame_idx"))
+      .select(col("video_id"), col("frame_idx"),
+        graft.operators.Multimodal.encodeVideoFrameFixture(
+          col("video_id"), col("frame_idx")).as("content"))
+      // shard the staged blobs: tiny-blob fixtures compress to ONE scan
+      // split, which would serialize the per-frame JDK decode onto one
+      // core — at real scale media files are many-file by construction
+      .repartition(s.sparkContext.defaultParallelism, col("video_id"))
+      .write.mode("overwrite").parquet(path)
+  }
 
   /** Stored k=5 kNN edge list for the g1 entry — PageRank's subject is an
     * EXISTING graph (the crawl's link/citation structure); building one is
-    * k5's number. Same ingest-time-artifact contract as [[k6GraphDir]].
+    * k5's number. Same ingest-time-artifact contract as [[k6Graph]].
     */
-  def g1EdgesDir(s: SparkSession, dir: String): String =
-    g1EdgesMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_g1_edges")
-      graft.operators.Similarity.knnGraph(t(s, dir, "embeddings"), k = 5)
-        .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  private val d15MediaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val g1Edges = artifact("graft_g1_edges") { (s, dir, path) =>
+    graft.operators.Similarity.knnGraph(t(s, dir, "embeddings"), k = 5)
+      .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
+      .write.mode("overwrite").parquet(path)
+  }
 
   /** Stored audio table (audio_id, content WAV bytes) for d15 — the
-    * [[d14MediaDir]] ingest-time-artifact contract on the audio axis:
+    * [[d14Media]] ingest-time-artifact contract on the audio axis:
     * every odd document becomes a 6-frame audio fixture
     * ([[graft.operators.Multimodal.encodeAudioFixture]]), ids with
     * `id % 10 == 3` a one-frame-trimmed perturbed repost of id−2. Staged
     * once so the d15 entry times decode → frame hashing → banding →
     * alignment verify, not the fixture WAV encode.
     */
-  def d15MediaDir(s: SparkSession, dir: String): String =
-    d15MediaMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_d15_media")
-      t(s, dir, "documents")
-        .filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id").as("audio_id"))
-        .select(col("audio_id"),
-          graft.operators.Multimodal.encodeAudioFixture(col("audio_id"))
-            .as("content"))
-        // one compact blob file = one scan split = single-core decode
-        // otherwise — the d12/d14 sharding rule
-        .repartition(s.sparkContext.defaultParallelism, col("audio_id"))
-        .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  private val vectorIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val vectorIndexIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val streamedVectorIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val streamedTextIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val d15Media = artifact("graft_d15_media") { (s, dir, path) =>
+    t(s, dir, "documents")
+      .filter(col("doc_id") % 2 === 1)
+      .select(col("doc_id").as("audio_id"))
+      .select(col("audio_id"),
+        graft.operators.Multimodal.encodeAudioFixture(col("audio_id"))
+          .as("content"))
+      // one compact blob file = one scan split = single-core decode
+      // otherwise — the d12/d14 sharding rule
+      .repartition(s.sparkContext.defaultParallelism, col("audio_id"))
+      .write.mode("overwrite").parquet(path)
+  }
 
   /** st16's artifact: the BM25 postings index built by absorbing the whole
     * documents table THROUGH the streaming engine (micro-batch per staged
@@ -180,18 +152,10 @@ object SparkEntry {
     * stream-built index is value-identical to a batch build and the st16
     * search shares k14's oracle.
     */
-  def st16IndexDir(s: SparkSession, dir: String): String =
-    streamedTextIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st16_tindex")
-      graft.streaming.EventsStream.textIndexMaintainReplay(
-        s, dir, path, "TRUE")
-      path
-    })
-
-  private val streamedHeavyHittersMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val statsArtifactMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st16Index = artifact("graft_st16_tindex") { (s, dir, path) =>
+    graft.streaming.EventsStream.textIndexMaintainReplay(
+      s, dir, path, "TRUE")
+  }
 
   /** a29's artifact: the persisted ANALYZE relation ([[graft.catalog
     * .TableStats.analyze]] — a25's pipeline) built once per (session, dir);
@@ -199,16 +163,9 @@ object SparkEntry {
     * the whole point — stats produced at ANALYZE time, consumed at plan
     * time, the metastore-CBO loop for path-based tables.
     */
-  def a29StatsDir(s: SparkSession, dir: String): String =
-    statsArtifactMemo.computeIfAbsent((s, dir), _ => {
-      // memo stores the TRACKED parent (what invalidateMemos drops); the
-      // artifact itself lives one level down
-      val root = graft.core.TempDirs.createFast("graft_a29_stats_")
-      graft.catalog.TableStats.analyze(s, dir, root + "/stats")
-      root
-    }) + "/stats"
-  private val zoneMapTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val a29Stats = artifact("graft_a29_stats_", fast = true) { (s, dir, root) =>
+    graft.catalog.TableStats.analyze(s, dir, root + "/stats")
+  }
 
   /** st18's artifact: the events stream ingested append-only into a
     * zone-mapped manifest table ([[graft.streaming.EventsStream
@@ -218,15 +175,9 @@ object SparkEntry {
     * [[graft.core.ManifestTable.readPruned]], so the manifest's file
     * skipping is on the gated value path, not just unit-pinned.
     */
-  def st18TableDir(s: SparkSession, dir: String): String =
-    zoneMapTableMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st18_zm")
-      graft.streaming.EventsStream.zoneMapIngestReplay(s, dir, path)
-      path
-    })
-
-  private val streamedTakedownMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st18Table = artifact("graft_st18_zm") { (s, dir, path) =>
+    graft.streaming.EventsStream.zoneMapIngestReplay(s, dir, path)
+  }
 
   /** st23's artifact: the st18 streamed ingest with a MID-STREAM deferred
     * takedown (event_id % 1009 — recorded O(list) after batch 1's commit,
@@ -235,16 +186,13 @@ object SparkEntry {
     * are masked too: the takedown is by key, not by arrival time. The
     * gated read is the post-fold snapshot.
     */
-  def st23TableDir(s: SparkSession, dir: String): String =
-    streamedTakedownMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st23_zm")
-      graft.streaming.EventsStream.zoneMapIngestReplay(s, dir, path,
-        queryName = "graft_zonemap_takedown_stream",
-        takedownAtBatch = Some((1L, ss =>
-          t(ss, dir, "events").filter(col("event_id") % 1009 === 0)
-            .select("event_id"))))
-      path
-    })
+  private val st23Table = artifact("graft_st23_zm") { (s, dir, path) =>
+    graft.streaming.EventsStream.zoneMapIngestReplay(s, dir, path,
+      queryName = "graft_zonemap_takedown_stream",
+      takedownAtBatch = Some((1L, ss =>
+        t(ss, dir, "events").filter(col("event_id") % 1009 === 0)
+          .select("event_id"))))
+  }
 
   /** st17's artifact: per-micro-batch Misra–Gries summaries absorbed
     * THROUGH the streaming engine ([[graft.streaming.EventsStream
@@ -253,13 +201,10 @@ object SparkEntry {
     * hitter under any batch split, so the exact-verified st17 search is
     * batch-boundary-independent and shares a24's oracle verbatim.
     */
-  def st17SummaryDir(s: SparkSession, dir: String): String =
-    streamedHeavyHittersMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st17_hh")
-      graft.streaming.EventsStream.heavyHittersMaintainReplay(
-        s, dir, path, "TRUE")
-      path
-    })
+  private val st17Summary = artifact("graft_st17_hh") { (s, dir, path) =>
+    graft.streaming.EventsStream.heavyHittersMaintainReplay(
+      s, dir, path, "TRUE")
+  }
 
   /** Stored full-corpus IVF-PQ index for k8 ([[graft.operators.VectorIndex]]
     * — the d9/k6 ingest-time-artifact contract applied to ANN): quantizers
@@ -268,15 +213,9 @@ object SparkEntry {
     * (same deterministic training on the same corpus), so the k8 oracle is
     * unchanged.
     */
-  def k8IndexDir(s: SparkSession, dir: String): String =
-    vectorIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_k8_vindex")
-      graft.operators.VectorIndex.build(t(s, dir, "embeddings"), path)
-      path
-    })
-
-  private val hierIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val k8Index = artifact("graft_k8_vindex") { (s, dir, path) =>
+    graft.operators.VectorIndex.build(t(s, dir, "embeddings"), path)
+  }
 
   /** k18's artifact: the persisted hierarchical-graph pyramid
     * ([[graft.operators.HierarchicalIndex.build]] — levels + per-layer kNN
@@ -284,12 +223,9 @@ object SparkEntry {
     * SEARCH. The k8/k13 ingest-time-artifact contract applied to graph
     * ANN.
     */
-  def k18IndexDir(s: SparkSession, dir: String): String =
-    hierIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_k18_hindex")
-      graft.operators.HierarchicalIndex.build(t(s, dir, "embeddings"), path)
-      path
-    })
+  private val k18Index = artifact("graft_k18_hindex") { (s, dir, path) =>
+    graft.operators.HierarchicalIndex.build(t(s, dir, "embeddings"), path)
+  }
 
   /** Deterministic 1/16 md5 slice playing the newly-arrived vector delta
     * (k13/st15) — the d9 convention on vec_id.
@@ -303,34 +239,28 @@ object SparkEntry {
     * ANN-ingest loop. The search over this composed index is value-gated
     * against the full SQL replay (training restricted to the base).
     */
-  def k13IndexDir(s: SparkSession, dir: String): String =
-    vectorIndexIncrMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_k13_vindex")
-      val emb = t(s, dir, "embeddings")
-      graft.operators.VectorIndex.build(
-        emb.filter(!expr(k13DeltaPredicate)), path)
-      graft.operators.VectorIndex.absorb(
-        s, path, emb.filter(expr(k13DeltaPredicate)), "b1")
-      path
-    })
+  private val k13Index = artifact("graft_k13_vindex") { (s, dir, path) =>
+    val emb = t(s, dir, "embeddings")
+    graft.operators.VectorIndex.build(
+      emb.filter(!expr(k13DeltaPredicate)), path)
+    graft.operators.VectorIndex.absorb(
+      s, path, emb.filter(expr(k13DeltaPredicate)), "b1")
+  }
 
-  /** The SAME composed index as [[k13IndexDir]], but with the base corpus
+  /** The SAME composed index as [[k13Index]], but with the base corpus
     * absorbed THROUGH the streaming engine (st15): quantizers trained once
     * at bootstrap, then each micro-batch of arriving vectors lands via
     * `VectorIndex.absorb` under a `batch=b<id>` fence, and the delta is
     * absorbed last. Values must equal k13's exactly — they share one
     * oracle.
     */
-  def st15IndexDir(s: SparkSession, dir: String): String =
-    streamedVectorIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st15_vindex")
-      graft.streaming.EventsStream.vectorIndexMaintainReplay(
-        s, dir, path, s"NOT ($k13DeltaPredicate)")
-      graft.operators.VectorIndex.absorb(
-        s, path, t(s, dir, "embeddings").filter(expr(k13DeltaPredicate)),
-        "delta")
-      path
-    })
+  private val st15Index = artifact("graft_st15_vindex") { (s, dir, path) =>
+    graft.streaming.EventsStream.vectorIndexMaintainReplay(
+      s, dir, path, s"NOT ($k13DeltaPredicate)")
+    graft.operators.VectorIndex.absorb(
+      s, path, t(s, dir, "embeddings").filter(expr(k13DeltaPredicate)),
+      "delta")
+  }
 
   /** x24's planted canaries: 45 tokens OUTSIDE the corpus vocabulary; the
     * eval variant edits tokens 7, 20 and 33 — every 13-gram window of the
@@ -491,30 +421,27 @@ object SparkEntry {
       "WHEN doc_id % 4 = 0 THEN text || chr(10) || chr(10) || 'all rights reserved contact us for details' " +
       "ELSE text END"
 
-  /** Build (once) and return the stored d9 index path for this (session, dir). */
-  def d9IndexDir(s: SparkSession, dir: String): String =
-    dedupIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_d9_index")
-      graft.operators.Dedup.writeIndex(
-        t(s, dir, "documents").filter(!expr(d9DeltaPredicate)), path)
-      path
-    })
+  /** One-time STORED dedup index for the d9 incremental entry: the corpus
+    * generation's band keys + shingle sets written to a scratch path once
+    * per (session, dir) — the daily delta run then reads the index instead
+    * of re-shingling the corpus (Dedup.incrementalFromIndex). At a real
+    * deployment this is the ingest-time artifact on shared storage; here the
+    * memo stands in for "already ingested".
+    */
+  private val d9Index = artifact("graft_d9_index") { (s, dir, path) =>
+    graft.operators.Dedup.writeIndex(
+      t(s, dir, "documents").filter(!expr(d9DeltaPredicate)), path)
+  }
 
-  /** The SAME corpus index as [[d9IndexDir]], but maintained THROUGH the
+  /** The SAME corpus index as [[d9Index]], but maintained THROUGH the
     * streaming engine: each micro-batch of arriving base documents is
     * absorbed via `Dedup.appendToIndex` under a `batch=b<id>` fence
     * (memoized once per (session, dir); >=2 micro-batches spec-asserted).
     */
-  def st11IndexDir(s: SparkSession, dir: String): String =
-    streamedIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st11_index")
-      graft.streaming.EventsStream.indexMaintainReplay(
-        s, dir, path, s"NOT ($d9DeltaPredicate)")
-      path
-    })
-
-  private val streamedClusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st11Index = artifact("graft_st11_index") { (s, dir, path) =>
+    graft.streaming.EventsStream.indexMaintainReplay(
+      s, dir, path, s"NOT ($d9DeltaPredicate)")
+  }
 
   /** st19's artifact: the full documents table streamed through
     * [[graft.streaming.EventsStream.clusterMaintainReplay]] — per
@@ -523,15 +450,9 @@ object SparkEntry {
     * final labels equal batch CC over the full pair set (any batch split),
     * so the entry shares d7's oracle verbatim.
     */
-  def st19ClusterDir(s: SparkSession, dir: String): String =
-    streamedClusterMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_st19_cluster")
-      graft.streaming.EventsStream.clusterMaintainReplay(s, dir, root, "TRUE")
-      root
-    })
-
-  private val clusterTakedownMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st19Cluster = artifact("graft_st19_cluster") { (s, dir, root) =>
+    graft.streaming.EventsStream.clusterMaintainReplay(s, dir, root, "TRUE")
+  }
 
   /** d18's artifact: the FULL cluster-state lifecycle — the st19 streamed
     * replay over most of the corpus, a takedown mid-life
@@ -546,43 +467,32 @@ object SparkEntry {
     * CC over the surviving corpus — the oracle is that survivor replay
     * ([[ccClustersOracleSqlOver]]), which covers all three phases at once.
     */
-  def d18ClusterDir(s: SparkSession, dir: String): String =
-    clusterTakedownMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_d18_cluster")
-      graft.streaming.EventsStream.clusterMaintainReplay(
-        s, dir, root, "doc_id % 10 != 7")
-      graft.operators.ClusterIndex.delete(
-        s"$root/index", root,
-        t(s, dir, "documents").filter(col("doc_id") % 13 === 4)
-          .select("doc_id"),
-        batchId = 1000L)
-      graft.operators.ClusterIndex.mergeBatch(
-        s"$root/index", root,
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 10 === 7 && col("doc_id") % 13 =!= 4),
-        batchId = 1001L)
-      root
-    })
-
-  private val trainingShardsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val d18Cluster = artifact("graft_d18_cluster") { (s, dir, root) =>
+    graft.streaming.EventsStream.clusterMaintainReplay(
+      s, dir, root, "doc_id % 10 != 7")
+    graft.operators.ClusterIndex.delete(
+      s"$root/index", root,
+      t(s, dir, "documents").filter(col("doc_id") % 13 === 4)
+        .select("doc_id"),
+      batchId = 1000L)
+    graft.operators.ClusterIndex.mergeBatch(
+      s"$root/index", root,
+      t(s, dir, "documents")
+        .filter(col("doc_id") % 10 === 7 && col("doc_id") % 13 =!= 4),
+      batchId = 1001L)
+  }
 
   /** p8's artifact: packed sequences md5-shuffled into 8 fixed shards,
     * committed atomically through the U5 manifest
     * ([[graft.operators.TextAnalysis.writeTrainingShards]]); the entry
     * reads the committed table back, so the gated values ARE the artifact.
     */
-  def p8ShardsDir(s: SparkSession, dir: String): String =
-    trainingShardsMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_p8_shards") + "/t"
-      graft.operators.TextAnalysis.writeTrainingShards(
-        graft.operators.TextAnalysis.packSequences(t(s, dir, "documents")),
-        root)
-      root
-    })
-
-  private val streamedHierIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val p8Shards = artifact("graft_p8_shards") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    graft.operators.TextAnalysis.writeTrainingShards(
+      graft.operators.TextAnalysis.packSequences(t(s, dir, "documents")),
+      root)
+  }
 
   /** st20's artifact: the embeddings table streamed through
     * [[graft.streaming.EventsStream.hierIndexMaintainReplay]] — batch 0
@@ -590,16 +500,10 @@ object SparkEntry {
     * HNSW-style absorb. absorb ≡ rebuild exactly (spec-pinned), so the
     * entry shares k18's oracle verbatim.
     */
-  def st20IndexDir(s: SparkSession, dir: String): String =
-    streamedHierIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st20_hindex")
-      graft.streaming.EventsStream.hierIndexMaintainReplay(
-        s, dir, path, "TRUE")
-      path
-    })
-
-  private val takedownTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st20Index = artifact("graft_st20_hindex") { (s, dir, path) =>
+    graft.streaming.EventsStream.hierIndexMaintainReplay(
+      s, dir, path, "TRUE")
+  }
 
   /** u9's artifact: the documents catalog committed as a U5 manifest table
     * (bucketed by doc id), then a takedown list (`doc_id % 97 = 3` — the
@@ -610,23 +514,18 @@ object SparkEntry {
     * snapshot, so the gate proves the rewrite, the carry-forward and the
     * row filter in one key.
     */
-  def u9TableDir(s: SparkSession, dir: String): String =
-    takedownTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u9_takedown") + "/t"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
-      graft.core.ManifestTable.commit(s, root, docs, "bucket", 0L)
-      graft.core.ManifestTable.deleteRows(
-        s, root,
-        t(s, dir, "documents").filter(col("doc_id") % 97 === 3)
-          .select("doc_id"),
-        "doc_id")
-      root
-    })
-
-  private val historyTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u9Table = artifact("graft_u9_takedown") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
+    graft.core.ManifestTable.commit(s, root, docs, "bucket", 0L)
+    graft.core.ManifestTable.deleteRows(
+      s, root,
+      t(s, dir, "documents").filter(col("doc_id") % 97 === 3)
+        .select("doc_id"),
+      "doc_id")
+  }
 
   /** u33's artifact (round 18): a five-version lifecycle whose manifest
     * headers carry COMMIT METADATA — v0 Scala commit, v1 DSv2 append,
@@ -636,26 +535,21 @@ object SparkEntry {
     * value), so the key proves the audit surface: every version names
     * the verb that produced it and the fence each verb preserved.
     */
-  def u33TableDir(s: SparkSession, dir: String): String =
-    historyTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u33_history") + "/t"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
-      graft.core.ManifestTable.commit(s, root,
-        docs.filter(col("doc_id") % 2 === 0), "bucket", batchId = 0L)
-      docs.filter(col("doc_id") % 2 === 1)
-        .write.format("graft-manifest").mode("append")
-        .option("batchId", "1").save(root)
-      graft.core.ManifestTable.deleteRows(s, root,
-        docs.filter(col("doc_id") % 97 === 3).select("doc_id"), "doc_id")
-      graft.core.ManifestTable.dropPartitions(s, root, Seq("3"))
-      graft.core.ManifestTable.restore(s, root, toVersion = 2L)
-      root
-    })
-
-  private val dsv2WriteTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u33Table = artifact("graft_u33_history") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"))
+      .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
+    graft.core.ManifestTable.commit(s, root,
+      docs.filter(col("doc_id") % 2 === 0), "bucket", batchId = 0L)
+    docs.filter(col("doc_id") % 2 === 1)
+      .write.format("graft-manifest").mode("append")
+      .option("batchId", "1").save(root)
+    graft.core.ManifestTable.deleteRows(s, root,
+      docs.filter(col("doc_id") % 97 === 3).select("doc_id"), "doc_id")
+    graft.core.ManifestTable.dropPartitions(s, root, Seq("3"))
+    graft.core.ManifestTable.restore(s, root, toVersion = 2L)
+  }
 
   /** u20's artifact: a manifest table whose content arrives THROUGH the
     * DSv2 WRITE path — created by one Scala-API commit (partitioning +
@@ -668,28 +562,23 @@ object SparkEntry {
     * write, the staged-file publish, the fence and the read-back in one
     * key.
     */
-  def u20TableDir(s: SparkSession, dir: String): String =
-    dsv2WriteTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u20_dsv2w") + "/t"
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
-      graft.core.ManifestTable.commit(s, root,
-        docs.filter(col("doc_id") % 3 === 0), "bucket", batchId = 0L,
-        statsCol = Some("doc_id"))
-      docs.filter(col("doc_id") % 3 === 1)
-        .write.format("graft-manifest").mode("append")
-        .option("batchId", "1").option("statsColumns", "doc_id").save(root)
-      docs.filter(col("doc_id") % 3 === 2)
-        .write.format("graft-manifest").mode("append")
-        .option("batchId", "2").option("statsColumns", "doc_id").save(root)
-      docs.limit(5).withColumn("lang", lit("GARBAGE"))
-        .write.format("graft-manifest").mode("append")
-        .option("batchId", "2").save(root) // redelivery: fence no-op
-      root
-    })
-
-  private val streamTailMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u20Table = artifact("graft_u20_dsv2w") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
+      .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
+    graft.core.ManifestTable.commit(s, root,
+      docs.filter(col("doc_id") % 3 === 0), "bucket", batchId = 0L,
+      statsCol = Some("doc_id"))
+    docs.filter(col("doc_id") % 3 === 1)
+      .write.format("graft-manifest").mode("append")
+      .option("batchId", "1").option("statsColumns", "doc_id").save(root)
+    docs.filter(col("doc_id") % 3 === 2)
+      .write.format("graft-manifest").mode("append")
+      .option("batchId", "2").option("statsColumns", "doc_id").save(root)
+    docs.limit(5).withColumn("lang", lit("GARBAGE"))
+      .write.format("graft-manifest").mode("append")
+      .option("batchId", "2").save(root) // redelivery: fence no-op
+  }
 
   /** u24's artifact: the u20 DSv2-written table TAILED through the
     * format's streaming source (`spark.readStream.format("graft-
@@ -698,23 +587,17 @@ object SparkEntry {
     * stream exactly once, so the drained sink equals the table snapshot
     * — which is exactly what the shared u20 oracle checks.
     */
-  def u24StreamDir(s: SparkSession, dir: String): String =
-    streamTailMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u24_tail")
-      val q = s.readStream.format("graft-manifest")
-        .load(u20TableDir(s, dir))
-        .select(col("doc_id"), col("lang"))
-        .writeStream.format("parquet")
-        .option("path", root + "/sink")
-        .option("checkpointLocation", root + "/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      root
-    })
-
-  private val dsv2DdlTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u24Stream = artifact("graft_u24_tail") { (s, dir, root) =>
+    val q = s.readStream.format("graft-manifest")
+      .load(u20Table.get((s, dir)) + "/t")
+      .select(col("doc_id"), col("lang"))
+      .writeStream.format("parquet")
+      .option("path", root + "/sink")
+      .option("checkpointLocation", root + "/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+  }
 
   /** u21's artifact: a manifest table whose ENTIRE lifecycle ran in SQL
     * (round 16's DDL creation surface): `CREATE TABLE ... USING
@@ -725,28 +608,23 @@ object SparkEntry {
     * committed ROOT is the artifact, a plain manifest table every other
     * verb and the format read see identically.
     */
-  def u21TableDir(s: SparkSession, dir: String): String =
-    dsv2DdlTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u21_ddl") + "/t"
-      t(s, dir, "documents").createOrReplaceTempView("graft_u21_src")
-      s.sql("DROP TABLE IF EXISTS graft_u21_docs")
-      s.sql("CREATE TABLE graft_u21_docs " +
-        "(doc_id BIGINT, lang STRING, n_chars BIGINT, part STRING) " +
-        "USING `graft-manifest` " +
-        s"OPTIONS (path '$root', partitionCol 'part', statsColumns 'doc_id')")
-      s.sql("INSERT INTO graft_u21_docs " +
-        "SELECT doc_id, lang, n_chars, concat('b', CAST(doc_id % 4 AS STRING)) " +
-        "FROM graft_u21_src WHERE doc_id % 2 = 0")
-      s.sql("INSERT INTO graft_u21_docs " +
-        "SELECT doc_id, lang, n_chars, concat('b', CAST(doc_id % 4 AS STRING)) " +
-        "FROM graft_u21_src WHERE doc_id % 2 = 1")
-      s.sql("DROP TABLE IF EXISTS graft_u21_docs")
-      s.catalog.dropTempView("graft_u21_src")
-      root
-    })
-
-  private val evolutionTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u21Table = artifact("graft_u21_ddl") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    t(s, dir, "documents").createOrReplaceTempView("graft_u21_src")
+    s.sql("DROP TABLE IF EXISTS graft_u21_docs")
+    s.sql("CREATE TABLE graft_u21_docs " +
+      "(doc_id BIGINT, lang STRING, n_chars BIGINT, part STRING) " +
+      "USING `graft-manifest` " +
+      s"OPTIONS (path '$root', partitionCol 'part', statsColumns 'doc_id')")
+    s.sql("INSERT INTO graft_u21_docs " +
+      "SELECT doc_id, lang, n_chars, concat('b', CAST(doc_id % 4 AS STRING)) " +
+      "FROM graft_u21_src WHERE doc_id % 2 = 0")
+    s.sql("INSERT INTO graft_u21_docs " +
+      "SELECT doc_id, lang, n_chars, concat('b', CAST(doc_id % 4 AS STRING)) " +
+      "FROM graft_u21_src WHERE doc_id % 2 = 1")
+    s.sql("DROP TABLE IF EXISTS graft_u21_docs")
+    s.catalog.dropTempView("graft_u21_src")
+  }
 
   /** u10's artifact: a lineage-partitioned U5 table whose SECOND ingest
     * batch arrives with a column the first lacked (`n_chars`) — the
@@ -755,25 +633,20 @@ object SparkEntry {
     * post-evolution snapshot, so the gate proves the recorded-schema read
     * and the per-batch null fill (S8's mergeSchema semantics inside U5).
     */
-  def u10TableDir(s: SparkSession, dir: String): String =
-    evolutionTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u10_evolution") + "/t"
-      val docs = t(s, dir, "documents")
-      graft.core.ManifestTable.commit(s, root,
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("lang"))
-          .withColumn("part", lit("b0")),
-        "part", 0L)
-      graft.core.ManifestTable.commit(s, root,
-        docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-          .withColumn("part", lit("b1")),
-        "part", 1L)
-      root
-    })
-
-  private val ttlTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u10Table = artifact("graft_u10_evolution") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+    graft.core.ManifestTable.commit(s, root,
+      docs.filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("lang"))
+        .withColumn("part", lit("b0")),
+      "part", 0L)
+    graft.core.ManifestTable.commit(s, root,
+      docs.filter(col("doc_id") % 2 === 1)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .withColumn("part", lit("b1")),
+      "part", 1L)
+  }
 
   /** u14's artifact: a lineage-partitioned catalog table whose two oldest
     * partitions are expired through the METADATA-ONLY
@@ -781,20 +654,15 @@ object SparkEntry {
     * (zero data IO; bytes leave at vacuum). The gated read is the
     * post-drop snapshot.
     */
-  def u14TableDir(s: SparkSession, dir: String): String =
-    ttlTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u14_ttl") + "/t"
-      val docs = t(s, dir, "documents")
-      for (b <- 0 until 4)
-        graft.core.ManifestTable.commit(s, root,
-          docs.filter(col("doc_id") % 4 === b).select("doc_id", "lang")
-            .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong)
-      graft.core.ManifestTable.dropPartitions(s, root, Seq("b0", "b1"))
-      root
-    })
-
-  private val mergeTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u14Table = artifact("graft_u14_ttl") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+    for (b <- 0 until 4)
+      graft.core.ManifestTable.commit(s, root,
+        docs.filter(col("doc_id") % 4 === b).select("doc_id", "lang")
+          .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong)
+    graft.core.ManifestTable.dropPartitions(s, root, Seq("b0", "b1"))
+  }
 
   /** u15's artifact: a lineage-partitioned catalog table upserted through
     * [[graft.core.ManifestTable.merge]] — matched rows (doc_id % 7 = 0)
@@ -802,29 +670,24 @@ object SparkEntry {
     * partitions, unmatched update rows (doc_id % 13 = 0, shifted ids)
     * INSERT. The gated read is the post-merge snapshot.
     */
-  def u15TableDir(s: SparkSession, dir: String): String =
-    mergeTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u15_merge") + "/t"
-      val docs = t(s, dir, "documents")
-        .select("doc_id", "lang", "n_chars")
-      for (b <- 0 until 4)
-        graft.core.ManifestTable.commit(s, root,
-          docs.filter(col("doc_id") % 4 === b)
-            .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong)
-      val matched = docs.filter(col("doc_id") % 7 === 0)
-        .withColumn("lang", lit("upd"))
-        .withColumn("n_chars", col("n_chars") + lit(1000000L))
-        .withColumn("part", concat(lit("m"), col("doc_id") % 2))
-      val inserts = docs.filter(col("doc_id") % 13 === 0)
-        .withColumn("doc_id", col("doc_id") + lit(10000000L))
-        .withColumn("part", concat(lit("b"), col("doc_id") % 4))
-      graft.core.ManifestTable.merge(s, root,
-        matched.unionByName(inserts), "doc_id", batchId = 4L)
-      root
-    })
-
-  private val nativeSinkTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u15Table = artifact("graft_u15_merge") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select("doc_id", "lang", "n_chars")
+    for (b <- 0 until 4)
+      graft.core.ManifestTable.commit(s, root,
+        docs.filter(col("doc_id") % 4 === b)
+          .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong)
+    val matched = docs.filter(col("doc_id") % 7 === 0)
+      .withColumn("lang", lit("upd"))
+      .withColumn("n_chars", col("n_chars") + lit(1000000L))
+      .withColumn("part", concat(lit("m"), col("doc_id") % 2))
+    val inserts = docs.filter(col("doc_id") % 13 === 0)
+      .withColumn("doc_id", col("doc_id") + lit(10000000L))
+      .withColumn("part", concat(lit("b"), col("doc_id") % 4))
+    graft.core.ManifestTable.merge(s, root,
+      matched.unionByName(inserts), "doc_id", batchId = 4L)
+  }
 
   /** st24's artifact: the events stream ingested through the format's
     * NATIVE STREAMING SINK ([[graft.streaming.EventsStream
@@ -834,15 +697,10 @@ object SparkEntry {
     * gated read is the drained snapshot — it must equal the batch
     * catalog exactly (a dropped or double-applied epoch corrupts it).
     */
-  def st24TableDir(s: SparkSession, dir: String): String =
-    nativeSinkTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_st24_ns") + "/t"
-      graft.streaming.EventsStream.nativeSinkIngestReplay(s, dir, root)
-      root
-    })
-
-  private val sqlUpdateTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st24Table = artifact("graft_st24_ns") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    graft.streaming.EventsStream.nativeSinkIngestReplay(s, dir, root)
+  }
 
   /** u30's artifact: an in-place SQL UPDATE (round 17 — the third
     * row-level verb): the documents catalog seeded in four lineage
@@ -853,27 +711,22 @@ object SparkEntry {
     * carried byte-identically, one atomic file swap. The gated read is
     * the post-update snapshot.
     */
-  def u30TableDir(s: SparkSession, dir: String): String =
-    sqlUpdateTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u30_sqlupd") + "/t"
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
-      for (b <- 0 until 4)
-        graft.core.ManifestTable.commit(s, root,
-          docs.filter(col("doc_id") % 4 === b)
-            .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
-          statsCol = Some("doc_id"))
-      s.sql("DROP TABLE IF EXISTS graft_u30_stage")
-      s.sql("CREATE TABLE graft_u30_stage (doc_id BIGINT, lang STRING, " +
-        "n_chars BIGINT, part STRING) " +
-        s"USING `graft-manifest` OPTIONS (path '$root')")
-      try s.sql(
-        "UPDATE graft_u30_stage SET lang = 'redacted' WHERE doc_id % 10 = 7")
-      finally s.sql("DROP TABLE IF EXISTS graft_u30_stage")
-      root
-    })
-
-  private val multiPartTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u30Table = artifact("graft_u30_sqlupd") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
+    for (b <- 0 until 4)
+      graft.core.ManifestTable.commit(s, root,
+        docs.filter(col("doc_id") % 4 === b)
+          .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
+        statsCol = Some("doc_id"))
+    s.sql("DROP TABLE IF EXISTS graft_u30_stage")
+    s.sql("CREATE TABLE graft_u30_stage (doc_id BIGINT, lang STRING, " +
+      "n_chars BIGINT, part STRING) " +
+      s"USING `graft-manifest` OPTIONS (path '$root')")
+    try s.sql(
+      "UPDATE graft_u30_stage SET lang = 'redacted' WHERE doc_id % 10 = 7")
+    finally s.sql("DROP TABLE IF EXISTS graft_u30_stage")
+  }
 
   /** u28's artifact: a MULTI-COLUMN-partitioned manifest table (round
     * 17 — `PARTITIONED BY (lang, source)` nests directories
@@ -882,26 +735,21 @@ object SparkEntry {
     * pruning sits on the gated path (the file-count pin lives in
     * GraftRowLevelOpsSpec); zone maps on doc_id ride the layout.
     */
-  def u28TableDir(s: SparkSession, dir: String): String =
-    multiPartTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u28_mp") + "/t"
-      t(s, dir, "documents").select("doc_id", "n_chars", "lang", "source")
-        .createOrReplaceTempView("graft_u28_src")
+  private val u28Table = artifact("graft_u28_mp") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    t(s, dir, "documents").select("doc_id", "n_chars", "lang", "source")
+      .createOrReplaceTempView("graft_u28_src")
+    s.sql("DROP TABLE IF EXISTS graft_u28_stage")
+    s.sql("CREATE TABLE graft_u28_stage (doc_id BIGINT, n_chars BIGINT, " +
+      "lang STRING, source STRING) USING `graft-manifest` " +
+      s"OPTIONS (path '$root', statsColumns 'doc_id') " +
+      "PARTITIONED BY (lang, source)")
+    try s.sql("INSERT INTO graft_u28_stage SELECT * FROM graft_u28_src")
+    finally {
       s.sql("DROP TABLE IF EXISTS graft_u28_stage")
-      s.sql("CREATE TABLE graft_u28_stage (doc_id BIGINT, n_chars BIGINT, " +
-        "lang STRING, source STRING) USING `graft-manifest` " +
-        s"OPTIONS (path '$root', statsColumns 'doc_id') " +
-        "PARTITIONED BY (lang, source)")
-      try s.sql("INSERT INTO graft_u28_stage SELECT * FROM graft_u28_src")
-      finally {
-        s.sql("DROP TABLE IF EXISTS graft_u28_stage")
-        s.catalog.dropTempView("graft_u28_src")
-      }
-      root
-    })
-
-  private val catalogTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+      s.catalog.dropTempView("graft_u28_src")
+    }
+  }
 
   /** u29's artifact: the u21 lifecycle through the PERSISTENT V2
     * TableCatalog (round 17 — [[graft.sources.GraftCatalog]]): the
@@ -912,37 +760,23 @@ object SparkEntry {
     * Returns the catalog name: the entry reads through the CATALOG
     * name (values replay from the raw catalog).
     */
-  def u29Catalog(s: SparkSession, dir: String): String = {
-    // deterministic per input dir: the CatalogManager caches the plugin
-    // instance by name, so the name must never be reused across roots
-    val cat = s"graft_u29_${Integer.toHexString(dir.hashCode)}"
-    catalogTableMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u29_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corpus")
-      s.sql(s"CREATE TABLE $cat.corpus.docs (doc_id BIGINT, lang STRING, " +
-        "n_chars BIGINT, part STRING) USING `graft-manifest` " +
-        "OPTIONS (statsColumns 'doc_id') PARTITIONED BY (part)")
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          concat(lit("b"), pmod(col("doc_id"), lit(4))).as("part"))
-        .createOrReplaceTempView("graft_u29_src")
-      try {
-        for (b <- 0 until 4)
-          s.sql(s"INSERT INTO $cat.corpus.docs " +
-            s"SELECT * FROM graft_u29_src WHERE doc_id % 4 = $b")
-        s.sql(s"CALL $cat.system.optimize(`table` => 'corpus.docs')")
-          .collect()
-      } finally s.catalog.dropTempView("graft_u29_src")
-      wh
-    })
-    cat
+  private val u29Catalog = catalogArtifact("graft_u29_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corpus")
+    s.sql(s"CREATE TABLE $cat.corpus.docs (doc_id BIGINT, lang STRING, " +
+      "n_chars BIGINT, part STRING) USING `graft-manifest` " +
+      "OPTIONS (statsColumns 'doc_id') PARTITIONED BY (part)")
+    t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("n_chars"),
+        concat(lit("b"), pmod(col("doc_id"), lit(4))).as("part"))
+      .createOrReplaceTempView("graft_u29_src")
+    try {
+      for (b <- 0 until 4)
+        s.sql(s"INSERT INTO $cat.corpus.docs " +
+          s"SELECT * FROM graft_u29_src WHERE doc_id % 4 = $b")
+      s.sql(s"CALL $cat.system.optimize(`table` => 'corpus.docs')")
+        .collect()
+    } finally s.catalog.dropTempView("graft_u29_src")
   }
-
-  private val multiLevelSqlMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** u34's artifact (round 18): the MULTI-LEVEL maintenance lifecycle
     * driven purely from SQL — a two-level `(lang, source)` table created
@@ -954,40 +788,26 @@ object SparkEntry {
     * per-leaf fold rewrote values exactly and the metadata TTL dropped
     * exactly the first-level subtree.
     */
-  def u34Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u34_${Integer.toHexString(dir.hashCode)}"
-    multiLevelSqlMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u34_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ml")
-      s.sql(s"CREATE TABLE $cat.ml.docs (doc_id BIGINT, n_chars BIGINT, " +
-        "lang STRING, source STRING) USING `graft-manifest` " +
-        "OPTIONS (statsColumns 'doc_id') PARTITIONED BY (lang, source)")
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"), col("lang"), col("source"))
-        .createOrReplaceTempView("graft_u34_src")
-      try {
-        for (b <- 0 until 2)
-          s.sql(s"INSERT INTO $cat.ml.docs " +
-            s"SELECT * FROM graft_u34_src WHERE doc_id % 2 = $b")
-        // nested compaction behind CALL: every leaf folds 2 -> 1
-        s.sql(s"CALL $cat.system.optimize(`table` => 'ml.docs')").collect()
-        // first-level TTL behind CALL: the whole lang=en subtree drops
-        // in one metadata publish
-        s.sql(s"CALL $cat.system.drop_partitions(`table` => 'ml.docs', " +
-          "values => 'en')").collect()
-      } finally s.catalog.dropTempView("graft_u34_src")
-      wh
-    })
-    cat
+  private val u34Catalog = catalogArtifact("graft_u34_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ml")
+    s.sql(s"CREATE TABLE $cat.ml.docs (doc_id BIGINT, n_chars BIGINT, " +
+      "lang STRING, source STRING) USING `graft-manifest` " +
+      "OPTIONS (statsColumns 'doc_id') PARTITIONED BY (lang, source)")
+    t(s, dir, "documents")
+      .select(col("doc_id"), col("n_chars"), col("lang"), col("source"))
+      .createOrReplaceTempView("graft_u34_src")
+    try {
+      for (b <- 0 until 2)
+        s.sql(s"INSERT INTO $cat.ml.docs " +
+          s"SELECT * FROM graft_u34_src WHERE doc_id % 2 = $b")
+      // nested compaction behind CALL: every leaf folds 2 -> 1
+      s.sql(s"CALL $cat.system.optimize(`table` => 'ml.docs')").collect()
+      // first-level TTL behind CALL: the whole lang=en subtree drops
+      // in one metadata publish
+      s.sql(s"CALL $cat.system.drop_partitions(`table` => 'ml.docs', " +
+        "values => 'en')").collect()
+    } finally s.catalog.dropTempView("graft_u34_src")
   }
-
-  private val hiddenDaysMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val hiddenBucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** u37's artifact (round 19 — hidden-partition transforms, SURVEY §9
     * #1): the events table as `PARTITIONED BY (days(ts))` — the Iceberg
@@ -1000,27 +820,18 @@ object SparkEntry {
     * catalog's own V2 function (the FunctionCatalog move), so each day
     * leaf is written by one task.
     */
-  def u37Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u37_${Integer.toHexString(dir.hashCode)}"
-    hiddenDaysMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u37_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
-      s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
-        "user_id BIGINT, event_type STRING, value DOUBLE, ts TIMESTAMP) " +
-        "USING `graft-manifest` OPTIONS (statsColumns 'event_id') " +
-        "PARTITIONED BY (days(ts))")
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("ts"))
-        .createOrReplaceTempView("graft_u37_src")
-      try s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u37_src")
-      finally s.catalog.dropTempView("graft_u37_src")
-      wh
-    })
-    cat
+  private val u37Catalog = catalogArtifact("graft_u37_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
+    s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
+      "user_id BIGINT, event_type STRING, value DOUBLE, ts TIMESTAMP) " +
+      "USING `graft-manifest` OPTIONS (statsColumns 'event_id') " +
+      "PARTITIONED BY (days(ts))")
+    t(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"), col("ts"))
+      .createOrReplaceTempView("graft_u37_src")
+    try s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u37_src")
+    finally s.catalog.dropTempView("graft_u37_src")
   }
 
   /** u38's artifact: the events table as `PARTITIONED BY
@@ -1028,25 +839,16 @@ object SparkEntry {
     * hashed buckets' files (equality/IN translate; ranges fall back to
     * zone maps, since a hash destroys order).
     */
-  def u38Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u38_${Integer.toHexString(dir.hashCode)}"
-    hiddenBucketMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u38_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
-      s.sql(s"CREATE TABLE $cat.ev.by_user (event_id BIGINT, " +
-        "user_id BIGINT, event_type STRING) USING `graft-manifest` " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .createOrReplaceTempView("graft_u38_src")
-      try s.sql(s"INSERT INTO $cat.ev.by_user SELECT * FROM graft_u38_src")
-      finally s.catalog.dropTempView("graft_u38_src")
-      wh
-    })
-    cat
+  private val u38Catalog = catalogArtifact("graft_u38_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
+    s.sql(s"CREATE TABLE $cat.ev.by_user (event_id BIGINT, " +
+      "user_id BIGINT, event_type STRING) USING `graft-manifest` " +
+      "PARTITIONED BY (bucket(8, user_id))")
+    t(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"))
+      .createOrReplaceTempView("graft_u38_src")
+    try s.sql(s"INSERT INTO $cat.ev.by_user SELECT * FROM graft_u38_src")
+    finally s.catalog.dropTempView("graft_u38_src")
   }
 
   /** The plan-level pruning pin both hidden-partition keys REQUIRE
@@ -1121,9 +923,6 @@ object SparkEntry {
     }
   }
 
-  private val replaceWhereMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** u39's artifact (round 19 — VERDICT r18 missing #3): the routine
     * backfill as ONE atomic commit. A lang-partitioned documents table
     * gets (a) a static `replaceWhere "lang = 'de'"` overwrite replacing
@@ -1134,29 +933,24 @@ object SparkEntry {
     * Versions: seed, replace, replace — time travel to any of the three
     * is exact (spec-pinned in ReplaceWhereSpec; the gate checks values).
     */
-  def u39TableDir(s: SparkSession, dir: String): String =
-    replaceWhereMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u39_rw") + "/t"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
-      graft.core.ManifestTable.commit(s, root, docs, "lang", batchId = 0L)
-      // static replaceWhere: recompute the de partition
-      docs.filter(col("lang") === "de")
-        .withColumn("n_chars", col("n_chars") + 1000L)
-        .write.format("graft-manifest").mode("overwrite")
-        .option("replaceWhere", "lang = 'de'").option("batchId", "1")
-        .save(root)
-      // dynamic overwrite: the frame's own leaves (fr) are the region
-      docs.filter(col("lang") === "fr")
-        .withColumn("n_chars", col("n_chars") + 5L)
-        .write.format("graft-manifest").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").option("batchId", "2")
-        .save(root)
-      root
-    })
-
-  private val catalogTxnMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u39Table = artifact("graft_u39_rw") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
+    graft.core.ManifestTable.commit(s, root, docs, "lang", batchId = 0L)
+    // static replaceWhere: recompute the de partition
+    docs.filter(col("lang") === "de")
+      .withColumn("n_chars", col("n_chars") + 1000L)
+      .write.format("graft-manifest").mode("overwrite")
+      .option("replaceWhere", "lang = 'de'").option("batchId", "1")
+      .save(root)
+    // dynamic overwrite: the frame's own leaves (fr) are the region
+    docs.filter(col("lang") === "fr")
+      .withColumn("n_chars", col("n_chars") + 5L)
+      .write.format("graft-manifest").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").option("batchId", "2")
+      .save(root)
+  }
 
   /** u44's artifact (round 20 — SURVEY §9 forward #1: CROSS-TABLE
     * TRANSACTIONS): a corpus table and its per-lang index table
@@ -1179,87 +973,69 @@ object SparkEntry {
     * index artifacts and their corpus move in one commit, not under
     * per-artifact fences.
     */
-  def u44CatalogDir(s: SparkSession, dir: String): String =
-    catalogTxnMemo.computeIfAbsent((s, dir), _ => {
-      val cat = graft.core.TempDirs.create("graft_u44_txn")
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      import graft.core.{ManifestTable, Transactions}
-      def indexOf(corpusRoot: String) =
-        ManifestTable.read(s, corpusRoot).get.groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("n_chars").as("sum_chars"))
-      Transactions.transact(s, cat) { txn =>
-        val corpusRoot = txn.stage("corpus") { root =>
-          ManifestTable.commit(s, root, docs, "lang", batchId = 0L); root
-        }
-        txn.stage("index") { root =>
-          ManifestTable.commit(s, root, indexOf(corpusRoot), "lang",
-            batchId = 0L)
-        }
+  private val u44Catalog = artifact("graft_u44_txn") { (s, dir, cat) =>
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    import graft.core.{ManifestTable, Transactions}
+    def indexOf(corpusRoot: String) =
+      ManifestTable.read(s, corpusRoot).get.groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          sum("n_chars").as("sum_chars"))
+    Transactions.transact(s, cat) { txn =>
+      val corpusRoot = txn.stage("corpus") { root =>
+        ManifestTable.commit(s, root, docs, "lang", batchId = 0L); root
       }
-      Transactions.transact(s, cat) { txn =>
-        val corpusRoot = txn.stage("corpus") { root =>
-          ManifestTable.merge(s, root,
-            docs.filter(col("doc_id") % 97 === 0)
-              .withColumn("n_chars", col("n_chars") + 1000L),
-            "doc_id", batchId = 1L)
-          root
-        }
-        // the index leg reads the corpus chain HEAD — the version this
-        // same transaction just staged (read-your-own-staged-writes)
-        txn.stage("index") { root =>
-          ManifestTable.commit(s, root, indexOf(corpusRoot), "lang",
-            batchId = 1L)
-        }
+      txn.stage("index") { root =>
+        ManifestTable.commit(s, root, indexOf(corpusRoot), "lang",
+          batchId = 0L)
       }
-      // the CRASHED transaction: a takedown stages on the corpus chain,
-      // the pointer never publishes — its effect must stay invisible
-      try Transactions.transact(s, cat,
-        beforePointerPublish =
-          () => throw new IllegalStateException("injected crash")) { txn =>
-        txn.stage("corpus") { root =>
-          ManifestTable.deleteRows(s, root,
-            docs.select("doc_id").orderBy("doc_id").limit(7), "doc_id")
-        }
-      } catch { case e: IllegalStateException
-        if e.getMessage == "injected crash" => () }
-      cat
-    })
-
-  private val hiddenMonthsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    }
+    Transactions.transact(s, cat) { txn =>
+      val corpusRoot = txn.stage("corpus") { root =>
+        ManifestTable.merge(s, root,
+          docs.filter(col("doc_id") % 97 === 0)
+            .withColumn("n_chars", col("n_chars") + 1000L),
+          "doc_id", batchId = 1L)
+        root
+      }
+      // the index leg reads the corpus chain HEAD — the version this
+      // same transaction just staged (read-your-own-staged-writes)
+      txn.stage("index") { root =>
+        ManifestTable.commit(s, root, indexOf(corpusRoot), "lang",
+          batchId = 1L)
+      }
+    }
+    // the CRASHED transaction: a takedown stages on the corpus chain,
+    // the pointer never publishes — its effect must stay invisible
+    try Transactions.transact(s, cat,
+      beforePointerPublish =
+        () => throw new IllegalStateException("injected crash")) { txn =>
+      txn.stage("corpus") { root =>
+        ManifestTable.deleteRows(s, root,
+          docs.select("doc_id").orderBy("doc_id").limit(7), "doc_id")
+      }
+    } catch { case e: IllegalStateException
+      if e.getMessage == "injected crash" => () }
+  }
 
   /** u42's artifact (round 19 — the calendar-unit family beyond days):
     * orders as `PARTITIONED BY (months(o_orderdate))` — ~80 month leaves
     * over the 1995–2001 span; a half-year range opens 6 of them.
     */
-  def u42Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u42_${Integer.toHexString(dir.hashCode)}"
-    hiddenMonthsMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u42_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.tpch")
-      s.sql(s"CREATE TABLE $cat.tpch.orders (o_orderkey BIGINT, " +
-        "o_custkey BIGINT, o_orderpriority STRING, " +
-        "o_orderdate TIMESTAMP) USING `graft-manifest` " +
-        "OPTIONS (statsColumns 'o_orderkey') " +
-        "PARTITIONED BY (months(o_orderdate))")
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderpriority"), col("o_orderdate"))
-        .createOrReplaceTempView("graft_u42_src")
-      try s.sql(s"INSERT INTO $cat.tpch.orders SELECT * FROM graft_u42_src")
-      finally s.catalog.dropTempView("graft_u42_src")
-      wh
-    })
-    cat
+  private val u42Catalog = catalogArtifact("graft_u42_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.tpch")
+    s.sql(s"CREATE TABLE $cat.tpch.orders (o_orderkey BIGINT, " +
+      "o_custkey BIGINT, o_orderpriority STRING, " +
+      "o_orderdate TIMESTAMP) USING `graft-manifest` " +
+      "OPTIONS (statsColumns 'o_orderkey') " +
+      "PARTITIONED BY (months(o_orderdate))")
+    t(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"),
+        col("o_orderpriority"), col("o_orderdate"))
+      .createOrReplaceTempView("graft_u42_src")
+    try s.sql(s"INSERT INTO $cat.tpch.orders SELECT * FROM graft_u42_src")
+    finally s.catalog.dropTempView("graft_u42_src")
   }
-
-  private val spjJoinMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** u43's artifact (round 19 — SPJ over hidden layouts, oracle-gated):
     * events and a per-user rollup BOTH as `bucket(8, user_id)` catalog
@@ -1267,35 +1043,23 @@ object SparkEntry {
     * query entry REQUIRES the shuffle-free pin under v2 bucketing). At
     * 100 TB the exchange this removes IS a fact-fact join's cost.
     */
-  def u43Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u43_${Integer.toHexString(dir.hashCode)}"
-    spjJoinMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u43_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
-      s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
-        "user_id BIGINT, event_type STRING) USING `graft-manifest` " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      s.sql(s"CREATE TABLE $cat.ev.users (user_id BIGINT, " +
-        "n_events BIGINT) USING `graft-manifest` " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .createOrReplaceTempView("graft_u43_src")
-      try {
-        s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u43_src")
-        s.sql(s"INSERT INTO $cat.ev.users SELECT user_id, count(*) " +
-          "FROM graft_u43_src GROUP BY user_id")
-      } finally s.catalog.dropTempView("graft_u43_src")
-      wh
-    })
-    cat
+  private val u43Catalog = catalogArtifact("graft_u43_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
+    s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
+      "user_id BIGINT, event_type STRING) USING `graft-manifest` " +
+      "PARTITIONED BY (bucket(8, user_id))")
+    s.sql(s"CREATE TABLE $cat.ev.users (user_id BIGINT, " +
+      "n_events BIGINT) USING `graft-manifest` " +
+      "PARTITIONED BY (bucket(8, user_id))")
+    t(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"))
+      .createOrReplaceTempView("graft_u43_src")
+    try {
+      s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u43_src")
+      s.sql(s"INSERT INTO $cat.ev.users SELECT user_id, count(*) " +
+        "FROM graft_u43_src GROUP BY user_id")
+    } finally s.catalog.dropTempView("graft_u43_src")
   }
-
-  private val spjDaysMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** u45's artifact (round 20 — VERDICT r19 next #7: the CALENDAR leg of
     * storage-partitioned joins, end-to-end): two `days(ts)` tables —
@@ -1304,36 +1068,24 @@ object SparkEntry {
     * `typedKeyOf` keys calendar levels by their unit ordinal; only the
     * bucket leg was gated until now (u43).
     */
-  def u45Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u45_${Integer.toHexString(dir.hashCode)}"
-    spjDaysMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u45_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
-      s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
-        "user_id BIGINT, event_type STRING, ts TIMESTAMP) " +
-        "USING `graft-manifest` PARTITIONED BY (days(ts))")
-      s.sql(s"CREATE TABLE $cat.ev.amounts (event_id BIGINT, " +
-        "amt BIGINT, ts TIMESTAMP) USING `graft-manifest` " +
-        "PARTITIONED BY (days(ts))")
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"))
-        .createOrReplaceTempView("graft_u45_src")
-      try {
-        s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u45_src")
-        s.sql(s"INSERT INTO $cat.ev.amounts SELECT event_id, " +
-          "CAST(event_id % 1000 AS BIGINT), ts FROM graft_u45_src")
-      } finally s.catalog.dropTempView("graft_u45_src")
-      wh
-    })
-    cat
+  private val u45Catalog = catalogArtifact("graft_u45_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
+    s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
+      "user_id BIGINT, event_type STRING, ts TIMESTAMP) " +
+      "USING `graft-manifest` PARTITIONED BY (days(ts))")
+    s.sql(s"CREATE TABLE $cat.ev.amounts (event_id BIGINT, " +
+      "amt BIGINT, ts TIMESTAMP) USING `graft-manifest` " +
+      "PARTITIONED BY (days(ts))")
+    t(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("ts"))
+      .createOrReplaceTempView("graft_u45_src")
+    try {
+      s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u45_src")
+      s.sql(s"INSERT INTO $cat.ev.amounts SELECT event_id, " +
+        "CAST(event_id % 1000 AS BIGINT), ts FROM graft_u45_src")
+    } finally s.catalog.dropTempView("graft_u45_src")
   }
-
-  private val renameSourceMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** u46's artifact (round 20 — VERDICT r19 next #3: partition-source
     * renames): a `days(ts)` events table filled in TWO generations
@@ -1345,36 +1097,24 @@ object SparkEntry {
     * names), so pre-rename leaves keep pruning and the writer keeps
     * deriving the same level — zero data movement.
     */
-  def u46Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u46_${Integer.toHexString(dir.hashCode)}"
-    renameSourceMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u46_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
-      s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
-        "user_id BIGINT, event_type STRING, ts TIMESTAMP) " +
-        "USING `graft-manifest` PARTITIONED BY (days(ts))")
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"))
-        .createOrReplaceTempView("graft_u46_src")
-      try {
-        s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u46_src " +
-          "WHERE event_id % 2 = 0")
-        s.sql(s"ALTER TABLE $cat.ev.clicks RENAME COLUMN ts TO event_ts")
-        s.sql(s"INSERT INTO $cat.ev.clicks SELECT event_id, user_id, " +
-          "event_type, ts AS event_ts FROM graft_u46_src " +
-          "WHERE event_id % 2 = 1")
-      } finally s.catalog.dropTempView("graft_u46_src")
-      wh
-    })
-    cat
+  private val u46Catalog = catalogArtifact("graft_u46_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ev")
+    s.sql(s"CREATE TABLE $cat.ev.clicks (event_id BIGINT, " +
+      "user_id BIGINT, event_type STRING, ts TIMESTAMP) " +
+      "USING `graft-manifest` PARTITIONED BY (days(ts))")
+    t(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("ts"))
+      .createOrReplaceTempView("graft_u46_src")
+    try {
+      s.sql(s"INSERT INTO $cat.ev.clicks SELECT * FROM graft_u46_src " +
+        "WHERE event_id % 2 = 0")
+      s.sql(s"ALTER TABLE $cat.ev.clicks RENAME COLUMN ts TO event_ts")
+      s.sql(s"INSERT INTO $cat.ev.clicks SELECT event_id, user_id, " +
+        "event_type, ts AS event_ts FROM graft_u46_src " +
+        "WHERE event_id % 2 = 1")
+    } finally s.catalog.dropTempView("graft_u46_src")
   }
-
-  private val rowImagesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** u40's artifact (round 19 — VERDICT r18 missing #4 / SURVEY §9 #3):
     * row-level CDF images. Seed the documents catalog, then one MERGE
@@ -1386,23 +1126,18 @@ object SparkEntry {
     * update_postimage pairs, carried rows the file rewrite re-emitted
     * drop (pre == post), pure inserts stay inserts.
     */
-  def u40TableDir(s: SparkSession, dir: String): String =
-    rowImagesMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u40_cdf") + "/t"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"), col("lang"))
-      graft.core.ManifestTable.commit(s, root, docs, "lang", batchId = 0L)
-      val upd = docs.filter(col("doc_id") % 7 === 3)
-        .withColumn("n_chars", col("n_chars") + 7L)
-      val ins = docs.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 100000L)
-      graft.core.ManifestTable.merge(
-        s, root, upd.unionByName(ins), "doc_id", batchId = 1L)
-      root
-    })
-
-  private val renameLifecycleMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u40Table = artifact("graft_u40_cdf") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("n_chars"), col("lang"))
+    graft.core.ManifestTable.commit(s, root, docs, "lang", batchId = 0L)
+    val upd = docs.filter(col("doc_id") % 7 === 3)
+      .withColumn("n_chars", col("n_chars") + 7L)
+    val ins = docs.filter(col("doc_id") % 5 === 0)
+      .withColumn("doc_id", col("doc_id") + 100000L)
+    graft.core.ManifestTable.merge(
+      s, root, upd.unionByName(ins), "doc_id", batchId = 1L)
+  }
 
   /** u41's artifact (round 19 — VERDICT r18 missing #2, column mapping):
     * the rename lifecycle. Half the documents land under the original
@@ -1413,37 +1148,25 @@ object SparkEntry {
     * name — the gated read spans both file generations under one logical
     * schema.
     */
-  def u41Catalog(s: SparkSession, dir: String): String = {
-    val cat = s"graft_u41_${Integer.toHexString(dir.hashCode)}"
-    renameLifecycleMemo.computeIfAbsent((s, dir), _ => {
-      val wh = graft.core.TempDirs.create("graft_u41_cat")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.m")
-      s.sql(s"CREATE TABLE $cat.m.docs (doc_id BIGINT, n_chars BIGINT, " +
-        "lang STRING) USING `graft-manifest` " +
-        "OPTIONS (statsColumns 'doc_id') PARTITIONED BY (lang)")
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"), col("lang"))
-        .createOrReplaceTempView("graft_u41_src")
-      try {
-        s.sql(s"INSERT INTO $cat.m.docs " +
-          "SELECT * FROM graft_u41_src WHERE doc_id % 2 = 0")
-        s.sql(s"ALTER TABLE $cat.m.docs RENAME COLUMN n_chars TO char_count")
-        s.sql(s"INSERT INTO $cat.m.docs " +
-          "SELECT doc_id, n_chars AS char_count, lang FROM graft_u41_src " +
-          "WHERE doc_id % 2 = 1")
-        s.sql(s"UPDATE $cat.m.docs SET char_count = char_count + 3 " +
-          "WHERE doc_id % 11 = 5")
-      } finally s.catalog.dropTempView("graft_u41_src")
-      wh
-    })
-    cat
+  private val u41Catalog = catalogArtifact("graft_u41_cat") { (s, dir, cat) =>
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.m")
+    s.sql(s"CREATE TABLE $cat.m.docs (doc_id BIGINT, n_chars BIGINT, " +
+      "lang STRING) USING `graft-manifest` " +
+      "OPTIONS (statsColumns 'doc_id') PARTITIONED BY (lang)")
+    t(s, dir, "documents")
+      .select(col("doc_id"), col("n_chars"), col("lang"))
+      .createOrReplaceTempView("graft_u41_src")
+    try {
+      s.sql(s"INSERT INTO $cat.m.docs " +
+        "SELECT * FROM graft_u41_src WHERE doc_id % 2 = 0")
+      s.sql(s"ALTER TABLE $cat.m.docs RENAME COLUMN n_chars TO char_count")
+      s.sql(s"INSERT INTO $cat.m.docs " +
+        "SELECT doc_id, n_chars AS char_count, lang FROM graft_u41_src " +
+        "WHERE doc_id % 2 = 1")
+      s.sql(s"UPDATE $cat.m.docs SET char_count = char_count + 3 " +
+        "WHERE doc_id % 11 = 5")
+    } finally s.catalog.dropTempView("graft_u41_src")
   }
-
-  private val sqlDeleteTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** u26's artifact: the u9 takedown lifecycle run PURELY THROUGH SQL
     * (round 17 — the format's row-level verbs): the documents catalog is
@@ -1463,33 +1186,28 @@ object SparkEntry {
     * The gated read is the post-delete snapshot: one key proves both
     * planning roads end-to-end.
     */
-  def u26TableDir(s: SparkSession, dir: String): String =
-    sqlDeleteTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u26_sqldel") + "/t"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
-      graft.core.ManifestTable.commit(s, root, docs, "bucket", 0L,
-        statsCol = Some("doc_id"))
-      val keys = t(s, dir, "documents").filter(col("doc_id") % 97 === 3)
-        .select("doc_id").collect().map(_.getLong(0))
-      s.sql("DROP TABLE IF EXISTS graft_u26_stage")
-      s.sql("CREATE TABLE graft_u26_stage (doc_id BIGINT, lang STRING, " +
-        "source STRING, n_chars BIGINT, bucket INT) " +
-        s"USING `graft-manifest` OPTIONS (path '$root')")
-      try {
-        // `IN ()` is a parse error — an empty takedown list (possible at
-        // tiny scale factors) is simply no delete
-        if (keys.nonEmpty)
-          s.sql("DELETE FROM graft_u26_stage WHERE doc_id IN (" +
-            keys.mkString(", ") + ")")
-        s.sql("DELETE FROM graft_u26_stage WHERE doc_id % 89 = 7")
-      } finally s.sql("DROP TABLE IF EXISTS graft_u26_stage")
-      root
-    })
-
-  private val sqlMergeTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u26Table = artifact("graft_u26_sqldel") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
+    graft.core.ManifestTable.commit(s, root, docs, "bucket", 0L,
+      statsCol = Some("doc_id"))
+    val keys = t(s, dir, "documents").filter(col("doc_id") % 97 === 3)
+      .select("doc_id").collect().map(_.getLong(0))
+    s.sql("DROP TABLE IF EXISTS graft_u26_stage")
+    s.sql("CREATE TABLE graft_u26_stage (doc_id BIGINT, lang STRING, " +
+      "source STRING, n_chars BIGINT, bucket INT) " +
+      s"USING `graft-manifest` OPTIONS (path '$root')")
+    try {
+      // `IN ()` is a parse error — an empty takedown list (possible at
+      // tiny scale factors) is simply no delete
+      if (keys.nonEmpty)
+        s.sql("DELETE FROM graft_u26_stage WHERE doc_id IN (" +
+          keys.mkString(", ") + ")")
+      s.sql("DELETE FROM graft_u26_stage WHERE doc_id % 89 = 7")
+    } finally s.sql("DROP TABLE IF EXISTS graft_u26_stage")
+  }
 
   /** u27's artifact: the u15 MERGE upsert lifecycle run PURELY THROUGH
     * SQL (round 17): same seeding as u15 (4 lineage batches, zone maps
@@ -1500,44 +1218,39 @@ object SparkEntry {
     * is the post-merge snapshot; the oracle is u15's (the two paths must
     * agree value-for-value).
     */
-  def u27TableDir(s: SparkSession, dir: String): String =
-    sqlMergeTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u27_sqlmerge") + "/t"
-      val docs = t(s, dir, "documents")
-        .select("doc_id", "lang", "n_chars")
-      for (b <- 0 until 4)
-        graft.core.ManifestTable.commit(s, root,
-          docs.filter(col("doc_id") % 4 === b)
-            .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
-          statsCol = Some("doc_id"))
-      val matched = docs.filter(col("doc_id") % 7 === 0)
-        .withColumn("lang", lit("upd"))
-        .withColumn("n_chars", col("n_chars") + lit(1000000L))
-        .withColumn("part", concat(lit("m"), col("doc_id") % 2))
-      val inserts = docs.filter(col("doc_id") % 13 === 0)
-        .withColumn("doc_id", col("doc_id") + lit(10000000L))
-        .withColumn("part", concat(lit("b"), col("doc_id") % 4))
-      matched.unionByName(inserts)
-        .createOrReplaceTempView("graft_u27_src")
+  private val u27Table = artifact("graft_u27_sqlmerge") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select("doc_id", "lang", "n_chars")
+    for (b <- 0 until 4)
+      graft.core.ManifestTable.commit(s, root,
+        docs.filter(col("doc_id") % 4 === b)
+          .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
+        statsCol = Some("doc_id"))
+    val matched = docs.filter(col("doc_id") % 7 === 0)
+      .withColumn("lang", lit("upd"))
+      .withColumn("n_chars", col("n_chars") + lit(1000000L))
+      .withColumn("part", concat(lit("m"), col("doc_id") % 2))
+    val inserts = docs.filter(col("doc_id") % 13 === 0)
+      .withColumn("doc_id", col("doc_id") + lit(10000000L))
+      .withColumn("part", concat(lit("b"), col("doc_id") % 4))
+    matched.unionByName(inserts)
+      .createOrReplaceTempView("graft_u27_src")
+    s.sql("DROP TABLE IF EXISTS graft_u27_stage")
+    s.sql("CREATE TABLE graft_u27_stage (doc_id BIGINT, lang STRING, " +
+      "n_chars BIGINT, part STRING) " +
+      s"USING `graft-manifest` OPTIONS (path '$root')")
+    try {
+      s.sql(
+        """MERGE INTO graft_u27_stage t USING graft_u27_src s
+          |ON t.doc_id = s.doc_id
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    } finally {
       s.sql("DROP TABLE IF EXISTS graft_u27_stage")
-      s.sql("CREATE TABLE graft_u27_stage (doc_id BIGINT, lang STRING, " +
-        "n_chars BIGINT, part STRING) " +
-        s"USING `graft-manifest` OPTIONS (path '$root')")
-      try {
-        s.sql(
-          """MERGE INTO graft_u27_stage t USING graft_u27_src s
-            |ON t.doc_id = s.doc_id
-            |WHEN MATCHED THEN UPDATE SET *
-            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      } finally {
-        s.sql("DROP TABLE IF EXISTS graft_u27_stage")
-        s.catalog.dropTempView("graft_u27_src")
-      }
-      root
-    })
-
-  private val bloomTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+      s.catalog.dropTempView("graft_u27_src")
+    }
+  }
 
   /** u16's artifact: a lineage-partitioned catalog table with BOTH skipping
     * tiers — zone maps on doc_id plus the per-file bloom sidecar — hit by
@@ -1546,23 +1259,18 @@ object SparkEntry {
     * prunes to the files actually holding a key). The gated read is the
     * post-takedown snapshot.
     */
-  def u16TableDir(s: SparkSession, dir: String): String =
-    bloomTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u16_bloom") + "/t"
-      val docs = t(s, dir, "documents").select("doc_id", "lang")
-      for (b <- 0 until 4)
-        graft.core.ManifestTable.commit(s, root,
-          docs.filter(col("doc_id") % 4 === b)
-            .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
-          statsCol = Some("doc_id"))
-      graft.core.ManifestTable.buildBloomIndex(s, root, "doc_id")
-      graft.core.ManifestTable.deleteRows(s, root,
-        docs.filter(col("doc_id") % 997 === 0).select("doc_id"), "doc_id")
-      root
-    })
-
-  private val dvTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u16Table = artifact("graft_u16_bloom") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents").select("doc_id", "lang")
+    for (b <- 0 until 4)
+      graft.core.ManifestTable.commit(s, root,
+        docs.filter(col("doc_id") % 4 === b)
+          .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
+        statsCol = Some("doc_id"))
+    graft.core.ManifestTable.buildBloomIndex(s, root, "doc_id")
+    graft.core.ManifestTable.deleteRows(s, root,
+      docs.filter(col("doc_id") % 997 === 0).select("doc_id"), "doc_id")
+  }
 
   /** u18's artifact: the MERGE-ON-READ takedown lifecycle — a zone-mapped,
     * bloom-indexed lineage table takes an O(list) deferred delete
@@ -1572,26 +1280,21 @@ object SparkEntry {
     * exercises both regimes at once: purged-physical for the first list,
     * masked-logical for the second.
     */
-  def u18TableDir(s: SparkSession, dir: String): String =
-    dvTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u18_dv") + "/t"
-      val docs = t(s, dir, "documents").select("doc_id", "lang")
-      for (b <- 0 until 4)
-        graft.core.ManifestTable.commit(s, root,
-          docs.filter(col("doc_id") % 4 === b)
-            .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
-          statsCol = Some("doc_id"))
-      graft.core.ManifestTable.buildBloomIndex(s, root, "doc_id")
-      graft.core.ManifestTable.deleteRowsDeferred(s, root,
-        docs.filter(col("doc_id") % 89 === 0).select("doc_id"), "doc_id")
-      graft.core.ManifestTable.optimize(s, root)
-      graft.core.ManifestTable.deleteRowsDeferred(s, root,
-        docs.filter(col("doc_id") % 113 === 0).select("doc_id"), "doc_id")
-      root
-    })
-
-  private val cdfConsumerMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u18Table = artifact("graft_u18_dv") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents").select("doc_id", "lang")
+    for (b <- 0 until 4)
+      graft.core.ManifestTable.commit(s, root,
+        docs.filter(col("doc_id") % 4 === b)
+          .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong,
+        statsCol = Some("doc_id"))
+    graft.core.ManifestTable.buildBloomIndex(s, root, "doc_id")
+    graft.core.ManifestTable.deleteRowsDeferred(s, root,
+      docs.filter(col("doc_id") % 89 === 0).select("doc_id"), "doc_id")
+    graft.core.ManifestTable.optimize(s, root)
+    graft.core.ManifestTable.deleteRowsDeferred(s, root,
+      docs.filter(col("doc_id") % 113 === 0).select("doc_id"), "doc_id")
+  }
 
   /** st21's artifact: a producer table ingested in four lineage batches
     * with a takedown between batches 1 and 2 and a schema-evolution
@@ -1603,33 +1306,27 @@ object SparkEntry {
     * (Takedown keys hit only already-ingested rows: `%97=3 ∧ %4∈{0,1}` —
     * later batches are `%4∈{2,3}`, so nothing deleted re-enters.)
     */
-  def st21StateDir(s: SparkSession, dir: String): String =
-    cdfConsumerMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_st21_cdf")
-      val (prod, state) = (root + "/t", root + "/state")
-      val docs = t(s, dir, "documents")
-      graft.core.ManifestTable.commit(s, prod,
-        docs.filter(col("doc_id") % 4 === 0).select("doc_id", "lang")
-          .withColumn("part", lit("b0")), "part", 0L)
-      graft.core.ManifestTable.commit(s, prod,
-        docs.filter(col("doc_id") % 4 === 1).select("doc_id", "lang")
-          .withColumn("part", lit("b1")), "part", 1L)
-      graft.core.ManifestTable.deleteRows(s, prod,
-        docs.filter(col("doc_id") % 97 === 3).select("doc_id"), "doc_id")
-      graft.core.ManifestTable.commit(s, prod,
-        docs.filter(col("doc_id") % 4 === 2)
-          .select("doc_id", "lang", "n_chars")
-          .withColumn("part", lit("b2")), "part", 2L)
-      graft.core.ManifestTable.commit(s, prod,
-        docs.filter(col("doc_id") % 4 === 3)
-          .select("doc_id", "lang", "n_chars")
-          .withColumn("part", lit("b3")), "part", 3L)
-      graft.streaming.ChangeFeed.catchUp(s, prod, state)
-      state
-    })
-
-  private val cdcReplicaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st21State = artifact("graft_st21_cdf") { (s, dir, root) =>
+    val (prod, state) = (root + "/t", root + "/state")
+    val docs = t(s, dir, "documents")
+    graft.core.ManifestTable.commit(s, prod,
+      docs.filter(col("doc_id") % 4 === 0).select("doc_id", "lang")
+        .withColumn("part", lit("b0")), "part", 0L)
+    graft.core.ManifestTable.commit(s, prod,
+      docs.filter(col("doc_id") % 4 === 1).select("doc_id", "lang")
+        .withColumn("part", lit("b1")), "part", 1L)
+    graft.core.ManifestTable.deleteRows(s, prod,
+      docs.filter(col("doc_id") % 97 === 3).select("doc_id"), "doc_id")
+    graft.core.ManifestTable.commit(s, prod,
+      docs.filter(col("doc_id") % 4 === 2)
+        .select("doc_id", "lang", "n_chars")
+        .withColumn("part", lit("b2")), "part", 2L)
+    graft.core.ManifestTable.commit(s, prod,
+      docs.filter(col("doc_id") % 4 === 3)
+        .select("doc_id", "lang", "n_chars")
+        .withColumn("part", lit("b3")), "part", 3L)
+    graft.streaming.ChangeFeed.catchUp(s, prod, state)
+  }
 
   /** st22's artifact: a row-level CDC REPLICA maintained through
     * [[graft.streaming.ChangeFeed.replicate]] — the producer lives its
@@ -1638,30 +1335,24 @@ object SparkEntry {
     * one-shot), producing a hash-bucketed mirror whose content must
     * equal the producer's final snapshot. The gated read is the replica.
     */
-  def st22ReplicaDir(s: SparkSession, dir: String): String =
-    cdcReplicaMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_st22_cdc")
-      val (prod, rep) = (root + "/t", root + "/r")
-      val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
-      for (b <- 0 until 3)
-        graft.core.ManifestTable.commit(s, prod,
-          docs.filter(col("doc_id") % 3 === b)
-            .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong)
-      // replica trails the producer mid-lifecycle, then catches up again
-      graft.streaming.ChangeFeed.replicate(s, prod, rep, "doc_id", "part")
-      graft.core.ManifestTable.merge(s, prod,
-        docs.filter(col("doc_id") % 11 === 0)
-          .withColumn("lang", lit("upd11"))
-          .withColumn("part", concat(lit("b"), col("doc_id") % 3)),
-        "doc_id", batchId = 3L)
-      graft.core.ManifestTable.deleteRows(s, prod,
-        docs.filter(col("doc_id") % 13 === 0).select("doc_id"), "doc_id")
-      graft.streaming.ChangeFeed.replicate(s, prod, rep, "doc_id", "part")
-      rep
-    })
-
-  private val restoreTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val st22Replica = artifact("graft_st22_cdc") { (s, dir, root) =>
+    val (prod, rep) = (root + "/t", root + "/r")
+    val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
+    for (b <- 0 until 3)
+      graft.core.ManifestTable.commit(s, prod,
+        docs.filter(col("doc_id") % 3 === b)
+          .withColumn("part", lit(s"b$b")), "part", batchId = b.toLong)
+    // replica trails the producer mid-lifecycle, then catches up again
+    graft.streaming.ChangeFeed.replicate(s, prod, rep, "doc_id", "part")
+    graft.core.ManifestTable.merge(s, prod,
+      docs.filter(col("doc_id") % 11 === 0)
+        .withColumn("lang", lit("upd11"))
+        .withColumn("part", concat(lit("b"), col("doc_id") % 3)),
+      "doc_id", batchId = 3L)
+    graft.core.ManifestTable.deleteRows(s, prod,
+      docs.filter(col("doc_id") % 13 === 0).select("doc_id"), "doc_id")
+    graft.streaming.ChangeFeed.replicate(s, prod, rep, "doc_id", "part")
+  }
 
   /** u13's artifact: the u9-shaped bucketed catalog table with a takedown
     * applied (v1) and then UNDONE through
@@ -1669,24 +1360,19 @@ object SparkEntry {
     * file list, fence preserved): the gated read is the post-restore
     * snapshot, which must equal the FULL catalog again.
     */
-  def u13TableDir(s: SparkSession, dir: String): String =
-    restoreTableMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u13_restore") + "/t"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
-      graft.core.ManifestTable.commit(s, root, docs, "bucket", 0L)
-      graft.core.ManifestTable.deleteRows(
-        s, root,
-        t(s, dir, "documents").filter(col("doc_id") % 97 === 3)
-          .select("doc_id"),
-        "doc_id")
-      graft.core.ManifestTable.restore(s, root, 0L)
-      root
-    })
-
-  private val cdfCatchupMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u13Table = artifact("graft_u13_restore") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("int"))
+    graft.core.ManifestTable.commit(s, root, docs, "bucket", 0L)
+    graft.core.ManifestTable.deleteRows(
+      s, root,
+      t(s, dir, "documents").filter(col("doc_id") % 97 === 3)
+        .select("doc_id"),
+      "doc_id")
+    graft.core.ManifestTable.restore(s, root, 0L)
+  }
 
   /** u11b's artifact: a lineage-partitioned U5 table whose history crosses
     * BOTH lifecycle boundaries an incremental consumer must survive in one
@@ -1695,29 +1381,24 @@ object SparkEntry {
     * [[graft.core.ManifestTable.deleteRows]], the u9 shape). The u11b
     * entry replays a downstream consumer's catch-up read across v0→v2.
     */
-  def u11bTableDir(s: SparkSession, dir: String): String =
-    cdfCatchupMemo.computeIfAbsent((s, dir), _ => {
-      val root = graft.core.TempDirs.create("graft_u11b_cdf") + "/t"
-      val docs = t(s, dir, "documents")
-      graft.core.ManifestTable.commit(s, root,
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("lang"))
-          .withColumn("part", lit("b0")),
-        "part", 0L)
-      graft.core.ManifestTable.commit(s, root,
-        docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-          .withColumn("part", lit("b1")),
-        "part", 1L)
-      graft.core.ManifestTable.deleteRows(
-        s, root,
-        docs.filter(col("doc_id") % 97 === 3).select("doc_id"),
-        "doc_id")
-      root
-    })
-
-  private val takedownIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val u11bTable = artifact("graft_u11b_cdf") { (s, dir, scratch) =>
+    val root = scratch + "/t"
+    val docs = t(s, dir, "documents")
+    graft.core.ManifestTable.commit(s, root,
+      docs.filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("lang"))
+        .withColumn("part", lit("b0")),
+      "part", 0L)
+    graft.core.ManifestTable.commit(s, root,
+      docs.filter(col("doc_id") % 2 === 1)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .withColumn("part", lit("b1")),
+      "part", 1L)
+    graft.core.ManifestTable.deleteRows(
+      s, root,
+      docs.filter(col("doc_id") % 97 === 3).select("doc_id"),
+      "doc_id")
+  }
 
   /** d16's artifact: the stored BM25 postings index with a takedown list
     * tombstoned ([[graft.operators.Retrieval.deleteFromTextIndex]] —
@@ -1727,18 +1408,12 @@ object SparkEntry {
     * computation). The absorb is split in two batches so the later U7+
     * delete fold exercises the multi-partition path in specs.
     */
-  def d16IndexDir(s: SparkSession, dir: String): String =
-    takedownIndexMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_d16_tindex")
-      val docs = t(s, dir, "documents")
-      graft.operators.Retrieval.buildTextIndex(docs, path)
-      graft.operators.Retrieval.deleteFromTextIndex(
-        s, path, docs.filter(col("doc_id") % 97 === 7).select("doc_id"))
-      path
-    })
-
-  private val pyramidTakedownMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val d16Index = artifact("graft_d16_tindex") { (s, dir, path) =>
+    val docs = t(s, dir, "documents")
+    graft.operators.Retrieval.buildTextIndex(docs, path)
+    graft.operators.Retrieval.deleteFromTextIndex(
+      s, path, docs.filter(col("doc_id") % 97 === 7).select("doc_id"))
+  }
 
   /** d17's artifact: the k18 hierarchical pyramid with a takedown list
     * deleted ([[graft.operators.HierarchicalIndex.delete]] —
@@ -1749,177 +1424,44 @@ object SparkEntry {
     * a pyramid REBUILT from the surviving corpus — the oracle IS that
     * survivor build ([[k18OracleSqlOver]]).
     */
-  def d17IndexDir(s: SparkSession, dir: String): String =
-    pyramidTakedownMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_d17_hindex")
-      val emb = t(s, dir, "embeddings")
-      graft.operators.HierarchicalIndex.build(emb, path)
-      graft.operators.HierarchicalIndex.delete(s, path,
-        emb.filter(col("vec_id") % 11 =!= 3),
-        emb.filter(col("vec_id") % 11 === 3).select("vec_id"),
-        batchId = 1L, idCol = "vec_id")
-      // physical purge: the U7 fold drops the tombstoned levels/bands rows
-      // and clears the mask — the gated search runs post-fold, mask-free
-      graft.operators.HierarchicalIndex.optimize(s, path)
-      path
-    })
+  private val d17Index = artifact("graft_d17_hindex") { (s, dir, path) =>
+    val emb = t(s, dir, "embeddings")
+    graft.operators.HierarchicalIndex.build(emb, path)
+    graft.operators.HierarchicalIndex.delete(s, path,
+      emb.filter(col("vec_id") % 11 =!= 3),
+      emb.filter(col("vec_id") % 11 === 3).select("vec_id"),
+      batchId = 1L, idCol = "vec_id")
+    // physical purge: the U7 fold drops the tombstoned levels/bands rows
+    // and clears the mask — the gated search runs post-fold, mask-free
+    graft.operators.HierarchicalIndex.optimize(s, path)
+  }
 
-  def st13StatsDir(s: SparkSession, dir: String): String =
-    statsStateMemo.computeIfAbsent((s, dir), _ => {
-      val path = graft.core.TempDirs.create("graft_st13_stats")
-      graft.streaming.EventsStream.statsMaintainReplay(s, dir, path)
-      path
-    })
+  private val st13Stats = artifact("graft_st13_stats") { (s, dir, path) =>
+    graft.streaming.EventsStream.statsMaintainReplay(s, dir, path)
+  }
 
-  private def minHashPairs(s: SparkSession, dir: String): DataFrame =
-    pairMemo.computeIfAbsent((s, dir), _ =>
+  /** Shared-stage memo for the dedup pipeline: d2 (pairs), d7 (clusters) and
+    * d8 (cleaned corpus) are stages of ONE pipeline — without this each entry
+    * rebuilt the whole MinHash+LSH+verify DAG from the scan (~60s of the
+    * round-3 bench was triple recompute). The materialization is an eager
+    * `localCheckpoint`, not `persist`: checkpoint blocks survive
+    * `spark.catalog.clearCache()` (the bench isolates queries with it) and
+    * truncate lineage, so downstream stages re-plan from a tiny materialized
+    * relation. Keyed per (session, dir); entries are deterministic, so reuse
+    * never changes results.
+    */
+  private val minHashPairs = Memo[(SparkSession, String), DataFrame] {
+    case (s, dir) =>
       graft.operators.Dedup.minHashNearDup(t(s, dir, "documents"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
+  }
 
-  private def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    clusterMemo.computeIfAbsent((s, dir), _ =>
+  private val dedupClusters = Memo[(SparkSession, String), DataFrame] {
+    case (s, dir) =>
       graft.operators.Dedup.clusters(
         t(s, dir, "documents").select(col("doc_id").as("id")),
-        minHashPairs(s, dir).select("a_id", "b_id"))
-        .localCheckpoint(true))
-
-  /** Entries whose bench time can be memo-warm: d7 reuses d2's checkpointed
-    * pair set, d8 reuses d7's clusters — their per-query numbers measure
-    * incremental pipeline work, not a standalone rebuild. Bench reports this
-    * set so round-over-round comparisons stay attributable.
-    */
-  /** d9 is memo-warm by CONTRACT, not convenience: its number measures the
-    * daily delta run against the already-stored index (the index write is
-    * ingest-time cost, pre-built in Bench like the e3 staging).
-    */
-  /** k6 and g1 share d9's contract: the stored kNN graph / edge list is
-    * the ingest-time index; their entries time the search / the power
-    * iteration against it.
-    */
-  val memoWarm: Set[String] =
-    Set("d7_dedup_clusters", "d13_cc_twophase", "d8_clean_corpus",
-      "d9_incremental_dedup",
-      // d12 reads the pre-staged media blobs (d12MediaDir, staged untimed
-      // in Bench) — flagged like every other ingest-time artifact
-      "d12_image_neardup",
-      // d14 reads the pre-staged video frames (d14MediaDir), same contract
-      "d14_video_neardup",
-      // m6 and p7 share d14's staged video table
-      "m6_scene_keyframes", "p7_media_curation",
-      // d15 reads the pre-staged audio blobs (d15MediaDir), same contract
-      "d15_audio_neardup",
-      "k6_beam_search", "g1_pagerank",
-      // g2 shares g1's prebuilt edge memo (g1 sorts first and pays it)
-      "g2_personalized_pagerank",
-      // the stored IVF-PQ indexes (k8IndexDir/k13IndexDir/st15IndexDir):
-      // the entries time the search against the ingest-time artifact;
-      // k10's ADC stage serves from k8's stored codes, k9 and k10's
-      // stage 1 from its stored binary signatures
-      "k8_ivfpq_topk", "k9_binary_topk", "k10_cascade_topk",
-      // k18 searches the stored hierarchical pyramid (k18IndexDir); k16's
-      // hier recall leg serves the same stored artifact
-      "k18_hier_topk", "k16_ann_recall",
-      "k13_index_incremental", "st15_vector_index_maintain",
-      // st16 searches the stream-built BM25 postings index (st16IndexDir)
-      "st16_bm25_index_maintain",
-      // st17 exact-verifies candidates from the stream-built MG summary
-      // artifact (st17SummaryDir), same ingest-time contract
-      "st17_heavy_hitters_maintain",
-      // st18 range-reads the stream-built zone-mapped table (st18TableDir)
-      "st18_zonemap_range", "st18b_zonemap_secondary",
-      // p8 reads the committed shard table (p8ShardsDir), same contract
-      "p8_training_shards",
-      // st19 reads the stream-maintained cluster state (st19ClusterDir)
-      "st19_cluster_maintain",
-      // a29 plans from the persisted ANALYZE relation (a29StatsDir)
-      "a29_stats_join",
-      // u9 reads the post-takedown manifest snapshot (u9TableDir); d16
-      // searches the tombstoned postings index (d16IndexDir) — the build
-      // + delete are ingest-time artifacts, the entries time the read
-      "u9_takedown", "d16_index_takedown",
-      // u19 SQL-reads the same staged u9 artifact through the DSv2 view
-      "u19_dsv2_sql", "u21_dsv2_ddl", "u22_agg_pushdown",
-      "u23_runtime_prune", "u24_stream_tail",
-      // u20 reads the DSv2-written staged table (u20TableDir)
-      "u20_dsv2_write",
-      // u11 diffs two committed versions of the u9 artifact
-      "u11_table_changes",
-      // u11b replays the consumer catch-up over its own staged
-      // evolution+takedown table (u11bTableDir)
-      "u11b_cdf_catchup",
-      // u13 reads the post-restore manifest snapshot (u13TableDir)
-      "u13_restore",
-      // st21 reads the CDF-maintained consumer state (st21StateDir)
-      "st21_cdf_consumer",
-      // st22 reads the CDC-maintained replica table (st22ReplicaDir)
-      "st22_cdc_replica",
-      // st23 reads the post-fold streamed+takedown table (st23TableDir)
-      "st23_streamed_takedown",
-      // u14 reads the post-TTL manifest snapshot (u14TableDir)
-      "u14_partition_ttl",
-      // u15 reads the post-merge manifest snapshot (u15TableDir)
-      "u15_merge_upsert",
-      // u26/u27 read post-SQL-verb snapshots (u26TableDir/u27TableDir)
-      "u26_sql_delete", "u27_sql_merge",
-      // st24 reads the native-streaming-sink ingested table (st24TableDir)
-      "st24_native_sink",
-      // u28 reads the multi-partitioned DDL table (u28TableDir)
-      "u28_multipart",
-      // u29 reads the catalog-owned optimized table (u29Catalog)
-      "u29_catalog_sql",
-      // u30 reads the post-UPDATE snapshot (u30TableDir)
-      "u30_sql_update",
-      // u32 replays the u9 artifact's version history as a change feed
-      "u32_cdf_read",
-      // u33 reads the staged lifecycle's manifest headers (u33TableDir)
-      "u33_history",
-      // u34 reads the compacted+TTL'd multi-level catalog table (u34Catalog)
-      "u34_multilevel_sql",
-      // u16 reads the post-takedown bloom-indexed snapshot (u16TableDir)
-      "u16_bloom_takedown",
-      // u18 reads the purged+masked deferred-takedown snapshot (u18TableDir)
-      "u18_deferred_takedown",
-      // u12 counts five pre-staged artifacts' indexed rows (d18, d17, d9,
-      // d16, k8 — all ingest-time artifacts of their own entries)
-      "u12_freshness",
-      // u10 reads the post-evolution manifest snapshot (u10TableDir)
-      "u10_schema_evolution",
-      // st20 searches the stream-maintained hierarchical pyramid
-      "st20_hier_index_maintain",
-      // d17 searches the post-takedown pyramid (build + delete are
-      // ingest-time artifacts, the entry times the masked layered read)
-      "d17_pyramid_takedown",
-      // d18 reads the post-takedown cluster labels (replay + delete are
-      // ingest-time artifacts)
-      "d18_cluster_takedown")
-
-  /** Drop the memoized pipeline stages for one session (all dirs) — lets a
-    * bench opt into cold per-query measurement, and unpins the session and
-    * its checkpoint blocks (freed by the ContextCleaner once unreferenced)
-    * in long-lived JVMs.
-    */
-  def invalidateMemos(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    Seq(pairMemo, clusterMemo).foreach { m =>
-      m.keySet.asScala.filter(_._1 eq s).toList.foreach(m.remove)
-    }
-    Seq(dedupIndexMemo, streamedIndexMemo, statsStateMemo, knnGraphMemo,
-      g1EdgesMemo, d12MediaMemo, d14MediaMemo, d15MediaMemo, vectorIndexMemo, vectorIndexIncrMemo,
-      streamedVectorIndexMemo, streamedTextIndexMemo,
-      streamedHeavyHittersMemo, zoneMapTableMemo, statsArtifactMemo,
-      streamedClusterMemo, hierIndexMemo, trainingShardsMemo,
-      takedownTableMemo, takedownIndexMemo, evolutionTableMemo,
-      streamedHierIndexMemo, pyramidTakedownMemo,
-      clusterTakedownMemo, cdfCatchupMemo, restoreTableMemo,
-      cdfConsumerMemo, ttlTableMemo, mergeTableMemo,
-      bloomTableMemo, cdcReplicaMemo, dvTableMemo,
-      dsv2WriteTableMemo, dsv2DdlTableMemo, streamTailMemo,
-      streamedTakedownMemo, sqlDeleteTableMemo, sqlMergeTableMemo,
-      nativeSinkTableMemo, multiPartTableMemo, catalogTableMemo,
-      sqlUpdateTableMemo).foreach { m =>
-      m.keySet.asScala.filter(_._1 eq s).toList
-        .foreach(k => Option(m.remove(k)).foreach(graft.core.TempDirs.drop))
-    }
+        minHashPairs.get((s, dir)).select("a_id", "b_id"))
+        .localCheckpoint(true)
   }
 
   private def resolver(s: SparkSession, dir: String): Exporter.Resolver =
@@ -1939,14 +1481,14 @@ object SparkEntry {
       resolver(spark, "/root/testdata/sf0.001"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val entries: Map[String, Entry] = Map(
     // ---- §2.2 relational operators (reference parity) ----
-    "r1_scan" -> ((s, dir) => t(s, dir, "region")),
-    "r2_projection" -> ((s, dir) =>
+    "r1_scan" -> Entry((s, dir) => t(s, dir, "region")),
+    "r2_projection" -> Entry((s, dir) =>
       Exporter.buildQuery(
         ColumnSelection("customer", Seq("c_name", "c_acctbal")),
         resolver(s, dir))),
-    "r3_join_comma" -> ((s, dir) =>
+    "r3_join_comma" -> Entry((s, dir) =>
       Exporter.buildQuery(
         ColumnSelection(
           "customer",
@@ -1954,7 +1496,7 @@ object SparkEntry {
           Seq("orders"),
           Some("customer.c_custkey = orders.o_custkey")),
         resolver(s, dir))),
-    "r3_join_nway" -> ((s, dir) =>
+    "r3_join_nway" -> Entry((s, dir) =>
       Exporter.buildQuery(
         ColumnSelection(
           "customer",
@@ -1962,7 +1504,7 @@ object SparkEntry {
           Seq("orders", "lineitem", "nation"),
           Some("customer.c_custkey = orders.o_custkey AND orders.o_orderkey = lineitem.l_orderkey AND customer.c_nationkey = nation.n_nationkey")),
         resolver(s, dir))),
-    "r4_theta_join" -> ((s, dir) =>
+    "r4_theta_join" -> Entry((s, dir) =>
       Exporter.buildQuery(
         ColumnSelection(
           "region",
@@ -1970,76 +1512,76 @@ object SparkEntry {
           Seq("nation"),
           Some("region.r_regionkey < nation.n_regionkey")),
         resolver(s, dir))),
-    "r4_filter" -> ((s, dir) =>
+    "r4_filter" -> Entry((s, dir) =>
       t(s, dir, "lineitem")
         .filter(expr("l_quantity > 30 AND l_returnflag = 'R'"))
         .select("l_orderkey", "l_linenumber", "l_quantity")),
-    "r5_count" -> ((s, dir) =>
+    "r5_count" -> Entry((s, dir) =>
       t(s, dir, "lineitem").agg(count(lit(1)).as("cnt"))),
-    "r6_empty_result" -> ((s, dir) =>
+    "r6_empty_result" -> Entry((s, dir) =>
       t(s, dir, "orders").filter(col("o_totalprice") < 0).select("o_orderkey")),
     // Events-table pin for the exact ns→µs conversion (ADVICE.md r1 high):
     // hourly tumbling aggregate; value quantized per-row to milli-units so
     // the sum is exact integer math in both engines.
-    "e1_events_hourly" -> ((s, dir) =>
+    "e1_events_hourly" -> Entry((s, dir) =>
       graft.operators.Analytics.eventsHourly(t(s, dir, "events"))),
     // ---- Analytics layer (SURVEY.md §7.4: the agg/window/set-op/limit
     // surface the reference lacks; each shape chosen for the 100 TB point) ----
-    "a1_pricing_summary" -> ((s, dir) =>
+    "a1_pricing_summary" -> Entry((s, dir) =>
       graft.operators.Analytics.pricingSummary(t(s, dir, "lineitem"))),
-    "a2_revenue_by_nation" -> ((s, dir) =>
+    "a2_revenue_by_nation" -> Entry((s, dir) =>
       graft.operators.Analytics.revenueByNation(
         t(s, dir, "customer"), t(s, dir, "orders"), t(s, dir, "nation"))),
-    "a3_top_orders_per_customer" -> ((s, dir) =>
+    "a3_top_orders_per_customer" -> Entry((s, dir) =>
       graft.operators.Analytics.topOrdersPerCustomer(t(s, dir, "orders"), n = 3)),
-    "a4_topk_orders" -> ((s, dir) =>
+    "a4_topk_orders" -> Entry((s, dir) =>
       graft.operators.Analytics.topKOrders(t(s, dir, "orders"), k = 10)),
-    "a5_distinct_segments" -> ((s, dir) =>
+    "a5_distinct_segments" -> Entry((s, dir) =>
       graft.operators.Analytics.distinctSegments(t(s, dir, "customer"))),
-    "a6_customer_only_nations" -> ((s, dir) =>
+    "a6_customer_only_nations" -> Entry((s, dir) =>
       graft.operators.Analytics.customerOnlyNations(
         t(s, dir, "customer"), t(s, dir, "supplier"))),
-    "a7_active_nations" -> ((s, dir) =>
+    "a7_active_nations" -> Entry((s, dir) =>
       graft.operators.Analytics.activeNations(
         t(s, dir, "customer"), t(s, dir, "supplier"))),
-    "a8_big_orders_semi" -> ((s, dir) =>
+    "a8_big_orders_semi" -> Entry((s, dir) =>
       graft.operators.Analytics.customersWithBigOrders(
         t(s, dir, "customer"), t(s, dir, "orders"), minTotal = 300000)),
-    "a9_no_big_orders_anti" -> ((s, dir) =>
+    "a9_no_big_orders_anti" -> Entry((s, dir) =>
       graft.operators.Analytics.customersWithoutBigOrders(
         t(s, dir, "customer"), t(s, dir, "orders"), minTotal = 300000)),
-    "a10_order_rollup" -> ((s, dir) =>
+    "a10_order_rollup" -> Entry((s, dir) =>
       graft.operators.Analytics.orderStatsRollup(t(s, dir, "orders"))),
-    "a11_order_cube" -> ((s, dir) =>
+    "a11_order_cube" -> Entry((s, dir) =>
       graft.operators.Analytics.orderStatsCube(t(s, dir, "orders"))),
-    "a12_distinct_users" -> ((s, dir) =>
+    "a12_distinct_users" -> Entry((s, dir) =>
       graft.operators.Analytics.distinctUsersPerType(t(s, dir, "events"))),
     // KMV approximate-distinct sketch: the fixed-size, mergeable shape that
     // replaces exact distinct at 100 TB — md5-deterministic, so the estimate
     // itself is oracle-gated (HLL never is; sketches are engine-private).
-    "a18_kmv_distinct" -> ((s, dir) =>
+    "a18_kmv_distinct" -> Entry((s, dir) =>
       graft.operators.Analytics.kmvDistinctUsers(t(s, dir, "events"))),
     // Ordered conversion funnel (view → click → purchase, strict event-time
     // order): per-stage filter + per-user partial min BEFORE any shuffle —
     // the fact table never shuffles whole.
-    "a19_funnel" -> ((s, dir) =>
+    "a19_funnel" -> Entry((s, dir) =>
       graft.operators.Analytics.funnel(t(s, dir, "events"))
         .selectExpr("user_id", "unix_micros(t_step1) AS t1_micros",
           "unix_micros(t_step2) AS t2_micros",
           "unix_micros(t_step3) AS t3_micros")),
     // Arbitrary grouping-set lattice (beyond a10 rollup / a11 cube).
-    "a20_grouping_sets" -> ((s, dir) =>
+    "a20_grouping_sets" -> Entry((s, dir) =>
       graft.operators.Analytics.orderGroupingSets(t(s, dir, "orders"))
         .withColumn("gid", col("gid").cast("int"))),
     // Footer-only stats: count/min/max pushed INTO the parquet scan
     // (PushedAggregation, V2 source) — a metadata pass, not a data scan.
-    "a22_metadata_stats" -> ((s, dir) =>
+    "a22_metadata_stats" -> Entry((s, dir) =>
       graft.operators.Analytics.metadataStats(
         s, graft.core.Tables.path(dir, "lineitem"))),
     // ANALYZE surface: per-table row/null counts + key min/max via the a22
     // footer-only pushdown scan, NDV via the a18 KMV sketch; persisted as a
     // parquet relation and read back — the CBO-input catalog table.
-    "a25_table_stats" -> ((s, dir) =>
+    "a25_table_stats" -> Entry((s, dir) =>
       // total_bytes stays un-gated (file sizes are not SQL-derivable in
       // the oracle); the planner consumes it, StatsPlannerSpec pins it
       graft.catalog.TableStats.analyzed(s, dir)
@@ -2049,7 +1591,7 @@ object SparkEntry {
     // independently (as if absorbing two ingest batches), MERGE the
     // mergeable summaries, derive the estimates — must equal the direct
     // full-table derivation exactly (the oracle computes the latter).
-    "a26_incremental_stats" -> ((s, dir) => {
+    "a26_incremental_stats" -> Entry((s, dir) => {
       val ts = graft.catalog.TableStats
       val halves = Seq(
         "orders" -> "o_orderkey", "lineitem" -> "l_orderkey",
@@ -2064,7 +1606,7 @@ object SparkEntry {
     // set shape a RANGE window frame cannot express — distinct (day, user)
     // pairs fan out to the window days they serve, one count(DISTINCT) per
     // day, clipped to days that exist.
-    "a28_rolling_actives" -> ((s, dir) =>
+    "a28_rolling_actives" -> Entry((s, dir) =>
       graft.operators.Analytics.rollingActiveUsers(t(s, dir, "events"))),
     // a29: the CONSUMER side of a25's ANALYZE artifact on a gated value
     // path — a star join planned by StatsPlanner.orderedJoin: join order
@@ -2073,8 +1615,8 @@ object SparkEntry {
     // cannot make because it precedes the first shuffle. Values are
     // decision-invariant (the oracle replays the plain unordered SQL);
     // the stats-driven plan shape is pinned in PlanSpec.
-    "a29_stats_join" -> ((s, dir) => {
-      val statsPath = a29StatsDir(s, dir)
+    "a29_stats_join" -> staged(a29Stats)((s, dir) => {
+      val statsPath = a29Stats.get((s, dir)) + "/stats"
       graft.catalog.StatsPlanner.orderedJoin(
         s, statsPath,
         Seq(
@@ -2091,40 +1633,40 @@ object SparkEntry {
     }),
     // Time-RANGE moving window (trailing 30-day revenue) — the event-time
     // frame a15's ROWS prefix sum can't express.
-    "a23_trailing_revenue" -> ((s, dir) =>
+    "a23_trailing_revenue" -> Entry((s, dir) =>
       graft.operators.Analytics.trailingRevenue(t(s, dir, "orders"))),
-    "a13_price_quantiles" -> ((s, dir) =>
+    "a13_price_quantiles" -> Entry((s, dir) =>
       graft.operators.Analytics.priceQuantiles(t(s, dir, "orders"))),
     // Equi-width histogram quantiles per order status: the mergeable
     // selectivity sketch (CBO histogram), quantiles answered from the
     // cumulative histogram — no sort, no rank pass.
-    "a27_histogram_quantiles" -> ((s, dir) =>
+    "a27_histogram_quantiles" -> Entry((s, dir) =>
       graft.operators.Analytics.histogramQuantiles(
         t(s, dir, "orders"), "o_totalprice", "o_orderstatus")),
     // Exact deterministic stratified sample (md5-order, per-stratum window).
-    "a14_stratified_sample" -> ((s, dir) =>
+    "a14_stratified_sample" -> Entry((s, dir) =>
       graft.operators.Analytics.stratifiedSample(t(s, dir, "documents"))),
     // Cumulative window sum (running totals) — centi-quantized exact prefix.
-    "a15_running_revenue" -> ((s, dir) =>
+    "a15_running_revenue" -> Entry((s, dir) =>
       graft.operators.Analytics.runningRevenue(t(s, dir, "orders"))),
     // Navigation window function (lag): inter-order gaps per customer.
-    "a17_order_gaps" -> ((s, dir) =>
+    "a17_order_gaps" -> Entry((s, dir) =>
       graft.operators.Analytics.orderGaps(t(s, dir, "orders"))),
     // Semi-structured extraction: JSONPath over the events props column.
-    "e2_props_json" -> ((s, dir) =>
+    "e2_props_json" -> Entry((s, dir) =>
       graft.operators.Analytics.propsExtract(t(s, dir, "events"))),
     // Partition pruning over the date-partitioned layout: the window
     // predicate prunes event_date=... DIRECTORIES (PartitionFilters,
     // pinned in PlanSpec) — the scan shape that keeps a months-deep
     // 100 TB events table queryable by day.
-    "e3_events_daily_pruned" -> ((s, dir) =>
+    "e3_events_daily_pruned" -> staged(graft.core.PartitionedTables.stagedEventsByDate)((s, dir) =>
       graft.core.PartitionedTables.dailyRollup(s, dir, "2024-01-08", "2024-01-14")),
     // Pivot long->wide with an explicit value list (one shuffle).
-    "a16_event_pivot" -> ((s, dir) =>
+    "a16_event_pivot" -> Entry((s, dir) =>
       graft.operators.Analytics.eventTypePivot(t(s, dir, "events"))),
     // Banded range join — |ts_p − ts_e| <= 60s with NO equi-key, planned as
     // a bucket equi-join + residual filter instead of a nested-loop join.
-    "j2_range_join" -> ((s, dir) => {
+    "j2_range_join" -> Entry((s, dir) => {
       val ev = t(s, dir, "events")
       graft.operators.Joins.rangeJoin(
         left = ev.filter(col("event_type") === "purchase")
@@ -2137,7 +1679,7 @@ object SparkEntry {
     }),
     // Keyed upsert (MERGE): update every 3rd customer, insert a shifted copy
     // of every 7th — one full-outer shuffle join, update wins row-wise.
-    "j3_upsert" -> ((s, dir) => {
+    "j3_upsert" -> Entry((s, dir) => {
       val base = t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal")
       val upd = base.filter(col("c_custkey") % 3 === 0)
         .select(col("c_custkey"),
@@ -2152,7 +1694,7 @@ object SparkEntry {
     // SCD Type-2 historization: the events change stream becomes versioned
     // (user_id, event_type) dimension rows with validity ranges; consecutive
     // same-type deliveries collapse, same-ts versions resolve by event_id.
-    "j7_scd2" -> ((s, dir) =>
+    "j7_scd2" -> Entry((s, dir) =>
       graft.operators.Joins.scd2Historize(
         t(s, dir, "events"), "user_id", "ts", "event_id", Seq("event_type"))
         .selectExpr("user_id", "event_type",
@@ -2163,7 +1705,7 @@ object SparkEntry {
     // deterministic deletes (%97), price updates (%13, +1.50) and key-
     // shifted inserts (%501); the diff must emit exactly those rows as
     // I/U/D with the new image (old image for D).
-    "j9_snapshot_diff" -> ((s, dir) => {
+    "j9_snapshot_diff" -> Entry((s, dir) => {
       def shaped(df: org.apache.spark.sql.DataFrame) = df.select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_centi"),
@@ -2184,7 +1726,7 @@ object SparkEntry {
     // activity stretches; epoch-micro integer bounds, deterministic
     // derived durations (orderkey-seeded) so both engines see the same
     // intervals.
-    "j8_interval_coalesce" -> ((s, dir) =>
+    "j8_interval_coalesce" -> Entry((s, dir) =>
       graft.operators.Joins.intervalCoalesce(
         t(s, dir, "orders").select(
           col("o_custkey").as("key"),
@@ -2196,7 +1738,7 @@ object SparkEntry {
     // Bloom-pruned semi join: urgent-order lineitems via a build-side Bloom
     // filter probed BEFORE the fact shuffle (false positives removed by the
     // exact semi join, so values equal the plain semi join — the oracle).
-    "j6_bloom_semi" -> ((s, dir) => {
+    "j6_bloom_semi" -> Entry((s, dir) => {
       val urgent = t(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")
@@ -2210,7 +1752,7 @@ object SparkEntry {
     }),
     // As-of join (most recent purchase at or before each click, per user) —
     // the union + last-carry-forward shape, one shuffle on the key.
-    "j1_asof_join" -> ((s, dir) => {
+    "j1_asof_join" -> Entry((s, dir) => {
       val ev = t(s, dir, "events")
       graft.operators.Joins.asofJoin(
         left = ev.filter(col("event_type") === "click"),
@@ -2224,7 +1766,7 @@ object SparkEntry {
     // expr() function-dialect parity (SURVEY §7.3 risk 3): date extraction,
     // substring, IN-list, CASE, concat — the common ClickHouse/Spark/DuckDB
     // surface a user types into join_condition / computed columns.
-    "r7_expr_functions" -> ((s, dir) =>
+    "r7_expr_functions" -> Entry((s, dir) =>
       t(s, dir, "lineitem")
         .filter(expr(
           "year(l_shipdate) = 1995 AND substring(l_returnflag, 1, 1) IN ('R', 'A')"))
@@ -2235,32 +1777,32 @@ object SparkEntry {
           expr("round(l_extendedprice * (1 - l_discount), 4)").as("net_price"))),
     // Streaming twin of e1: same frame via Structured Streaming file source
     // + Trigger.AvailableNow (replay/backfill mode), same oracle.
-    "st1_events_hourly_stream" -> ((s, dir) =>
+    "st1_events_hourly_stream" -> Entry((s, dir) =>
       graft.streaming.EventsStream.hourlyAvailableNow(s, dir).frame),
     // Sessionization (session_window) replayed THROUGH the streaming engine:
     // watermarked append mode over the staged multi-file source, session
     // state merged across micro-batches. Emitted = sessions whose end <=
     // final watermark (max event ts @ ms − 1h); the oracle applies the same
     // cutoff to its lag-derived sessions.
-    "st2_sessionize" -> ((s, dir) =>
+    "st2_sessionize" -> Entry((s, dir) =>
       graft.streaming.EventsStream.sessionizeAvailableNow(s, dir).frame),
     // Custom typed state (mapGroupsWithState) replayed through the real
     // streaming engine: multi-file staged source, one micro-batch per file,
     // state carried across batches; the final per-user state is value-gated.
     // Idle-key timeout retirement is MemoryStream-pinned in EventsStreamSpec.
-    "st4_user_totals" -> ((s, dir) =>
+    "st4_user_totals" -> Entry((s, dir) =>
       graft.streaming.EventsStream.userTotalsAvailableNow(s, dir).frame),
     // The 24/7 production streaming shape: watermarked append-mode windows
     // through a real file sink; emitted = windows finalized by the final
     // watermark (max event ts − 1h). Late/dropped semantics are additionally
     // unit-pinned with a MemoryStream in EventsStreamSpec.
-    "st3_events_hourly_watermarked" -> ((s, dir) =>
+    "st3_events_hourly_watermarked" -> Entry((s, dir) =>
       graft.streaming.EventsStream.hourlyWatermarkedAvailableNow(s, dir).frame),
     // Streaming exact dedup of at-least-once deliveries: a duplicate-injected
     // replay through watermarked dropDuplicates(event_id, ts) must emit
     // exactly the original events table (state bounded by the watermark
     // horizon because the event-time column is part of the dedup key).
-    "st5_stream_dedup" -> ((s, dir) =>
+    "st5_stream_dedup" -> Entry((s, dir) =>
       graft.streaming.EventsStream.dedupReplay(s, dir).frame
         .selectExpr("event_id", "user_id", "event_type",
           "unix_micros(ts) AS ts_micros",
@@ -2269,7 +1811,7 @@ object SparkEntry {
     // user): both sides watermarked, range condition on both event times →
     // bounded join state; the time-ordered replay emits exactly the batch
     // interval join.
-    "st6_attribution_join" -> ((s, dir) =>
+    "st6_attribution_join" -> Entry((s, dir) =>
       graft.streaming.EventsStream.attributionReplay(s, dir).frame
         .selectExpr("user_id", "view_id", "purchase_id",
           "unix_micros(v_ts) AS v_ts_micros",
@@ -2278,7 +1820,7 @@ object SparkEntry {
     // null-extended ONCE the watermark proves the absence; still-open
     // windows at end of replay don't emit (oracle applies the same
     // final-watermark cutoff).
-    "st7_attribution_outer" -> ((s, dir) =>
+    "st7_attribution_outer" -> Entry((s, dir) =>
       graft.streaming.EventsStream.attributionOuterReplay(s, dir).frame
         .selectExpr("user_id", "view_id", "purchase_id",
           "unix_micros(v_ts) AS v_ts_micros",
@@ -2286,100 +1828,100 @@ object SparkEntry {
     // Streaming keyed UPSERT sink (foreachBatch merge): the profile table
     // after the replay equals "latest event per user" over the whole
     // stream — CDC-style dimension maintenance, idempotent per batch.
-    "st8_upsert_sink" -> ((s, dir) =>
+    "st8_upsert_sink" -> Entry((s, dir) =>
       graft.streaming.EventsStream.upsertReplay(s, dir).frame
         .selectExpr("user_id", "unix_micros(ts) AS ts_micros", "event_id",
           "event_type", "value_milli")),
     // Incremental materialized-view maintenance: per-user running totals
     // kept in a durable bucketed table by fenced ADDITIVE folds (batch-id
     // high-water mark per row makes the non-idempotent merge exactly-once).
-    "st9_running_mv" -> ((s, dir) =>
+    "st9_running_mv" -> Entry((s, dir) =>
       graft.streaming.EventsStream.runningMvReplay(s, dir).frame),
     // Chained stateful aggregations (hourly → daily window-of-window, one
     // watermark, both state levels horizon-bounded) — Spark 3.4+ multiple-
     // stateful-operator support exercised through the engine.
-    "st12_daily_chained" -> ((s, dir) =>
+    "st12_daily_chained" -> Entry((s, dir) =>
       graft.streaming.EventsStream.dailyRollupChained(s, dir).frame),
     // Stream-static broadcast enrichment (fact stream × dimension table):
     // stateless, per-batch dim re-read, map-side hash join — the stream
     // never shuffles for the join. Values = the batch inner join.
-    "st10_stream_enrich" -> ((s, dir) =>
+    "st10_stream_enrich" -> Entry((s, dir) =>
       graft.streaming.EventsStream.enrichReplay(s, dir).frame
         .selectExpr("event_id", "unix_micros(ts) AS ts_micros", "user_id",
           "event_type", "value_milli", "c_name", "c_mktsegment")),
     // The SAME session_window operator st2 streams, evaluated in batch
     // mode over the full history (backfill parity: no watermark cutoff, so
     // every session emits — batch and stream agree wherever both emit).
-    "a21_sessions_batch" -> ((s, dir) =>
+    "a21_sessions_batch" -> Entry((s, dir) =>
       graft.streaming.EventsStream.sessionize(t(s, dir, "events"))),
     // ---- Dedup suite (LLM-pipeline north star) over documents/embeddings ----
-    "d1_exact_dedup" -> ((s, dir) =>
+    "d1_exact_dedup" -> Entry((s, dir) =>
       graft.operators.Dedup.exact(t(s, dir, "documents"), "text", "doc_id")
         .select("doc_id", "lang", "source", "n_chars")),
-    "d2_near_dedup" -> ((s, dir) => minHashPairs(s, dir)),
+    "d2_near_dedup" -> Entry((s, dir) => minHashPairs.get((s, dir))),
     // The 100 TB shape of d2's verify stage: doc-set joins as plain shuffle
     // equi-joins instead of corpus-wide broadcasts — forced via the
     // verifyBroadcast PARAMETER (no session-conf mutation, so a concurrent
     // d2 build can't observe the wrong plan). Same oracle as d2 — both
     // physical paths are value-gated; the unforced default auto-switches on
     // the estimated doc-set size (Dedup.resolveVerifyBroadcast).
-    "d2b_near_dedup_shuffle" -> ((s, dir) =>
+    "d2b_near_dedup_shuffle" -> Entry((s, dir) =>
       graft.operators.Dedup.minHashNearDup(
         t(s, dir, "documents"), verifyBroadcast = Some(false))),
-    "d3_simhash" -> ((s, dir) =>
+    "d3_simhash" -> Entry((s, dir) =>
       graft.operators.Dedup.simHash(t(s, dir, "documents"))),
-    "d4_ngram_jaccard" -> ((s, dir) =>
+    "d4_ngram_jaccard" -> Entry((s, dir) =>
       graft.operators.Dedup.blockedNgramJaccard(t(s, dir, "documents"))),
-    "d6_simhash_neardup" -> ((s, dir) =>
+    "d6_simhash_neardup" -> Entry((s, dir) =>
       graft.operators.Dedup.simHashNearDup(t(s, dir, "documents"))),
     // Image near-dup (d12): texture-PNG fixtures with planted perturbed
     // copies, REAL decode -> dHash -> pigeonhole Hamming pairing; the
     // oracle replays the closed-form pixel function, never the codec. The
     // blobs come from the STAGED media table (ingest-time artifact,
-    // [[d12MediaDir]]) so the entry times the dedup, not the fixture encode.
-    "d12_image_neardup" -> ((s, dir) =>
+    // [[d12Media]]) so the entry times the dedup, not the fixture encode.
+    "d12_image_neardup" -> staged(d12Media)((s, dir) =>
       graft.operators.Dedup.imageNearDup(
-        s.read.parquet(d12MediaDir(s, dir)))),
+        s.read.parquet(d12Media.get((s, dir))))),
     // Video near-dup (d14): per-frame dHash sequences + pigeonhole banding
     // + temporal-alignment verify — finds the one-frame-trimmed perturbed
     // reposts the fixture plants (offset −1, 4 of 5 frames matched). Blobs
-    // from the staged video table ([[d14MediaDir]]), same ingest-time
+    // from the staged video table ([[d14Media]]), same ingest-time
     // contract as d12.
-    "d14_video_neardup" -> ((s, dir) =>
+    "d14_video_neardup" -> staged(d14Media)((s, dir) =>
       graft.operators.Dedup.videoNearDup(
-        s.read.parquet(d14MediaDir(s, dir)))),
+        s.read.parquet(d14Media.get((s, dir))))),
     // Scene-change keyframes (m6): per-frame dHash through the real JDK
     // decode, then per-video transition Hamming via a bounded lag window —
     // a frame is a keyframe iff it opens the video or its perceptual
     // distance to the previous frame exceeds 4 bits. Shares d14's staged
     // video table (ingest-time-artifact contract).
-    "m6_scene_keyframes" -> ((s, dir) =>
+    "m6_scene_keyframes" -> staged(d14Media)((s, dir) =>
       graft.operators.Multimodal.sceneKeyframes(
-        s.read.parquet(d14MediaDir(s, dir)))),
+        s.read.parquet(d14Media.get((s, dir))))),
     // Audio near-dup (d15): per-frame window-sum hashes over the real JDK
     // WAV decode + the d14 banding/alignment core — finds the planted
     // one-frame-trimmed perturbed reposts (id%10==3 vs id-2) at offset -1
     // with 5/6 frames matched. Reads the staged audio table
-    // ([[d15MediaDir]]), same ingest-time contract as d12/d14.
-    "d15_audio_neardup" -> ((s, dir) =>
+    // ([[d15Media]]), same ingest-time contract as d12/d14.
+    "d15_audio_neardup" -> staged(d15Media)((s, dir) =>
       graft.operators.Dedup.audioNearDup(
-        s.read.parquet(d15MediaDir(s, dir)))),
+        s.read.parquet(d15Media.get((s, dir))))),
     // Pairs -> clusters -> survivors: connected components over the d2
     // near-dup pair set (min-label propagation vs the oracle's recursive CTE).
     // Stage reuse: d7 clusters d2's memoized pair set; d8 joins d7's memoized
     // clusters — one pipeline, evaluated once.
-    "d7_dedup_clusters" -> ((s, dir) => dedupClusters(s, dir)),
+    "d7_dedup_clusters" -> Entry((s, dir) => dedupClusters.get((s, dir))),
     // The O(log n)-round CC (alternating star operations) over the same
     // memoized pair set — the algorithm for duplicate CHAINS whose diameter
     // defeats bounded-round label propagation; same truth as d7.
-    "d13_cc_twophase" -> ((s, dir) =>
+    "d13_cc_twophase" -> Entry((s, dir) =>
       graft.operators.Dedup.clustersTwoPhase(
         t(s, dir, "documents").select(col("doc_id").as("id")),
-        minHashPairs(s, dir).select("a_id", "b_id"))),
+        minHashPairs.get((s, dir)).select("a_id", "b_id"))),
     // The pipeline's end product: the corpus with one representative kept
     // per near-dup cluster (ingest -> detect -> cluster -> clean).
-    "d8_clean_corpus" -> ((s, dir) => {
-      val surv = dedupClusters(s, dir)
+    "d8_clean_corpus" -> Entry((s, dir) => {
+      val surv = dedupClusters.get((s, dir))
         .filter(col("is_survivor") === 1)
         .select(col("id").as("doc_id"))
       t(s, dir, "documents")
@@ -2391,45 +1933,45 @@ object SparkEntry {
     // (written once per session/dir, read back as parquet — the corpus text
     // is never re-shingled) plus against itself — run cost scales with
     // |delta|, never |corpus|.
-    "d9_incremental_dedup" -> ((s, dir) =>
+    "d9_incremental_dedup" -> staged(d9Index)((s, dir) =>
       graft.operators.Dedup.incrementalFromIndex(
-        s, d9IndexDir(s, dir),
+        s, d9Index.get((s, dir)),
         t(s, dir, "documents").filter(expr(d9DeltaPredicate)))),
     // The d9 contract with the index maintained THROUGH the streaming
     // engine (foreachBatch absorbs, batch=b<id> exactly-once fences) —
     // values must equal d9's exactly, so they share one oracle.
-    "st11_index_maintain" -> ((s, dir) =>
+    "st11_index_maintain" -> Entry((s, dir) =>
       graft.operators.Dedup.incrementalFromIndex(
-        s, st11IndexDir(s, dir),
+        s, st11Index.get((s, dir)),
         t(s, dir, "documents").filter(expr(d9DeltaPredicate)))),
     // CDC emission from the manifest upsert sink: one version per batch,
     // changelog v0 -> v1 = time-travel reads diffed by j9's differ — the
     // profile changes caused by the second batch alone.
-    "st14_cdc_upsert" -> ((s, dir) =>
+    "st14_cdc_upsert" -> Entry((s, dir) =>
       graft.streaming.EventsStream.cdcUpsertReplay(
         s, dir, cutoffNanos = 1705363200000000000L)),
     // Streamed ANALYZE (a26's sketches maintained by the stream): each
     // micro-batch commits its mergeable sketch under a batch fence; the
     // fold over committed sketches must equal the direct full-corpus
     // derivation — a26's truth reached through the stream.
-    "st13_stats_maintain" -> ((s, dir) =>
-      graft.streaming.EventsStream.streamedStats(s, st13StatsDir(s, dir))),
+    "st13_stats_maintain" -> Entry((s, dir) =>
+      graft.streaming.EventsStream.streamedStats(s, st13Stats.get((s, dir)))),
     // Cross-corpus paragraph dedup (CCNet-style line dedup). The synthetic
     // docs are single-paragraph, so shared boilerplate paragraphs are
     // appended first (replayed identically in the oracle): every 3rd doc a
     // newsletter footer, every remaining 4th a rights notice — the repeats
     // the operator exists to strip (first occurrence survives, all later
     // ones drop; original body paragraphs are mostly unique and survive).
-    "d10_paragraph_dedup" -> ((s, dir) =>
+    "d10_paragraph_dedup" -> Entry((s, dir) =>
       graft.operators.Dedup.paragraphDedup(
         t(s, dir, "documents").withColumn("text", expr(boilerplateInjectExpr)))),
-    "d5_embedding_neardup" -> ((s, dir) =>
+    "d5_embedding_neardup" -> Entry((s, dir) =>
       graft.operators.Dedup.embeddingNearDup(
         graft.operators.Dedup.withPerturbedCopy(t(s, dir, "embeddings")))),
     // Exact-substring dedup (Lee et al. ExactSubstr): strip every token
     // covered by a 13-token span occurring verbatim >1 time in the corpus;
     // injected >=14-token disclaimers plant the cross-doc duplicate runs.
-    "x21_exact_substring" -> ((s, dir) =>
+    "x21_exact_substring" -> Entry((s, dir) =>
       graft.operators.Dedup.exactSubstringDedup(
         t(s, dir, "documents").withColumn("text", expr(exactSubstrInjectExpr)))),
     // Semantic dedup (SemDeDup): k-means cells bound the pair search,
@@ -2439,7 +1981,7 @@ object SparkEntry {
     // nCentroids = 128: cells scale with the corpus (the paper's regime —
     // candidate pairs are Σ cell², so cell size, not cell count, is the
     // bounded quantity; ~80-doc cells at sf0.1).
-    "d11_semantic_dedup" -> ((s, dir) =>
+    "d11_semantic_dedup" -> Entry((s, dir) =>
       graft.operators.Dedup.semDedup(
         graft.operators.Dedup.withPerturbedCopy(t(s, dir, "embeddings")),
         nCentroids = 128)),
@@ -2451,12 +1993,12 @@ object SparkEntry {
     // Mixture construction: equal-share domain rebalancing to a ~26k-token
     // budget (targets ~1300 tokens/domain at sf0.01: the scarce domains
     // clip at rate 1, the dominant ones downsample — both paths exercised).
-    "p4_mixture_sample" -> ((s, dir) =>
+    "p4_mixture_sample" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.mixtureSample(
         t(s, dir, "documents"), budgetTokens = 26000L)),
     // p9: α = 0.5 temperature mixture — domain shares ∝ sqrt(tokens),
     // between p4's equal shares and the natural distribution.
-    "p9_temperature_mixture" -> ((s, dir) =>
+    "p9_temperature_mixture" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.mixtureSampleTemperature(
         t(s, dir, "documents"), budgetTokens = 26000L)),
     // The round-7 curation stack composed end-to-end: Gopher quality gate
@@ -2467,7 +2009,7 @@ object SparkEntry {
     // over the SELECTION's own LM (x19, lm_micro >= 36000 — the selection
     // median at both test scales), pack survivors into 2048-token
     // sequences (x12). Each stage is an already-gated operator.
-    "p6_dsir_pipeline" -> ((s, dir) => {
+    "p6_dsir_pipeline" -> Entry((s, dir) => {
       val docs = t(s, dir, "documents")
       // localCheckpoint: the selection feeds the fluency stats, the gate
       // join and the final pack — three consumers of one subtree; without
@@ -2487,10 +2029,10 @@ object SparkEntry {
     // d6/d12 pigeonhole Hamming core — one decode pass, pairs only among
     // keyframes, deterministic (video, frame)-min keep rule. The media
     // twin of the p1-p6 text pipelines.
-    "p7_media_curation" -> ((s, dir) =>
+    "p7_media_curation" -> staged(d14Media)((s, dir) =>
       graft.operators.Multimodal.curateKeyframes(
-        s.read.parquet(d14MediaDir(s, dir)))),
-    "p5_pretraining_mixture" -> ((s, dir) => {
+        s.read.parquet(d14Media.get((s, dir))))),
+    "p5_pretraining_mixture" -> Entry((s, dir) => {
       val noisy = t(s, dir, "documents")
         .withColumn("text", expr(gopherNoiseExpr))
       val kept = graft.operators.TextAnalysis.gopherFilter(noisy)
@@ -2503,7 +2045,7 @@ object SparkEntry {
       graft.operators.TextAnalysis.packSequences(
         clean.join(sampled.select("doc_id"), "doc_id"))
     }),
-    "p3_crawl_curation" -> ((s, dir) => {
+    "p3_crawl_curation" -> Entry((s, dir) => {
       val injected = t(s, dir, "documents")
         .withColumn("text", expr(boilerplateInjectExpr))
       // localCheckpoint: capped feeds BOTH the paragraph dedup and the
@@ -2526,7 +2068,7 @@ object SparkEntry {
     // winnowing fingerprint with any train-split document (eval-leakage
     // detection — x11's split composed with x7's fingerprints; one shuffle
     // equi-join on the high-cardinality fingerprint).
-    "p2_contamination" -> ((s, dir) => {
+    "p2_contamination" -> Entry((s, dir) => {
       val docs = t(s, dir, "documents")
       // localCheckpoint: the frame is read twice (test side + train side),
       // and the pushed-down split filters make the subtrees non-identical,
@@ -2548,9 +2090,9 @@ object SparkEntry {
     // gate → deterministic split assignment → per-shard sequence packing.
     // Every stage is an already-oracle-gated operator; the composition is
     // itself value-gated end-to-end.
-    "p1_training_pipeline" -> ((s, dir) => {
+    "p1_training_pipeline" -> Entry((s, dir) => {
       val docs = t(s, dir, "documents")
-      val surv = dedupClusters(s, dir)
+      val surv = dedupClusters.get((s, dir))
         .filter(col("is_survivor") === 1).select(col("id").as("doc_id"))
       val clean = docs.join(surv, "doc_id")
       val kept = clean.join(
@@ -2562,36 +2104,36 @@ object SparkEntry {
         .select("doc_id", "source", "split", "n_tokens", "start_offset", "bin_id")
     }),
     // ---- Text analysis over documents ----
-    "x1_text_stats" -> ((s, dir) =>
+    "x1_text_stats" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.textStats(t(s, dir, "documents"))),
-    "x2_quality_score" -> ((s, dir) =>
+    "x2_quality_score" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.qualityScore(t(s, dir, "documents"))),
-    "x3_langid" -> ((s, dir) =>
+    "x3_langid" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.languageId(t(s, dir, "documents"))),
-    "x4_fingerprint" -> ((s, dir) =>
+    "x4_fingerprint" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.fingerprint(t(s, dir, "documents"))),
-    "x5_corpus_stats" -> ((s, dir) =>
+    "x5_corpus_stats" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.corpusStats(t(s, dir, "documents"))),
-    "x6_token_counts" -> ((s, dir) =>
+    "x6_token_counts" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.tokenCounts(t(s, dir, "documents"))),
-    "x7_winnow" -> ((s, dir) =>
+    "x7_winnow" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.winnow(t(s, dir, "documents"))),
     // Unigram corpus-frequency quality (exact-math perplexity stand-in).
-    "x18_unigram_quality" -> ((s, dir) =>
+    "x18_unigram_quality" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.unigramQuality(t(s, dir, "documents"))),
     // Bigram LM quality (KenLM-style fluency proxy): mean integer-exact
     // P(w2|w1) over adjacent pairs + OOV-bigram ratio, map-only extraction.
-    "x19_bigram_quality" -> ((s, dir) =>
+    "x19_bigram_quality" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.bigramQuality(t(s, dir, "documents"))),
     // Collocation mining (x25): top-50 bigrams by integer-exact PMI lift
     // (Church-Hanks association ratio as a milli-ratio — monotone in PMI,
     // no libm log), min-count 5 gate, global top-k via TakeOrdered.
-    "x25_collocations" -> ((s, dir) =>
+    "x25_collocations" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.collocations(t(s, dir, "documents"))),
     // x26: jusText-style main-content extraction over markup-injected
     // pages — per-rule block counts + the kept text's md5 (the oracle
     // replays tag strip, anchor density and thresholds verbatim).
-    "x26_main_content" -> ((s, dir) =>
+    "x26_main_content" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.extractMainContent(
         t(s, dir, "documents").withColumn("html", expr(htmlInjectExpr)))
         .select("doc_id", "n_blocks", "n_content", "n_fail_len",
@@ -2599,14 +2141,14 @@ object SparkEntry {
     // p8: the deterministic training-shard table read back from its
     // manifest commit — shard assignment AND intra-shard order both
     // md5-derived, so the oracle replays the whole shuffle.
-    "p8_training_shards" -> ((s, dir) =>
-      graft.core.ManifestTable.read(s, p8ShardsDir(s, dir))
+    "p8_training_shards" -> staged(p8Shards)((s, dir) =>
+      graft.core.ManifestTable.read(s, p8Shards.get((s, dir)) + "/t")
         .getOrElse(sys.error("p8 shard table missing"))
         .select("source", "bin_id", "n_docs", "n_tokens", "shard", "pos")),
     // p3b: the crawl-curation pipeline fronted by x26 — markup pages →
     // main-content extraction → paragraph dedup over the EXTRACTED text,
     // summarized per (source, lang) with the boilerplate-block count.
-    "p3b_html_curation" -> ((s, dir) => {
+    "p3b_html_curation" -> Entry((s, dir) => {
       val docs = t(s, dir, "documents")
       // localCheckpoint: extracted feeds the paragraph dedup AND the
       // stats join-back with different projections (the p3 rationale)
@@ -2627,30 +2169,30 @@ object SparkEntry {
     }),
     // DSIR importance selection: top-100 docs whose hashed-bigram profile
     // best matches the src0 target slice relative to the raw corpus.
-    "x20_importance_select" -> ((s, dir) =>
+    "x20_importance_select" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.importanceSelect(
         t(s, dir, "documents"), "source = 'src0'", budget = 100)),
     // Heavy-hitter tokens (count·k > n): Misra–Gries discovery + exact
     // verify — values identical to the brute-force threshold query.
-    "a24_heavy_hitters" -> ((s, dir) =>
+    "a24_heavy_hitters" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.heavyTokens(t(s, dir, "documents"))),
     // Top-k corpus terms per language, linear-idf tf·idf (exact int math).
-    "x9_tfidf_terms" -> ((s, dir) =>
+    "x9_tfidf_terms" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.topTermsTfIdf(t(s, dir, "documents"))),
     // Gopher-style duplicate-3-gram repetition fraction (micro-quantized).
-    "x10_repetition" -> ((s, dir) =>
+    "x10_repetition" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.repetition(t(s, dir, "documents"))),
     // Deterministic md5-bucket train/val/test split (80/10/10).
-    "x11_hash_split" -> ((s, dir) =>
+    "x11_hash_split" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.hashSplit(t(s, dir, "documents"))),
     // Leakage-safe variant: the same md5-threshold rule on the GROUP key,
     // so a whole source/domain lands in one split (near-dups cluster
     // within domains; an id-hashed split leaks them across the boundary).
-    "x23_grouped_split" -> ((s, dir) =>
+    "x23_grouped_split" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.groupedSplit(t(s, dir, "documents"))),
     // Concat-and-chunk sequence packing into 2048-token bins, per shard —
     // budgeted in TRUE x22 BPE tokens, not the whitespace approximation.
-    "x12_seq_pack" -> ((s, dir) => {
+    "x12_seq_pack" -> Entry((s, dir) => {
       val docs = t(s, dir, "documents")
       graft.operators.TextAnalysis.packSequences(docs, tokenCounts = Some(
         graft.operators.TextAnalysis.bpeTokenCounts(docs)
@@ -2658,17 +2200,17 @@ object SparkEntry {
     }),
     // Trained BPE (x22): the learned merge table — 32 deterministic merges
     // over the top-256 words, (count DESC, pair ASC) argmax each round.
-    "x22_bpe_merges" -> ((s, dir) =>
+    "x22_bpe_merges" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.bpeMerges(t(s, dir, "documents"))),
     // Trained BPE (x22): true per-document subword counts — vocabulary
     // encoded once through the rank-ordered merges, corpus counts by join.
-    "x22_bpe_tokens" -> ((s, dir) =>
+    "x22_bpe_tokens" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.bpeTokenCounts(t(s, dir, "documents"))),
     // PII redaction with audit counts. The synthetic corpus carries no real
     // PII, so every 5th document gets a deterministic email+phone appended
     // first (replayed identically in the oracle) — the redacted text itself
     // is then hash-gated via md5, not just the counts.
-    "x13_redact_pii" -> ((s, dir) => {
+    "x13_redact_pii" -> Entry((s, dir) => {
       val injected = t(s, dir, "documents").withColumn("text", expr(
         "CASE WHEN doc_id % 5 = 0 THEN concat(text, ' contact: user', " +
           "CAST(doc_id AS STRING), '@example.com tel 555-123-', " +
@@ -2683,14 +2225,14 @@ object SparkEntry {
     // identically in the oracle) so EVERY rule discriminates in the gated
     // data: every 7th doc gets symbol tokens ('#' and '...'), every 11th
     // gets digit-only tokens.
-    "x14_gopher_filter" -> ((s, dir) => {
+    "x14_gopher_filter" -> Entry((s, dir) => {
       val noisy = t(s, dir, "documents")
         .withColumn("text", expr(gopherNoiseExpr))
       graft.operators.TextAnalysis.gopherFilter(noisy)
     }),
     // Per-domain document cap via the bounded graft_topk aggregate (no
     // per-domain window sort — domain skew is the norm in web crawls).
-    "x15_domain_cap" -> ((s, dir) =>
+    "x15_domain_cap" -> Entry((s, dir) =>
       graft.operators.TextAnalysis.domainCap(t(s, dir, "documents"))),
     // n-gram containment decontamination (GPT-3/PaLM-style, complements
     // p2's fingerprint variant). The synthetic corpus has no real leakage,
@@ -2698,7 +2240,7 @@ object SparkEntry {
     // (replayed identically in the oracle): canary docs landing in the
     // test split show nonzero containment against the canary docs that
     // landed in train — the leak path the check exists to catch.
-    "x17_decontamination" -> ((s, dir) => {
+    "x17_decontamination" -> Entry((s, dir) => {
       val seeded = t(s, dir, "documents").withColumn("text", expr(
         "CASE WHEN doc_id % 13 = 0 THEN concat(text, ' leaked canary passage alpha beta " +
           "gamma delta epsilon zeta eta theta iota kappa lambda mu nu') ELSE text END"))
@@ -2712,7 +2254,7 @@ object SparkEntry {
     // exact hits) but 15 of its 38 8-grams survive. Canary
     // tokens (qq1..qq45) are outside the corpus vocabulary, so shared
     // grams trace to the plant alone. Injection replayed in the oracle.
-    "x24_fuzzy_decontamination" -> ((s, dir) => {
+    "x24_fuzzy_decontamination" -> Entry((s, dir) => {
       val seeded = t(s, dir, "documents").withColumn("text", expr(
         s"CASE WHEN source <> 'src19' AND doc_id % 7 = 0 " +
           s"THEN concat(text, ' $x24CanaryTrain') " +
@@ -2725,7 +2267,7 @@ object SparkEntry {
     // single-spaced, so deterministic mess is injected first (upper case,
     // punctuation, space runs, trailing blanks — replayed identically in
     // the oracle) and the canonical form is md5-gated.
-    "x16_normalize" -> ((s, dir) => {
+    "x16_normalize" -> Entry((s, dir) => {
       val messy = t(s, dir, "documents").withColumn("text", expr(
         "CASE WHEN doc_id % 2 = 0 THEN concat(upper(text), '  Extra,  SPACES!!  ') ELSE text END"))
       graft.operators.TextAnalysis.normalizeText(messy)
@@ -2733,53 +2275,53 @@ object SparkEntry {
           "CAST(length(normalized) AS BIGINT) AS n_chars_norm")
     }),
     // ---- Multimodal (binary media columns; real JDK PNG + WAV decode) ----
-    "m1_media_features" -> ((s, dir) =>
+    "m1_media_features" -> Entry((s, dir) =>
       graft.operators.Multimodal.mediaFeatures(
         graft.operators.Multimodal.mediaFromDocuments(t(s, dir, "documents")))),
-    "m2_frame_sample" -> ((s, dir) =>
+    "m2_frame_sample" -> Entry((s, dir) =>
       graft.operators.Multimodal.frameSample(
         graft.operators.Multimodal.mediaFromDocuments(t(s, dir, "documents")))),
     // Real decode -> x2 nearest-neighbor resample -> re-encode -> re-decode,
     // all through the JDK codec; gated on the thumb's decoded properties
     // (closed-form in the id for the affine fixtures).
-    "m4_thumbnail" -> ((s, dir) =>
+    "m4_thumbnail" -> Entry((s, dir) =>
       graft.operators.Multimodal.thumbnails(
         graft.operators.Multimodal.mediaFromDocuments(t(s, dir, "documents")))),
     // Real JDK WAV codec round-trip (javax.sound.sampled): per-id square-wave
     // fixtures have closed-form format + sample statistics, so the decode is
     // value-gated like m1's PNG path.
-    "m3_wav_decode" -> ((s, dir) =>
+    "m3_wav_decode" -> Entry((s, dir) =>
       graft.operators.Multimodal.wavFeatures(
         graft.operators.Multimodal.mediaFromDocuments(t(s, dir, "documents")))),
     // Audio decimation through the real codec: decode -> every-2nd-sample
     // -> re-encode at half rate -> re-decode; the square-wave fixture's
     // peak and mean|s| survive decimation exactly (every sample is ±A).
-    "m5_audio_resample" -> ((s, dir) =>
+    "m5_audio_resample" -> Entry((s, dir) =>
       graft.operators.Multimodal.audioResample(
         graft.operators.Multimodal.mediaFromDocuments(t(s, dir, "documents")))),
     // m7 (round 18): MIXED-container decode — PNG, JPEG and undecodable
     // raw blobs through one ImageIO road (real crawls are JPEG-heavy);
     // JPEG is lossy so its rows gate dimensions/bands + decodability,
     // raw rows gate the null quarantine
-    "m7_jpeg_decode" -> ((s, dir) =>
+    "m7_jpeg_decode" -> Entry((s, dir) =>
       graft.operators.Multimodal.mixedDecode(t(s, dir, "documents"))),
     // ---- Similarity search over embeddings ----
-    "k1_topk_cosine" -> ((s, dir) =>
+    "k1_topk_cosine" -> Entry((s, dir) =>
       graft.operators.Similarity.topKCosine(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10)),
     // ANN recall monitor (k16): recall@10 of the LSH/IVF/binary legs
     // against the exact k1 truth, per query, integer micro-units — the
     // index-quality check a real deployment runs after every rebuild.
-    "k16_ann_recall" -> ((s, dir) =>
+    "k16_ann_recall" -> staged(k18Index, k8Index)((s, dir) =>
       graft.operators.Similarity.annRecall(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10,
-        hierIndexPath = Some(k18IndexDir(s, dir)),
-        ivfIndexPath = Some(k8IndexDir(s, dir)))),
+        hierIndexPath = Some(k18Index.get((s, dir))),
+        ivfIndexPath = Some(k8Index.get((s, dir))))),
     // BM25 lexical retrieval (integer-exact milli scoring, Robertson-odds
     // IDF): 5 query docs (ids 0-4), query = the doc's first 6 distinct
     // tokens, top-10 over the whole corpus. The sparse leg of the
     // retrieval stack; k15 fuses it with the dense cosine leg.
-    "k14_bm25_topk" -> ((s, dir) =>
+    "k14_bm25_topk" -> Entry((s, dir) =>
       graft.operators.Retrieval.bm25TopK(
         t(s, dir, "documents"),
         t(s, dir, "documents").filter(col("doc_id") < 5)
@@ -2789,7 +2331,7 @@ object SparkEntry {
     // top-20 + exact-cosine top-20 per query doc (doc_id ≡ vec_id — the
     // corpus's embedding correspondence), fused on rank alone
     // (1000000 div (60 + rank)), final top-10. Both legs exclude self.
-    "k15_hybrid_rrf" -> ((s, dir) =>
+    "k15_hybrid_rrf" -> Entry((s, dir) =>
       graft.operators.Retrieval.hybridRrfTopK(
         t(s, dir, "documents"), t(s, dir, "embeddings"),
         queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10)),
@@ -2797,88 +2339,88 @@ object SparkEntry {
     // corpus is reweighted to non-unit norms (id-mod-7 scale), one extra
     // sqrt(M^2-|x|^2) component makes every corpus norm constant, and the
     // K1 cosine machinery answers inner-product search unchanged.
-    "k12_mips_topk" -> ((s, dir) =>
+    "k12_mips_topk" -> Entry((s, dir) =>
       graft.operators.Similarity.mipsTopK(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10)),
     // The same augmentation feeding the K2 LSH index: approximate MIPS,
     // bucket-bounded candidates, exact re-rank against the 0-appended
     // query. Deterministic md5 hyperplanes -> value-oracle-gated like k2.
-    "k12b_mips_ann" -> ((s, dir) =>
+    "k12b_mips_ann" -> Entry((s, dir) =>
       graft.operators.Similarity.mipsAnnTopK(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10)),
     // Approximate-by-design (LSH candidate subset) but fully DETERMINISTIC:
     // the hyperplanes are md5-derived signs, so DuckDB reproduces the exact
     // bucket→candidate→re-rank pipeline and the result is value-oracle-gated.
-    "k2_ann_topk" -> ((s, dir) =>
+    "k2_ann_topk" -> Entry((s, dir) =>
       graft.operators.Similarity.annTopKCosine(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10)),
     // IVF index variant — probe-subset approximate, same determinism story
     // (centroids picked by md5(id) order).
-    "k3_ivf_topk" -> ((s, dir) =>
+    "k3_ivf_topk" -> Entry((s, dir) =>
       graft.operators.Similarity.ivfTopKCosine(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10)),
     // PQ ANN: trained per-subspace codebooks, integer-ADC shortlist, exact
     // re-rank — the memory-bounded index shape (m bytes/vector, not dim·4).
-    "k4_pq_topk" -> ((s, dir) =>
+    "k4_pq_topk" -> Entry((s, dir) =>
       graft.operators.Similarity.pqTopKCosine(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10)),
     // kNN graph over ALL nodes (bucket-bounded candidates, bounded top-k
     // rank) — the semantic-dedup / clustering primitive.
-    "k5_knn_graph" -> ((s, dir) =>
+    "k5_knn_graph" -> Entry((s, dir) =>
       graft.operators.Similarity.knnGraph(t(s, dir, "embeddings"), k = 5)),
     // Graph-traversal ANN: narrow LSH seeding (3 bands), then 2 fixed beam
     // rounds over the UNDIRECTED k5 graph — higher recall than k2's bucket
     // probe at fewer exact-cosine evaluations (pinned in SimilaritySpec).
-    // The graph is the STORED ingest-time index (k6GraphDir, d9's memo
+    // The graph is the STORED ingest-time index (k6Graph, d9's memo
     // contract): the query reads it back and traverses.
-    "k6_beam_search" -> ((s, dir) =>
+    "k6_beam_search" -> staged(k6Graph)((s, dir) =>
       graft.operators.Similarity.beamSearchTopKCosine(
         t(s, dir, "embeddings"), Seq(0L, 1L, 2L),
-        graph = Some(s.read.parquet(k6GraphDir(s, dir))))),
+        graph = Some(s.read.parquet(k6Graph.get((s, dir)))))),
     // k18: HNSW-shape layered search from the stored pyramid — entry-point
     // descent (exact scan of the md5-sampled coarse layer) replaces k6's
     // LSH seeding; spec-pinned to match k6's recall at fewer exact evals.
-    "k18_hier_topk" -> ((s, dir) =>
+    "k18_hier_topk" -> staged(k18Index)((s, dir) =>
       graft.operators.HierarchicalIndex.searchTopKCosine(
-        s, k18IndexDir(s, dir), t(s, dir, "embeddings"), Seq(0L, 1L, 2L))),
+        s, k18Index.get((s, dir)), t(s, dir, "embeddings"), Seq(0L, 1L, 2L))),
     // Filtered ANN: the metadata-predicate vector search (pre-filter
     // strategy — index pass and candidates bounded by the qualifying
     // subset; no post-filter recall cliff).
-    "k7_filtered_ann" -> ((s, dir) =>
+    "k7_filtered_ann" -> Entry((s, dir) =>
       graft.operators.Similarity.filteredAnnTopKCosine(
         t(s, dir, "embeddings"), Seq(0L, 1L, 2L), "label = 1")),
     // IVF-PQ ANN: coarse cells bound candidate volume (k3's leg), PQ codes
     // bound memory (k4's leg) — the billion-scale composition, FAISS
     // IndexIVFPQ with by_residual=false; exact re-rank on the shortlist.
-    // Served from the STORED index (k8IndexDir — quantizers trained +
+    // Served from the STORED index (k8Index — quantizers trained +
     // corpus encoded once at ingest): the entry times the SEARCH, the
     // operation a deployed ANN system runs per query.
-    "k8_ivfpq_topk" -> ((s, dir) =>
+    "k8_ivfpq_topk" -> staged(k8Index)((s, dir) =>
       graft.operators.VectorIndex.searchTopKCosine(
-        s, k8IndexDir(s, dir), t(s, dir, "embeddings"),
+        s, k8Index.get((s, dir)), t(s, dir, "embeddings"),
         queryIds = Seq(0L, 1L, 2L), k = 10)),
     // Incremental vector-index maintenance: quantizers trained on the BASE
     // slice, the 1/16 md5 delta absorbed with them FROZEN (batch=b1), the
     // search spanning both generations — one O(delta) day of the ANN
     // ingest loop, value-gated end to end.
-    "k13_index_incremental" -> ((s, dir) =>
+    "k13_index_incremental" -> staged(k13Index)((s, dir) =>
       graft.operators.VectorIndex.searchTopKCosine(
-        s, k13IndexDir(s, dir), t(s, dir, "embeddings"),
+        s, k13Index.get((s, dir)), t(s, dir, "embeddings"),
         queryIds = Seq(0L, 1L, 2L), k = 10)),
     // k13's index with the base absorbed THROUGH the streaming engine
     // (>=2 micro-batches, batch=b<id> exactly-once fences) — values must
     // equal k13's exactly, so they share one oracle.
-    "st15_vector_index_maintain" -> ((s, dir) =>
+    "st15_vector_index_maintain" -> staged(st15Index)((s, dir) =>
       graft.operators.VectorIndex.searchTopKCosine(
-        s, st15IndexDir(s, dir), t(s, dir, "embeddings"),
+        s, st15Index.get((s, dir)), t(s, dir, "embeddings"),
         queryIds = Seq(0L, 1L, 2L), k = 10)),
     // Streamed maintenance of the BM25 postings index (st16): documents
     // absorbed micro-batch by micro-batch under batch=b<id> fences, then
     // BM25 search answered from the stored postings alone — value-equal
     // to k14's inline build (shared oracle).
-    "st16_bm25_index_maintain" -> ((s, dir) =>
+    "st16_bm25_index_maintain" -> staged(st16Index)((s, dir) =>
       graft.operators.Retrieval.searchTextIndex(
-        s, st16IndexDir(s, dir),
+        s, st16Index.get((s, dir)),
         t(s, dir, "documents").filter(col("doc_id") < 5)
           .select(col("doc_id").as("query_id"), col("text").as("qtext")),
         k = 10)),
@@ -2886,31 +2428,31 @@ object SparkEntry {
     // batch Misra-Gries summaries absorbed under batch=b<id> fences, then
     // the candidate union exact-verified against the corpus — value-equal
     // to a24's one-pass discovery (shared oracle).
-    "st17_heavy_hitters_maintain" -> ((s, dir) =>
+    "st17_heavy_hitters_maintain" -> staged(st17Summary)((s, dir) =>
       graft.operators.TextAnalysis.searchHeavyHitters(
-        s, st17SummaryDir(s, dir), t(s, dir, "documents"))),
+        s, st17Summary.get((s, dir)), t(s, dir, "documents"))),
     // Streamed zone-mapped event log (st18): micro-batches committed as
     // their own manifest partitions with footer-derived ts (min, max);
     // the one-day range query reads through the manifest's file skipping
     // (readPruned is a proven superset; the row filter makes it exact).
-    "st18_zonemap_range" -> ((s, dir) => {
+    "st18_zonemap_range" -> staged(st18Table)((s, dir) => {
       val lo = 1705363200000000L // 2024-01-16T00:00:00Z in micros
       val hi = lo + 86400L * 1000000L
       // round 15: the range query reads through the DSv2 format — the
       // filter PUSHES into the scan, which plans from the manifest's
       // zone maps (same skipping readPruned did, now on the default
       // spark.read path; GraftManifestSourceSpec pins the pruning)
-      s.read.format("graft-manifest").load(st18TableDir(s, dir))
+      s.read.format("graft-manifest").load(st18Table.get((s, dir)))
         .filter(col("ts_micros") >= lo && col("ts_micros") < hi)
         .select("user_id", "ts_micros", "event_id", "event_type", "value_milli")
     }),
     // st18b: range query on the NON-PRIMARY zone-map column (event_id —
     // ts-correlated in the time-ordered replay, so per-file ranges are
     // near-disjoint and the manifest provably skips files; spec-pinned).
-    "st18b_zonemap_secondary" -> ((s, dir) => {
+    "st18b_zonemap_secondary" -> staged(st18Table)((s, dir) => {
       val (lo, hi) = (100L, 2599L)
       graft.core.ManifestTable
-        .readPrunedMulti(s, st18TableDir(s, dir),
+        .readPrunedMulti(s, st18Table.get((s, dir)),
           Seq(graft.core.ManifestTable.LongRange("event_id", lo, hi)))
         .filter(col("event_id") >= lo && col("event_id") <= hi)
         .select("user_id", "ts_micros", "event_id", "event_type", "value_milli")
@@ -2919,34 +2461,34 @@ object SparkEntry {
     // state (delta pairs + condensed CC per micro-batch, manifest-fenced)
     // — values equal d7's batch CC under any batch split, so the oracle is
     // d7's recursive CTE verbatim.
-    "st19_cluster_maintain" -> ((s, dir) =>
-      graft.operators.ClusterIndex.labels(s, st19ClusterDir(s, dir))),
+    "st19_cluster_maintain" -> staged(st19Cluster)((s, dir) =>
+      graft.operators.ClusterIndex.labels(s, st19Cluster.get((s, dir)))),
     // d18: row-level takedown from the persisted cluster state — the gated
     // labels run post-delete and must equal batch CC over the surviving
     // corpus (relabel + split both exercised by the % 13 dead set)
-    "d18_cluster_takedown" -> ((s, dir) =>
-      graft.operators.ClusterIndex.labels(s, d18ClusterDir(s, dir))),
+    "d18_cluster_takedown" -> staged(d18Cluster)((s, dir) =>
+      graft.operators.ClusterIndex.labels(s, d18Cluster.get((s, dir)))),
     // st20: layered search served from the STREAM-MAINTAINED pyramid —
     // build at batch 0, exact HNSW-style absorb per later batch; shares
     // k18's oracle because absorb ≡ rebuild exactly
-    "st20_hier_index_maintain" -> ((s, dir) =>
+    "st20_hier_index_maintain" -> staged(st20Index)((s, dir) =>
       graft.operators.HierarchicalIndex.searchTopKCosine(
-        s, st20IndexDir(s, dir), t(s, dir, "embeddings"), Seq(0L, 1L, 2L))),
+        s, st20Index.get((s, dir)), t(s, dir, "embeddings"), Seq(0L, 1L, 2L))),
     // d17: row-level takedown from the stored pyramid — the gated search
     // runs post-delete and must answer exactly like a pyramid rebuilt
     // from the surviving corpus (the oracle is that survivor build)
-    "d17_pyramid_takedown" -> ((s, dir) =>
+    "d17_pyramid_takedown" -> staged(d17Index)((s, dir) =>
       graft.operators.HierarchicalIndex.searchTopKCosine(
-        s, d17IndexDir(s, dir),
+        s, d17Index.get((s, dir)),
         t(s, dir, "embeddings").filter(col("vec_id") % 11 =!= 3),
         Seq(0L, 1L, 2L))),
     // u11: change-data feed between manifest versions — the incremental
     // consumer's catch-up read. Across u9's delete version, the NET
     // removed rows (removed EXCEPT ALL re-added survivors) must be
     // exactly the takedown list; the oracle is that list from the catalog
-    "u11_table_changes" -> ((s, dir) => {
+    "u11_table_changes" -> staged(u9Table)((s, dir) => {
       val (added, removed) = graft.core.ManifestTable.changes(
-        s, u9TableDir(s, dir), 0L, 1L)
+        s, u9Table.get((s, dir)) + "/t", 0L, 1L)
       removed.exceptAll(added)
         .select("doc_id", "lang", "source", "n_chars")
     }),
@@ -2955,8 +2497,8 @@ object SparkEntry {
     // reconstructs (v0 snapshot, null-filled to the target schema, plus
     // added rows, minus removed rows, by multiset) must equal the current
     // snapshot; the oracle replays the null-filled net state in SQL
-    "u11b_cdf_catchup" -> ((s, dir) => {
-      val root = u11bTableDir(s, dir)
+    "u11b_cdf_catchup" -> staged(u11bTable)((s, dir) => {
+      val root = u11bTable.get((s, dir)) + "/t"
       val (added, removed) = graft.core.ManifestTable.changes(s, root, 0L, 2L)
       val cols = Seq("doc_id", "lang", "n_chars").map(col)
       val base = graft.core.ManifestTable.readVersion(s, root, 0L)
@@ -2971,35 +2513,35 @@ object SparkEntry {
     // (tombstone-masked), graded against the survivor corpus: drift is
     // the staleness signal that triggers a catch-up absorb or the rebuild
     // D17/ST20's refusals point at
-    "u12_freshness" -> ((s, dir) => {
+    "u12_freshness" -> staged(d18Cluster, d17Index, d9Index, d16Index, k8Index)((s, dir) => {
       import s.implicits._
       Seq(
         ("cluster_members",
-          graft.catalog.ArtifactFreshness.clusterMembers(s, d18ClusterDir(s, dir))),
+          graft.catalog.ArtifactFreshness.clusterMembers(s, d18Cluster.get((s, dir)))),
         ("hier_pyramid",
-          graft.catalog.ArtifactFreshness.hierIndexedNodes(s, d17IndexDir(s, dir))),
+          graft.catalog.ArtifactFreshness.hierIndexedNodes(s, d17Index.get((s, dir)))),
         ("minhash_index",
-          graft.catalog.ArtifactFreshness.minhashIndexedDocs(s, d9IndexDir(s, dir))),
+          graft.catalog.ArtifactFreshness.minhashIndexedDocs(s, d9Index.get((s, dir)))),
         ("text_index",
-          graft.catalog.ArtifactFreshness.textIndexedDocs(s, d16IndexDir(s, dir))),
+          graft.catalog.ArtifactFreshness.textIndexedDocs(s, d16Index.get((s, dir)))),
         ("vector_index",
-          graft.catalog.ArtifactFreshness.vectorIndexedRows(s, k8IndexDir(s, dir))))
+          graft.catalog.ArtifactFreshness.vectorIndexedRows(s, k8Index.get((s, dir)))))
         .toDF("artifact", "indexed")
     }),
     // u9: row-level takedown through the U5 manifest — the gated read is
     // the post-delete snapshot (rewrite of touched buckets only, emptied
-    // buckets dropped, fence + time travel preserved; see u9TableDir)
+    // buckets dropped, fence + time travel preserved; see u9Table)
     // round 15: gated through the DSv2 format read (≡ ManifestTable.read,
     // spec-pinned) — the post-delete snapshot on the default read path
-    "u9_takedown" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u9TableDir(s, dir))
+    "u9_takedown" -> staged(u9Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u9Table.get((s, dir)) + "/t")
         .select("doc_id", "lang", "source", "n_chars")),
     // u19: the DSv2 format's SQL DDL surface — the manifest table
     // registered as a view (CREATE TEMPORARY VIEW ... USING
     // graft-manifest) and queried in plain SQL: catalog-addressable like
     // any Spark table, manifest-planned like the Scala API
-    "u19_dsv2_sql" -> ((s, dir) => {
-      val root = u9TableDir(s, dir)
+    "u19_dsv2_sql" -> staged(u9Table)((s, dir) => {
+      val root = u9Table.get((s, dir)) + "/t"
       s.sql("CREATE OR REPLACE TEMPORARY VIEW graft_u19_docs " +
         s"USING `graft-manifest` OPTIONS (path '$root')")
       val df = s.sql("SELECT doc_id, lang, source, n_chars FROM graft_u19_docs")
@@ -3013,15 +2555,15 @@ object SparkEntry {
     // df.write.format("graft-manifest") under batch-id fences (a
     // redelivered batch carrying garbage must no-op, which the values
     // prove); the gated read is the final snapshot
-    "u20_dsv2_write" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u20TableDir(s, dir))
+    "u20_dsv2_write" -> staged(u20Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u20Table.get((s, dir)) + "/t")
         .select("doc_id", "lang")),
     // u21: the SQL DDL CREATION lifecycle (round 16) — the staged table
     // was created and filled purely via CREATE TABLE ... USING
-    // graft-manifest + INSERT INTO (u21TableDir); the entry re-declares
+    // graft-manifest + INSERT INTO (u21Table); the entry re-declares
     // the catalog table over the committed root and reads it in SQL
-    "u21_dsv2_ddl" -> ((s, dir) => {
-      val root = u21TableDir(s, dir)
+    "u21_dsv2_ddl" -> staged(u21Table)((s, dir) => {
+      val root = u21Table.get((s, dir)) + "/t"
       s.sql("DROP TABLE IF EXISTS graft_u21_read")
       s.sql("CREATE TABLE graft_u21_read " +
         "(doc_id BIGINT, lang STRING, n_chars BIGINT, part STRING) " +
@@ -3035,16 +2577,16 @@ object SparkEntry {
     // append versions drained as micro-batches into a parquet sink;
     // append-only versions stream exactly once, so the sink equals the
     // snapshot (the shared u20 oracle)
-    "u24_stream_tail" -> ((s, dir) =>
-      s.read.parquet(u24StreamDir(s, dir) + "/sink")
+    "u24_stream_tail" -> staged(u24Stream)((s, dir) =>
+      s.read.parquet(u24Stream.get((s, dir)) + "/sink")
         .select("doc_id", "lang")),
     // u23: RUNTIME file pruning — a broadcast join against a filtered
     // dimension hands the scan the observed partition keys at execution
     // time and the fact opens only their files (DSv2 dynamic partition
     // pruning; the spec pins the 2-of-4-files narrowing, the gated value
     // proves the pruned read loses no row)
-    "u23_runtime_prune" -> ((s, dir) => {
-      val fact = s.read.format("graft-manifest").load(u21TableDir(s, dir))
+    "u23_runtime_prune" -> staged(u21Table)((s, dir) => {
+      val fact = s.read.format("graft-manifest").load(u21Table.get((s, dir)) + "/t")
       val dim = s.range(0, 4)
         .select(concat(lit("b"), col("id").cast("string")).as("part"))
         .filter(col("part").isin("b1", "b2"))
@@ -3056,40 +2598,40 @@ object SparkEntry {
     // file IO (counts from the %# line meta, bounds from the long zone
     // maps; spec proves the zero-IO claim by deleting a data file).
     // The planned scan is GraftAggScan — the manifest IS the aggregate.
-    "u22_agg_pushdown" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u21TableDir(s, dir))
+    "u22_agg_pushdown" -> staged(u21Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u21Table.get((s, dir)) + "/t")
         .agg(count(lit(1)).as("n_rows"),
           min(col("doc_id")).as("min_id"),
           max(col("doc_id")).as("max_id"))),
     // u13: RESTORE undoes the takedown — the post-restore snapshot must
     // be the FULL catalog again (manifest-only undo, zero data IO)
-    "u13_restore" -> ((s, dir) =>
-      graft.core.ManifestTable.read(s, u13TableDir(s, dir)).get
+    "u13_restore" -> staged(u13Table)((s, dir) =>
+      graft.core.ManifestTable.read(s, u13Table.get((s, dir)) + "/t").get
         .select("doc_id", "lang", "source", "n_chars")),
     // st21: the CDF-maintained consumer state — per-lang doc and char
     // rollup applied purely from net deltas across appends, a takedown
     // and a schema-evolution boundary, offsets in the state fence
-    "st21_cdf_consumer" -> ((s, dir) =>
-      graft.streaming.ChangeFeed.state(s, st21StateDir(s, dir))),
+    "st21_cdf_consumer" -> staged(st21State)((s, dir) =>
+      graft.streaming.ChangeFeed.state(s, st21State.get((s, dir)) + "/state")),
     // u14: metadata-only partition TTL — the post-drop snapshot holds
     // exactly the surviving lineage partitions
-    "u14_partition_ttl" -> ((s, dir) =>
-      graft.core.ManifestTable.read(s, u14TableDir(s, dir)).get
+    "u14_partition_ttl" -> staged(u14Table)((s, dir) =>
+      graft.core.ManifestTable.read(s, u14Table.get((s, dir)) + "/t").get
         .select("doc_id", "lang")),
     // st22: the CDC-replicated mirror — content must equal the
     // producer's final snapshot, under the replica's own hash layout
-    "st22_cdc_replica" -> ((s, dir) =>
-      graft.streaming.ChangeFeed.replica(s, st22ReplicaDir(s, dir))
+    "st22_cdc_replica" -> staged(st22Replica)((s, dir) =>
+      graft.streaming.ChangeFeed.replica(s, st22Replica.get((s, dir)) + "/r")
         .select("doc_id", "lang", "n_chars")),
     // u15: MERGE upsert — the post-merge snapshot holds replaced-and-
     // moved matches, untouched survivors, and the inserted rows
-    "u15_merge_upsert" -> ((s, dir) =>
-      graft.core.ManifestTable.read(s, u15TableDir(s, dir)).get
+    "u15_merge_upsert" -> staged(u15Table)((s, dir) =>
+      graft.core.ManifestTable.read(s, u15Table.get((s, dir)) + "/t").get
         .select("doc_id", "lang", "n_chars")),
     // st24: the native-streaming-sink ingested events table — drained
     // epochs under the sink's own fence must reproduce the catalog
-    "st24_native_sink" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(st24TableDir(s, dir))
+    "st24_native_sink" -> staged(st24Table)((s, dir) =>
+      s.read.format("graft-manifest").load(st24Table.get((s, dir)) + "/t")
         .select("user_id", "ts_micros", "event_id", "event_type",
           "value_milli")),
     // u32: the CHANGE-DATA-FEED read — the u9 table's whole version
@@ -3100,17 +2642,17 @@ object SparkEntry {
     // single-line header read per version, no file lists; timestamps are
     // wall-clock and spec-pinned non-null, so the gated columns are the
     // deterministic trio)
-    "u33_history" -> ((s, dir) => {
+    "u33_history" -> staged(u33Table)((s, dir) => {
       import s.implicits._
-      graft.core.ManifestTable.history(s, u33TableDir(s, dir))
+      graft.core.ManifestTable.history(s, u33Table.get((s, dir)) + "/t")
         .map(e => (e.version, e.operation, e.batch))
         .toDF("version", "operation", "batch")
     }),
     // the snapshot RECONSTRUCTED from the feed (inserts EXCEPT ALL
     // deletes), which must equal the table — u9's own oracle
-    "u32_cdf_read" -> ((s, dir) => {
+    "u32_cdf_read" -> staged(u9Table)((s, dir) => {
       val cdf = s.read.format("graft-manifest")
-        .option("readChangeFeed", "true").load(u9TableDir(s, dir))
+        .option("readChangeFeed", "true").load(u9Table.get((s, dir)) + "/t")
       val data = Seq("doc_id", "lang", "source", "n_chars").map(col)
       cdf.filter(col("_change_type") === "insert").select(data: _*)
         .exceptAll(
@@ -3118,28 +2660,28 @@ object SparkEntry {
     }),
     // u30: the in-place SQL UPDATE — matched rows rewritten, unmatched
     // carried; the gated read is the post-update snapshot
-    "u30_sql_update" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u30TableDir(s, dir))
+    "u30_sql_update" -> staged(u30Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u30Table.get((s, dir)) + "/t")
         .select("doc_id", "lang", "n_chars")),
     // u29: the catalog-owned table read through its PERSISTENT catalog
     // name — created, filled and optimized purely in SQL (u29Catalog)
-    "u29_catalog_sql" -> ((s, dir) => {
-      val cat = u29Catalog(s, dir)
+    "u29_catalog_sql" -> staged(u29Catalog)((s, dir) => {
+      val cat = catalogName(u29Catalog.get((s, dir)))
       s.sql(s"SELECT doc_id, lang, n_chars, part FROM $cat.corpus.docs")
     }),
     // u34 (round 18): the multi-level maintenance lifecycle in SQL — a
     // (lang, source) table compacted per leaf via CALL system.optimize
     // and TTL'd by its first level via CALL system.drop_partitions; the
     // gated read is the survivors' plain scan (u34Catalog)
-    "u34_multilevel_sql" -> ((s, dir) => {
-      val cat = u34Catalog(s, dir)
+    "u34_multilevel_sql" -> staged(u34Catalog)((s, dir) => {
+      val cat = catalogName(u34Catalog.get((s, dir)))
       s.sql(s"SELECT doc_id, n_chars, lang, source FROM $cat.ml.docs")
     }),
     // u41 (round 19): the rename lifecycle — old and new file
     // generations read under ONE logical schema, COW update on the
     // renamed column included
-    "u41_rename_lifecycle" -> ((s, dir) => {
-      val cat = u41Catalog(s, dir)
+    "u41_rename_lifecycle" -> staged(u41Catalog)((s, dir) => {
+      val cat = catalogName(u41Catalog.get((s, dir)))
       s.sql(s"SELECT doc_id, char_count, lang FROM $cat.m.docs")
     }),
     // u40 (round 19): row-level CDF images of the merge version — the
@@ -3147,25 +2689,25 @@ object SparkEntry {
     // Round 20 re-gates it through the FORMAT OPTION (the
     // GraftRowImagesRule rewrite — SQL-only consumers get the pairing),
     // same oracle as the Scala consumer it planned through before.
-    "u40_cdf_row_images" -> ((s, dir) =>
+    "u40_cdf_row_images" -> staged(u40Table)((s, dir) =>
       s.read.format("graft-manifest")
         .option("readChangeFeed", "true")
         .option("rowImages", "true")
         .option("startingVersion", "1")
-        .load(u40TableDir(s, dir))
+        .load(u40Table.get((s, dir)) + "/t")
         .select("doc_id", "n_chars", "lang", "_change_type",
           "_commit_version")),
     // u39 (round 19): partition overwrite — static replaceWhere over de,
     // dynamic overwrite over fr; the gated read is the final snapshot
-    "u39_replace_where" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u39TableDir(s, dir))
+    "u39_replace_where" -> staged(u39Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u39Table.get((s, dir)) + "/t")
         .select("doc_id", "source", "n_chars", "lang")),
     // u44 (round 20): CROSS-TABLE TRANSACTIONS — corpus + index through
     // the catalog pointer; the entry REQUIRES the crashed transaction's
     // dangling version is hidden and the PAIR is consistent, then gates
     // the pinned corpus (closed-form merge replay over raw documents)
-    "u44_catalog_txn" -> ((s, dir) => {
-      val cat = u44CatalogDir(s, dir)
+    "u44_catalog_txn" -> staged(u44Catalog)((s, dir) => {
+      val cat = u44Catalog.get((s, dir))
       val corpusRoot = graft.core.Transactions.tableRoot(cat, "corpus")
       def viaPointer(rel: String, cv: Option[Long] = None) = {
         val r = s.read.format("graft-manifest").option("catalogRoot", cat)
@@ -3196,8 +2738,8 @@ object SparkEntry {
     // u37 (round 19): hidden `days(ts)` layout — a week-long ts range
     // over a month of events opens ONLY the 7 matching day leaves (the
     // query REQUIRES the pruning pin, then gates the aggregate's values)
-    "u37_days_layout" -> ((s, dir) => {
-      val cat = u37Catalog(s, dir)
+    "u37_days_layout" -> staged(u37Catalog)((s, dir) => {
+      val cat = catalogName(u37Catalog.get((s, dir)))
       val df = s.sql(
         s"SELECT event_type, count(*) AS n_events, " +
           "CAST(sum(event_id) AS BIGINT) AS sum_ids, " +
@@ -3212,8 +2754,8 @@ object SparkEntry {
     // u43 (round 19): storage-partitioned join over hidden bucket
     // layouts — the entry REQUIRES a shuffle-free plan under v2
     // bucketing, then gates the joined values
-    "u43_spj_join" -> ((s, dir) => {
-      val cat = u43Catalog(s, dir)
+    "u43_spj_join" -> staged(u43Catalog)((s, dir) => {
+      val cat = catalogName(u43Catalog.get((s, dir)))
       requireShuffleFreeSpj(s, "u43",
         "SELECT c.event_id, c.event_type, u.n_events " +
           s"FROM $cat.ev.clicks c JOIN $cat.ev.users u " +
@@ -3222,8 +2764,8 @@ object SparkEntry {
     // u45 (round 20): storage-partitioned join over the CALENDAR
     // transform — two days(ts) facts zip day leaf to day leaf; the
     // entry REQUIRES a shuffle-free plan, then gates the joined values
-    "u45_spj_days" -> ((s, dir) => {
-      val cat = u45Catalog(s, dir)
+    "u45_spj_days" -> staged(u45Catalog)((s, dir) => {
+      val cat = catalogName(u45Catalog.get((s, dir)))
       requireShuffleFreeSpj(s, "u45",
         "SELECT c.event_id, c.event_type, a.amt " +
           s"FROM $cat.ev.clicks c JOIN $cat.ev.amounts a " +
@@ -3234,8 +2776,8 @@ object SparkEntry {
     // now `event_ts`; a window filter on the NEW name must open ONLY
     // the window's day leaves (pre-rename generation included), and the
     // values span BOTH write generations
-    "u46_rename_source" -> ((s, dir) => {
-      val cat = u46Catalog(s, dir)
+    "u46_rename_source" -> staged(u46Catalog)((s, dir) => {
+      val cat = catalogName(u46Catalog.get((s, dir)))
       val df = s.sql(
         s"SELECT event_type, count(*) AS n_events, " +
           "CAST(sum(event_id) AS BIGINT) AS sum_ids " +
@@ -3248,8 +2790,8 @@ object SparkEntry {
     }),
     // u42 (round 19): hidden `months(o_orderdate)` layout — a half-year
     // range over ~80 month leaves opens exactly 6 (pruning pin REQUIRED)
-    "u42_months_layout" -> ((s, dir) => {
-      val cat = u42Catalog(s, dir)
+    "u42_months_layout" -> staged(u42Catalog)((s, dir) => {
+      val cat = catalogName(u42Catalog.get((s, dir)))
       val df = s.sql(
         s"SELECT o_orderpriority, count(*) AS n_orders, " +
           "CAST(sum(o_orderkey) AS BIGINT) AS sum_keys " +
@@ -3263,8 +2805,8 @@ object SparkEntry {
     }),
     // u38 (round 19): hidden `bucket(8, user_id)` layout — a user_id IN
     // lookup opens only the hashed buckets' files
-    "u38_bucket_layout" -> ((s, dir) => {
-      val cat = u38Catalog(s, dir)
+    "u38_bucket_layout" -> staged(u38Catalog)((s, dir) => {
+      val cat = catalogName(u38Catalog.get((s, dir)))
       val df = s.sql(
         s"SELECT user_id, count(*) AS n_events, " +
           "CAST(sum(event_id) AS BIGINT) AS sum_ids " +
@@ -3277,8 +2819,8 @@ object SparkEntry {
     }),
     // u28: a two-level-filtered read of the (lang, source)-partitioned
     // table — both directory levels prune before any file opens
-    "u28_multipart" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u28TableDir(s, dir))
+    "u28_multipart" -> staged(u28Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u28Table.get((s, dir)) + "/t")
         .filter(col("lang") === "de" &&
           col("source").isin("src0", "src1", "src2", "src3"))
         .select("doc_id", "n_chars", "lang", "source")),
@@ -3286,46 +2828,46 @@ object SparkEntry {
     // key-list DELETE (metadata-routed to deleteRows) plus a predicate
     // DELETE (group-based copy-on-write); the gated read is the
     // post-delete snapshot
-    "u26_sql_delete" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u26TableDir(s, dir))
+    "u26_sql_delete" -> staged(u26Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u26Table.get((s, dir)) + "/t")
         .select("doc_id", "lang", "source", "n_chars")),
     // u27: the u15 MERGE upsert run purely through SQL (MERGE INTO ...
     // UPDATE SET * / INSERT *); oracle identical to u15's — the SQL and
     // Scala merge paths must agree value-for-value
-    "u27_sql_merge" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u27TableDir(s, dir))
+    "u27_sql_merge" -> staged(u27Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u27Table.get((s, dir)) + "/t")
         .select("doc_id", "lang", "n_chars")),
     // u16: bloom-indexed scattered takedown — the post-delete snapshot;
     // the sidecar changes which files the detection OPENS, never a value
-    "u16_bloom_takedown" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u16TableDir(s, dir))
+    "u16_bloom_takedown" -> staged(u16Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u16Table.get((s, dir)) + "/t")
         .select("doc_id", "lang")),
     // st23: the streamed ingest's post-fold snapshot — the mid-stream
     // takedown's keys are gone regardless of which batch carried them
-    "st23_streamed_takedown" -> ((s, dir) =>
-      graft.core.ManifestTable.read(s, st23TableDir(s, dir)).get
+    "st23_streamed_takedown" -> staged(st23Table)((s, dir) =>
+      graft.core.ManifestTable.read(s, st23Table.get((s, dir))).get
         .select("user_id", "ts_micros", "event_id", "event_type",
           "value_milli")),
     // u18: merge-on-read takedown — one list purged physically, one
     // still a live mask; the read must see survivors of both
     // the DSv2 scan applies the pending U18 mask per-row inside the
     // reader — one list purged, one still masked, indistinguishable here
-    "u18_deferred_takedown" -> ((s, dir) =>
-      s.read.format("graft-manifest").load(u18TableDir(s, dir))
+    "u18_deferred_takedown" -> staged(u18Table)((s, dir) =>
+      s.read.format("graft-manifest").load(u18Table.get((s, dir)) + "/t")
         .select("doc_id", "lang")),
     // u10: the post-evolution snapshot — batch-0 rows null-fill the
     // column batch 1 introduced, read under the manifest's recorded
     // merged schema
-    "u10_schema_evolution" -> ((s, dir) =>
-      graft.core.ManifestTable.read(s, u10TableDir(s, dir)).get
+    "u10_schema_evolution" -> staged(u10Table)((s, dir) =>
+      graft.core.ManifestTable.read(s, u10Table.get((s, dir)) + "/t").get
         .select("doc_id", "lang", "n_chars")),
     // d16: BM25 search over the tombstoned postings index ≡ BM25 over an
     // index rebuilt from the surviving corpus (the oracle recomputes
     // df/dl/N/avgdl over the filtered corpus — scores must match, not
     // just result sets)
-    "d16_index_takedown" -> ((s, dir) =>
+    "d16_index_takedown" -> staged(d16Index)((s, dir) =>
       graft.operators.Retrieval.searchTextIndex(
-        s, d16IndexDir(s, dir),
+        s, d16Index.get((s, dir)),
         t(s, dir, "documents").filter(col("doc_id") < 5)
           .select(col("doc_id").as("query_id"), col("text").as("qtext")),
         k = 10)),
@@ -3336,21 +2878,21 @@ object SparkEntry {
     // artifact move): one long per corpus vector scans, bounded exact
     // re-rank — value-identical to the inline derivation (deterministic
     // md5 hyperplanes; spec-pinned), so the oracle is unchanged.
-    "k9_binary_topk" -> ((s, dir) =>
+    "k9_binary_topk" -> staged(k8Index)((s, dir) =>
       graft.operators.VectorIndex.binarySearch(
-        s, k8IndexDir(s, dir), t(s, dir, "embeddings"),
+        s, k8Index.get((s, dir)), t(s, dir, "embeddings"),
         queryIds = Seq(0L, 1L, 2L), k = 10)),
     // Scalar-quantized ANN (SQ8): per-dimension affine uint8 codes from an
     // integer-exact min/max scan, asymmetric full-precision-query scoring
     // against the dequantized corpus, bounded shortlist, exact re-rank —
     // the 8-bit memory tier between k9 (1-bit) and k4 (PQ).
-    "k17_sq8_topk" -> ((s, dir) =>
+    "k17_sq8_topk" -> Entry((s, dir) =>
       graft.operators.Similarity.sq8TopKCosine(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 10)),
     // MMR diversified top-k: greedy lambda-weighted marginal relevance over
     // the k1 shortlist — answers close to the query AND spread apart; the
     // re-ranker RAG stacks run after ANN.
-    "k11_mmr_topk" -> ((s, dir) =>
+    "k11_mmr_topk" -> Entry((s, dir) =>
       graft.operators.Similarity.mmrTopKCosine(
         t(s, dir, "embeddings"), queryIds = Seq(0L, 1L, 2L), k = 5)),
     // Progressive refinement cascade: binary Hamming (200) -> integer ADC
@@ -3361,26 +2903,26 @@ object SparkEntry {
     // binary stage-1 map-only, ADC stage-2 against the persisted PQ codes,
     // exact re-rank — value-identical to the inline cascade (deterministic
     // training; spec-pinned), so the oracle is unchanged.
-    "k10_cascade_topk" -> ((s, dir) =>
+    "k10_cascade_topk" -> staged(k8Index)((s, dir) =>
       graft.operators.VectorIndex.cascadeSearch(
-        s, k8IndexDir(s, dir), t(s, dir, "embeddings"),
+        s, k8Index.get((s, dir)), t(s, dir, "embeddings"),
         queryIds = Seq(0L, 1L, 2L), k = 10)),
     // Integer-exact PageRank over the kNN graph (3 power iterations) —
     // centrality as a document-importance prior (crawl-curation axis).
-    "g1_pagerank" -> ((s, dir) => {
+    "g1_pagerank" -> staged(g1Edges)((s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.operators.Graph.pageRank(
-        s.read.parquet(g1EdgesDir(s, dir)),
+        s.read.parquet(g1Edges.get((s, dir))),
         graft.operators.Similarity.asVectors(emb).select("id"),
         iterations = 3)
     }),
     // Personalized PageRank: teleport mass concentrated on the query seed
     // set — graph proximity from the seeds, the related-document /
     // graph-re-ranking score. Same edges, same integer iteration.
-    "g2_personalized_pagerank" -> ((s, dir) => {
+    "g2_personalized_pagerank" -> staged(g1Edges)((s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.operators.Graph.personalizedPageRank(
-        s.read.parquet(g1EdgesDir(s, dir)),
+        s.read.parquet(g1Edges.get((s, dir))),
         graft.operators.Similarity.asVectors(emb).select("id"),
         seeds = Seq(0L, 1L, 2L),
         iterations = 3)
@@ -3388,14 +2930,14 @@ object SparkEntry {
     // ---- §2.1/§2.3 catalog + CSV semantics ----
     // DESCRIBE parity: ClickHouse-ish type names from the parquet schema
     // (rows-only check: DuckDB has no equivalent type-name surface).
-    "c3_describe" -> ((s, dir) => {
+    "c3_describe" -> Entry((s, dir) => {
       import s.implicits._
       t(s, dir, "lineitem").schema.fields.toSeq
         .map(f => (f.name, graft.core.Types.toExternalName(f.dataType)))
         .toDF("col_name", "col_type")
     }),
     // All-string CSV round-trip (S1+S5): parquet → CSV → all-string read.
-    "s1_csv_roundtrip" -> ((s, dir) => {
+    "s1_csv_roundtrip" -> Entry((s, dir) => {
       val out = graft.core.TempDirs.create("graft_csv_rt") + "/nation"
       val src = t(s, dir, "nation")
       graft.sources.CsvIngest.writeCsv(src, out)
@@ -3403,7 +2945,7 @@ object SparkEntry {
         .select("n_nationkey", "n_name", "n_regionkey")
     }),
     // C1 — list tables (temp views of the sf "database"), sorted, cap 1000.
-    "c1_list_tables" -> ((s, dir) => {
+    "c1_list_tables" -> Entry((s, dir) => {
       Tables.registerAll(s, dir)
       val names = graft.catalog.Catalog.listTempViews(s)
       s.createDataFrame(
@@ -3412,7 +2954,7 @@ object SparkEntry {
     }),
     // C2 — existence probe: one registered table, one absent (404 in the
     // reference, main.py:134-139); exists rendered as 0/1 for a stable oracle.
-    "c2_table_exists" -> ((s, dir) => {
+    "c2_table_exists" -> Entry((s, dir) => {
       Tables.registerAll(s, dir)
       import s.implicits._
       Seq("lineitem", "zz_missing")
@@ -3420,10 +2962,10 @@ object SparkEntry {
         .toDF("table_name", "exists_flag")
     }),
     // C4 — connectivity probe (SELECT 1, main.py:310-328).
-    "c4_health" -> ((s, _) => s.sql("SELECT 1 AS ok")),
+    "c4_health" -> Entry((s, _) => s.sql("SELECT 1 AS ok")),
     // S6 — JSONL round-trip: parquet → JSON lines → schema'd read (typed,
     // single pass, no inference job).
-    "s6_jsonl_roundtrip" -> ((s, dir) => {
+    "s6_jsonl_roundtrip" -> Entry((s, dir) => {
       val out = graft.core.TempDirs.create("graft_jsonl_rt") + "/nation"
       val src = t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
       graft.sources.JsonIngest.writeJsonl(src, out)
@@ -3432,7 +2974,7 @@ object SparkEntry {
     // S7 — ORC interchange roundtrip (columnar: pushdown reaches the stripe
     // reader); the read-back goes through the footer-schema path, proving
     // the sink wrote a self-describing container.
-    "s7_orc_roundtrip" -> ((s, dir) => {
+    "s7_orc_roundtrip" -> Entry((s, dir) => {
       val out = graft.core.TempDirs.create("graft_orc_rt") + "/customer"
       val src = t(s, dir, "customer")
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
@@ -3444,7 +2986,7 @@ object SparkEntry {
     // header schema, by-name evolution; the read-back goes through an
     // EXPLICIT schema (the schema-on-read contract) so a drifted upstream
     // writer surfaces as null-fill, never a layout corruption.
-    "s9_avro_roundtrip" -> ((s, dir) => {
+    "s9_avro_roundtrip" -> Entry((s, dir) => {
       val out = graft.core.TempDirs.create("graft_avro_rt") + "/supplier"
       val src = t(s, dir, "supplier")
         .select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
@@ -3455,7 +2997,7 @@ object SparkEntry {
     // FileFormat: part names carry markup-significant characters
     // (&, <, quotes in p_name/p_comment rarely, but p_type reliably has
     // none — the escaping law is spec-pinned; the key gates VALUES)
-    "s10_xml_roundtrip" -> ((s, dir) => {
+    "s10_xml_roundtrip" -> Entry((s, dir) => {
       val out = graft.core.TempDirs.create("graft_xml_rt") + "/part"
       val src = t(s, dir, "part")
         .select("p_partkey", "p_name", "p_type", "p_retailprice")
@@ -3469,7 +3011,7 @@ object SparkEntry {
     // re-writing old batches is off the table — the reader, not a backfill,
     // reconciles. (mergeSchema is an explicit opt-in: it footer-reads every
     // batch, so steady-state reads pass the reconciled schema instead.)
-    "s8_schema_evolution" -> ((s, dir) => {
+    "s8_schema_evolution" -> Entry((s, dir) => {
       val root = graft.core.TempDirs.create("graft_schema_evo")
       val src = t(s, dir, "nation")
       src.select("n_nationkey", "n_name")
@@ -3480,7 +3022,7 @@ object SparkEntry {
     }),
     // S3+S4 — the import flow end-to-end: parquet → CSV → all-string read →
     // createIfNotExists + append (importInto) → scan the managed table.
-    "s3_import_roundtrip" -> ((s, dir) => {
+    "s3_import_roundtrip" -> Entry((s, dir) => {
       val out = graft.core.TempDirs.create("graft_import_rt") + "/nation"
       val src = t(s, dir, "nation")
       graft.sources.CsvIngest.writeCsv(src, out)
@@ -3495,6 +3037,10 @@ object SparkEntry {
       s.table(table).select("n_nationkey", "n_name", "n_regionkey")
     })
   )
+
+  /** Every entry's query, by key. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map { case (name, e) => name -> e.run }
 
   /** Delete a managed table's leftover warehouse directory (from a prior JVM
     * whose in-memory catalog is gone) so CREATE doesn't trip over it.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiling main for the streaming replay block (not part of the
   * driver contract; kept out of Bench/Verify). Runs each replay shape twice
   * in one JVM to separate first-run JIT/staging cost from steady-state.
@@ -10,12 +8,8 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.core.Engine.session(
+      master = Some(s"local[$cpus]"), shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     def time(name: String)(f: => graft.streaming.Replayed): Unit = {
       val t0 = System.nanoTime()

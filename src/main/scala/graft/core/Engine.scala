@@ -41,7 +41,7 @@ object Engine {
     master.fold(b)(b.master).getOrCreate()
   }
 
-  /** Drop the cross-query pipeline memos and any operator-persisted blocks
+  /** Drop every [[Memo]] and any operator-persisted blocks
     * — the cached state graft operators deliberately leave behind (lazy
     * return frames can't know when their consumer is done; see Dedup's
     * persist notes). Called by [[shutdown]]; also callable alone between
@@ -56,12 +56,10 @@ object Engine {
     * true multi-session host must scope eviction itself.
     */
   def releaseCachedState(spark: SparkSession): Unit = {
-    graft.SparkEntry.invalidateMemos(spark)
-    // staged scratch copies (streaming replay sources, partitioned-layout
-    // tables) are JVM-wide memos that survive any session — reclaim their
-    // disk here rather than at JVM exit; same context-wide caveat as above
-    graft.streaming.EventsStream.releaseStaged()
-    PartitionedTables.releaseStaged()
+    // every memo in the JVM: pipeline checkpoints, staged artifacts and
+    // staged scratch copies, whose dirs are deleted now rather than at JVM
+    // exit; same context-wide caveat as above
+    Memo.releaseAll()
     try spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     catch { case _: Exception => () } // context may already be stopped

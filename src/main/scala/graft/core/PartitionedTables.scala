@@ -22,20 +22,20 @@ import org.apache.spark.sql.functions._
   */
 object PartitionedTables {
 
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Root of the date-partitioned copy of `dir`/events.parquet (staged on
-    * first use, memoized per JVM). One file per partition: `repartition` on
-    * the partition column before the write, so a 30-day window is 30 files,
-    * not 30 × shuffle-partitions splinters (the classic small-file trap).
+  /** The date-partitioned copy of `dir`/events.parquet, staged on first
+    * use per (session, dir) and deleted on [[Memo.releaseAll]]. One file
+    * per partition: `repartition` on the partition column before the
+    * write, so a 30-day window is 30 files, not 30 × shuffle-partitions
+    * splinters (the classic small-file trap).
     */
+  val stagedEventsByDate: Memo[(SparkSession, String), String] =
+    Memo.dir("graft_part_events_") {
+      case ((spark, dir), out) => writePartitioned(spark, dir, out)
+    }
+
+  /** Root of the staged date-partitioned copy of `dir`/events.parquet. */
   def eventsByDateRoot(spark: SparkSession, dir: String): String =
-    staged.computeIfAbsent(dir, _ => {
-      val out = TempDirs.create("graft_part_events_")
-      writePartitioned(spark, dir, out)
-      out
-    })
+    stagedEventsByDate.get((spark, dir))
 
   /** Write the date-partitioned copy of `dir`/events.parquet under `out`
     * (the memoized staging above, exposed so callers — and the retention
@@ -46,23 +46,6 @@ object PartitionedTables {
       .withColumn("event_date", to_date(col("ts")))
       .repartition(col("event_date"))
       .write.partitionBy("event_date").mode("overwrite").parquet(out)
-
-  /** Number of staged partitioned copies currently memoized (diagnostic —
-    * Engine release hooks are pinned empty by EngineSpec).
-    */
-  def stagedCount: Int = staged.size
-
-  /** Drop every staged partitioned copy and reclaim its scratch space now
-    * (otherwise reclaimed only at JVM exit). Outstanding frames over a
-    * dropped copy become unreadable — callers release between workloads,
-    * not mid-query (Engine.releaseCachedState's existing contract).
-    */
-  def releaseStaged(): Unit = {
-    // values() is a live view — copy before clear or there is nothing to drop
-    val paths = new java.util.ArrayList(staged.values())
-    staged.clear()
-    paths.forEach(TempDirs.drop(_))
-  }
 
   /** The partitioned events table. `event_date` is a partition column —
     * predicates on it prune directories, not rows.

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -130,55 +131,45 @@ object EventsStream {
     ss
   }
 
+  /** Key of a staged copy. Staged copies are plain files, shared by every
+    * session in the JVM (each replay runs on its own cloned session), so
+    * the session that writes a copy rides along but is not part of the key.
+    */
+  private final case class Staging(dir: String, slice: String, n: Int)(
+      val spark: SparkSession)
+
   /** Stage `dir`/events.parquet as `n` TIME-ORDERED parquet files (ascending
     * disjoint ts ranges, ascending modification times) under a scratch dir,
-    * memoized per (dir, n) for the JVM. Streaming the staged copy with
+    * memoized per (dir, n) until released. Streaming the staged copy with
     * `maxFilesPerTrigger=1` yields one micro-batch per file — real
     * incremental state — while keeping every replay deterministic:
     * time-ordered files mean the watermark after batch k is always behind
     * every row of batch k+1, so no row is ever late-dropped and the final
     * aggregate equals the single-batch (and batch-mode) answer exactly.
     */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+  private def stagedEventsCopy(
+      xform: DataFrame => DataFrame): Memo[Staging, String] =
+    Memo.dir[Staging]("graft_stream_staged_", fast = true) {
+      case (key @ Staging(dir, _, n), out) =>
+        val spark = key.spark
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        // stage a NORMALIZED copy (ts → canonical µs TimestampType via the
+        // shared batch-path normalizer) so the staged schema is ONE fixed
+        // shape — [[stagedSchema]] — regardless of which physical timestamp
+        // unit the source file carries
+        xform(graft.core.Tables.normalizeEventsTs(
+            spark.read.parquet(s"$dir/events.parquet")))
+          .repartitionByRange(n, col("ts"))
+          .write.mode("overwrite").parquet(out)
+        // time-ordered files => the watermark after batch k is behind every
+        // row of batch k+1 (see doc above)
+        orderStagedFiles(out)
+    }
 
-  /** Number of staged source copies currently memoized (diagnostic —
-    * Engine release hooks are pinned empty by EngineSpec).
-    */
-  def stagedCount: Int = stagedDirs.size
+  private val stagedEvents = stagedEventsCopy(identity)
 
-  /** Drop every staged source copy and reclaim its scratch space now
-    * (otherwise reclaimed only at JVM exit). Replays in flight over a
-    * dropped copy fail — release between workloads (the
-    * Engine.releaseCachedState contract).
-    */
-  def releaseStaged(): Unit = {
-    // values() is a live view — copy before clear or there is nothing to drop
-    val paths = new java.util.ArrayList(stagedDirs.values())
-    stagedDirs.clear()
-    paths.forEach(graft.core.TempDirs.drop(_))
-  }
-
-  private def stagedEventsDir(
-      spark: SparkSession, dir: String, n: Int,
-      variant: String = "",
-      xform: DataFrame => DataFrame = identity): String =
-    stagedDirs.computeIfAbsent((s"$dir#$variant", n), _ => {
-      val out = tempDir("graft_stream_staged_")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // stage a NORMALIZED copy (ts → canonical µs TimestampType via the
-      // shared batch-path normalizer) so the staged schema is ONE fixed
-      // shape — [[stagedSchema]] — regardless of which physical timestamp
-      // unit the source file carries
-      xform(graft.core.Tables.normalizeEventsTs(
-          spark.read.parquet(s"$dir/events.parquet")))
-        .repartitionByRange(n, col("ts"))
-        .write.mode("overwrite").parquet(out)
-      // time-ordered files => the watermark after batch k is behind every
-      // row of batch k+1 (see doc above)
-      orderStagedFiles(out)
-      out
-    })
+  private val stagedEventsWithDups = stagedEventsCopy(
+    raw => raw.unionAll(raw.filter(col("event_id") % 7 === 0)))
 
   /** Schema of the hourly aggregate frames, for reading the sink output back
     * without inference — a zero-batch run leaves the sink dir empty, where
@@ -191,7 +182,7 @@ object EventsStream {
     StructField("value_milli", LongType)))
 
   /** Canonical schema of the STAGED events copies: ts already normalized to
-    * a microsecond TimestampType at staging time (see [[stagedEventsDir]]),
+    * a microsecond TimestampType at staging time (see [[stagedEventsCopy]]),
     * so read-back never re-assumes the original file's physical unit — the
     * round-9 lesson: a hardcoded nanos-long read-back schema silently
     * misinterpreted a micros staged copy 1000× too small.
@@ -228,7 +219,7 @@ object EventsStream {
     */
   def readEventsStaged(spark: SparkSession, dir: String): DataFrame = {
     val n = spark.conf.get(ReplayFilesConf, "2").toInt
-    val staged = stagedEventsDir(spark, dir, n)
+    val staged = stagedEvents.get(Staging(dir, "", n)(spark))
     spark.readStream
       .schema(stagedSchema)
       .option("pathGlobFilter", "part-*")
@@ -244,8 +235,7 @@ object EventsStream {
     */
   def readEventsStagedWithDups(spark: SparkSession, dir: String): DataFrame = {
     val n = spark.conf.get(ReplayFilesConf, "2").toInt
-    val staged = stagedEventsDir(spark, dir, n, variant = "dup7",
-      xform = raw => raw.unionAll(raw.filter(col("event_id") % 7 === 0)))
+    val staged = stagedEventsWithDups.get(Staging(dir, "", n)(spark))
     spark.readStream
       .schema(stagedSchema)
       .option("pathGlobFilter", "part-*")
@@ -954,6 +944,25 @@ object EventsStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** `n` id-ordered staged files holding the `filterSql` slice of one sf
+    * table (the streaming twin of the events staging: no event-time column,
+    * so files order by id and mtimes pin the processing order).
+    */
+  private def stagedSlice(table: String, idCol: String, prefix: String) =
+    Memo.dir[Staging](prefix, fast = true) {
+      case (key @ Staging(dir, filterSql, n), out) =>
+        key.spark.read.parquet(s"$dir/$table.parquet")
+          .filter(expr(filterSql))
+          .repartitionByRange(n, col(idCol))
+          .write.mode("overwrite").parquet(out)
+        orderStagedFiles(out)
+    }
+
+  private val stagedDocs = stagedSlice("documents", "doc_id", "graft_stream_docs_")
+
+  private val stagedEmbeddings =
+    stagedSlice("embeddings", "vec_id", "graft_stream_emb_")
+
   /** Multi-batch streaming source over a filtered slice of the documents
     * table: `n` id-ordered staged files, one micro-batch each — the
     * document-ingest twin of [[readEventsStaged]] (no event-time column, so
@@ -961,15 +970,7 @@ object EventsStream {
     */
   def readDocsStaged(spark: SparkSession, dir: String, filterSql: String): DataFrame = {
     val n = spark.conf.get(ReplayFilesConf, "2").toInt
-    val staged = stagedDirs.computeIfAbsent((s"$dir#docs:$filterSql", n), _ => {
-      val out = tempDir("graft_stream_docs_")
-      spark.read.parquet(s"$dir/documents.parquet")
-        .filter(expr(filterSql))
-        .repartitionByRange(n, col("doc_id"))
-        .write.mode("overwrite").parquet(out)
-      orderStagedFiles(out)
-      out
-    })
+    val staged = stagedDocs.get(Staging(dir, filterSql, n)(spark))
     spark.readStream
       .schema(docsSchema)
       .option("pathGlobFilter", "part-*")
@@ -989,15 +990,7 @@ object EventsStream {
     */
   def readEmbeddingsStaged(spark: SparkSession, dir: String, filterSql: String): DataFrame = {
     val n = spark.conf.get(ReplayFilesConf, "2").toInt
-    val staged = stagedDirs.computeIfAbsent((s"$dir#emb:$filterSql", n), _ => {
-      val out = tempDir("graft_stream_emb_")
-      spark.read.parquet(s"$dir/embeddings.parquet")
-        .filter(expr(filterSql))
-        .repartitionByRange(n, col("vec_id"))
-        .write.mode("overwrite").parquet(out)
-      orderStagedFiles(out)
-      out
-    })
+    val staged = stagedEmbeddings.get(Staging(dir, filterSql, n)(spark))
     spark.readStream
       .schema(embeddingsSchema)
       .option("pathGlobFilter", "part-*")
@@ -1433,6 +1426,35 @@ object EventsStream {
     batchCount(q)
   }
 
+  private val stagedCutoff =
+    Memo.dir[Staging]("graft_stream_staged_", fast = true) {
+      case (key @ Staging(dir, nanos, _), out) =>
+        val (spark, cutoffNanos) = (key.spark, nanos.toLong)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        // normalized at staging like stagedEventsCopy; the nanos cutoff (API
+        // kept in the source's native unit) compares against canonical µs
+        val raw = graft.core.Tables.normalizeEventsTs(
+          spark.read.parquet(s"$dir/events.parquet"))
+        val cutoff = timestamp_micros(lit(Math.floorDiv(cutoffNanos, 1000L)))
+        def writeOne(df: DataFrame, name: String): Unit = {
+          val tmp = tempDir("graft_stream_cutpart_")
+          df.coalesce(1).write.mode("overwrite").parquet(tmp)
+          // a cutoff putting every row on one side leaves the other side's
+          // write with zero tasks and no part file — that side simply stages
+          // nothing (one micro-batch total; the st14 reader's single-version
+          // guard owns that case)
+          new java.io.File(tmp).listFiles()
+            .find(_.getName.startsWith("part-"))
+            .foreach(part => java.nio.file.Files.move(
+              part.toPath, new java.io.File(out, name).toPath,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+        }
+        new java.io.File(out).mkdirs()
+        writeOne(raw.filter(col("ts") < cutoff), "part-00000-pre.parquet")
+        writeOne(raw.filter(col("ts") >= cutoff), "part-00001-post.parquet")
+        orderStagedFiles(out)
+    }
+
   /** Two-batch staged events stream split at an EXPLICIT ts cutoff (nanos):
     * file 0 = rows strictly before the cutoff, file 1 = the rest, names and
     * mtimes pinned so batch order is fully deterministic — unlike the
@@ -1443,33 +1465,7 @@ object EventsStream {
     */
   def readEventsStagedCutoff(
       spark: SparkSession, dir: String, cutoffNanos: Long): DataFrame = {
-    val staged = stagedDirs.computeIfAbsent((s"$dir#cut$cutoffNanos", 2), _ => {
-      val out = tempDir("graft_stream_staged_")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // normalized at staging like stagedEventsDir; the nanos cutoff (API
-      // kept in the source's native unit) compares against canonical µs
-      val raw = graft.core.Tables.normalizeEventsTs(
-        spark.read.parquet(s"$dir/events.parquet"))
-      val cutoff = timestamp_micros(lit(Math.floorDiv(cutoffNanos, 1000L)))
-      def writeOne(df: DataFrame, name: String): Unit = {
-        val tmp = tempDir("graft_stream_cutpart_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        // a cutoff putting every row on one side leaves the other side's
-        // write with zero tasks and no part file — that side simply stages
-        // nothing (one micro-batch total; the st14 reader's single-version
-        // guard owns that case)
-        new java.io.File(tmp).listFiles()
-          .find(_.getName.startsWith("part-"))
-          .foreach(part => java.nio.file.Files.move(
-            part.toPath, new java.io.File(out, name).toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING))
-      }
-      new java.io.File(out).mkdirs()
-      writeOne(raw.filter(col("ts") < cutoff), "part-00000-pre.parquet")
-      writeOne(raw.filter(col("ts") >= cutoff), "part-00001-post.parquet")
-      orderStagedFiles(out)
-      out
-    })
+    val staged = stagedCutoff.get(Staging(dir, cutoffNanos.toString, 2)(spark))
     spark.readStream
       .schema(stagedSchema)
       .option("pathGlobFilter", "part-*")
