@@ -76,20 +76,26 @@ object ManifestTable {
     esc
   }
 
-  /** The given partitions' full line sets in a manifest state — the
-    * optimistic-concurrency conflict witness: a publisher that loses the
-    * rename race compares the partitions it rewrote between the snapshot
-    * it derived from and the winner's state; any difference means its
-    * replacement rows were computed from superseded inputs (a lost
-    * update), which no manifest-level retry can repair.
+  /** The partitions among `parts` whose live lines differ between `base`
+    * (the snapshot a publisher derived from) and `cur` (the head it is
+    * about to publish over) — the touched-partition conflict witness of
+    * [[commit]], [[merge]], [[deleteRows]] and [[dropPartitions]]: any
+    * difference means the publisher's replacement rows (or its drop) were
+    * computed from superseded inputs (a lost update), which no
+    * manifest-level retry can repair.
     */
-  private def touchedLineSets(
-      st: Option[ManifestState], parts: Seq[String]): Map[String, Set[String]] =
-    st match {
-      case None => Map.empty
-      case Some(s) =>
-        parts.map(p => p -> s.lines.filter(_.startsWith(p + "/")).toSet).toMap
-    }
+  private def changedPartitions(
+      base: Snapshot, cur: Snapshot, parts: Seq[String]): Seq[String] = {
+    def linesUnder(s: Snapshot, p: String) = s.lines.filter(_.under(p)).toSet
+    if (cur eq base) Nil
+    else parts.filter(p => linesUnder(base, p) != linesUnder(cur, p))
+  }
+
+  /** True iff `s` already carries ingest batch `b` or a later one — the
+    * exactly-once fence; a never-committed table fences nothing.
+    */
+  private def fenced(s: Snapshot, b: Long): Boolean =
+    s.version >= 0 && b <= s.batch
 
   /** The LEAF partition directory of a manifest-relative file path —
     * `a=x/b=y` for `a=x/b=y/file`, `part=b0` for `part=b0/file`: the
@@ -161,74 +167,191 @@ object ManifestTable {
     */
   def readManifest(
       spark: SparkSession, root: String, version: Long): (Seq[String], Long) = {
-    val st = readManifestLines(spark, root, version)
-    (st.lines.map(_.split('|')(0)), st.batch)
+    val st = readSnapshot(spark, root, version)
+    (st.paths, st.batch)
   }
 
-  /** One version's full manifest state: raw lines (stats suffixes intact),
-    * producing batch id, registered zone-map columns, and the table's
-    * recorded DATA schema (None on tables committed before schema
-    * versioning — those keep the original infer-from-files read).
+  /** The manifest HEADER — line 1 of `v<N>.json` — and its one codec:
+    * [[render]] writes every header, [[Header.parse]] reads every one.
+    * Fields beyond `version`/`batch` are additive, so every older header
+    * still parses: round 18's commit metadata (`op`, publish time `ts`)
+    * and operation metrics (`nf` live files, `nr` live rows), round 19's
+    * `opKey` (the keyed verbs' key columns — the CDF row-image pairing
+    * key), round 20's `restoredFrom`. The zone-map registration is
+    * (name, type) pairs, type ∈ {long, string}: a single long column
+    * renders as the original `"statsCol":"c"` (the U5 format pin), any
+    * other registration as `"statsCols":"a:long,b:string"`. The data
+    * schema rides as `schemaB64` (base64 of `StructType.json` — schema
+    * JSON holds quotes and arbitrary names, so it cannot ride inline) and
+    * stays encoded in the header; [[readSnapshot]] decodes it.
     */
-  private final case class ManifestState(
-      lines: Seq[String],
+  private[graft] final case class Header(
+      version: Long,
       batch: Long,
-      statsCols: Seq[(String, String)],
-      schema: Option[org.apache.spark.sql.types.StructType],
       op: Option[String] = None,
-      ts: Option[Long] = None)
+      opKey: Seq[String] = Nil,
+      ts: Option[Long] = None,
+      statsCols: Seq[(String, String)] = Nil,
+      schemaB64: Option[String] = None,
+      restoredFrom: Option[Long] = None,
+      nf: Option[Int] = None,
+      nr: Option[Long] = None) {
+    def render: String = Seq(
+      Some(s""""version":$version"""),
+      Some(s""""batch":$batch"""),
+      op.map(o => s""""op":"$o""""),
+      Some(opKey).filter(_.nonEmpty)
+        .map(k => s""""opKey":"${k.mkString(",")}""""),
+      ts.map(t => s""""ts":$t"""),
+      statsCols match {
+        case Nil => None
+        case Seq((c, "long")) => Some(s""""statsCol":"$c"""")
+        case cols => Some(s""""statsCols":"${
+          cols.map(x => x._1 + ":" + x._2).mkString(",")}"""")
+      },
+      schemaB64.map(s => s""""schemaB64":"$s""""),
+      restoredFrom.map(v => s""""restoredFrom":$v"""),
+      nf.map(n => s""""nf":$n"""),
+      nr.map(n => s""""nr":$n""")).flatten.mkString("{", ",", "}")
+  }
 
-  /** Raw manifest lines + batch + the registered zone-map columns as
-    * (name, type) pairs, type ∈ {long, string} — the carry-forward and
-    * pruning shape. A single long column is written in the original
-    * `"statsCol"` header (the U5 format pin); N typed columns use
-    * `"statsCols":"a:long,b:string"`; both are read here. The data schema
-    * travels as `"schemaB64"` (base64 of `StructType.json` — schema JSON
-    * contains quotes and arbitrary names, so it cannot ride inline in the
-    * one-line header).
+  private[graft] object Header {
+    // the header is one flat JSON object of string and integer values
+    private val Field = """"(\w+)":(?:"([^"]+)"|(-?\d+))""".r
+
+    def parse(line: String): Header = {
+      val f = Field.findAllMatchIn(line)
+        .map(m => m.group(1) -> Option(m.group(2)).getOrElse(m.group(3)))
+        .toMap
+      def num(k: String) = f.get(k).map(_.toLong)
+      def required(k: String) = num(k).getOrElse(throw new IllegalStateException(
+        s"malformed manifest header (no $k): $line"))
+      Header(
+        version = required("version"),
+        batch = required("batch"),
+        op = f.get("op"),
+        opKey = f.get("opKey").map(_.split(',').toSeq).getOrElse(Nil),
+        ts = num("ts"),
+        statsCols = f.get("statsCols") match {
+          case Some(cols) => cols.split(',').toSeq.map { e =>
+            e.split(':') match {
+              case Array(n, t) if t == "long" || t == "string" => (n, t)
+              case _ => throw new IllegalStateException(
+                s"malformed statsCols entry '$e' in manifest header: $line")
+            }
+          }
+          case None => f.get("statsCol").map(c => Seq((c, "long"))).getOrElse(Nil)
+        },
+        schemaB64 = f.get("schemaB64"),
+        restoredFrom = num("restoredFrom"),
+        nf = num("nf").map(_.toInt),
+        nr = num("nr"))
+    }
+
+    def encodeSchema(s: org.apache.spark.sql.types.StructType): String =
+      java.util.Base64.getEncoder.encodeToString(s.json.getBytes("UTF-8"))
+
+    def decodeSchema(b64: String): org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(new String(
+        java.util.Base64.getDecoder.decode(b64), "UTF-8"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+
+  /** One manifest FILE LINE, parsed once when its manifest is read:
+    * `path[|%#bytes:rows][|min|max…]`. Round 16: freshly-written lines
+    * carry a self-describing `%#<bytes>:<rows>` FILE-META field right
+    * after the path, so scan planning (DSv2 `estimateStatistics`, bin
+    * packing) and maintenance sizing ([[optimize]]/
+    * [[optimizeRewritePartitions]], bloom tiers) need ZERO per-file
+    * filesystem calls beyond the one manifest read — at 10⁵ files on an
+    * object store the per-file `getFileStatus` probe was minutes of plan
+    * time. Carried pre-round-16 lines have no meta (readers fall back to
+    * the status probe), so mixed manifests parse uniformly. The `%#` tag
+    * is UNAMBIGUOUS against every legal stats field: [[encStat]] output
+    * never has a non-hex character after '%', and long stats are decimal
+    * — neither can begin `%#`.
+    *
+    * `raw` is the line verbatim: the entry's identity (equality, the
+    * conflict witnesses' sets) and what a carried line re-publishes, so
+    * carried lines stay byte-identical. [[dataFileLine]] writes new ones.
     */
-  private def readManifestLines(
-      spark: SparkSession, root: String,
-      version: Long): ManifestState = {
+  private[graft] final case class FileLine(raw: String) {
+    private val fields = raw.split('|')
+    val path: String = fields(0)
+    /** The file's (bytes, rows), on lines new enough to carry them. */
+    val meta: Option[(Long, Long)] =
+      if (fields.length >= 2 && fields(1).startsWith("%#"))
+        fields(1).drop(2).split(':') match {
+          case Array(b, r) => scala.util.Try((b.toLong, r.toLong)).toOption
+          case _ => None
+        }
+      else None
+    /** The zone-map fields, a (min, max) pair per registered column in
+      * registration order. split drops TRAILING empty fields and
+      * pre-migration lines cover a PREFIX of the registration, so a pair
+      * past the end reads as empty (no stats).
+      */
+    val stats: IndexedSeq[String] = scala.collection.immutable.ArraySeq
+      .unsafeWrapArray(fields).drop(if (meta.isDefined) 2 else 1)
+    /** The recorded (min, max) of registered column `i` — ("", "") when
+      * the line carries none.
+      */
+    def bounds(i: Int): (String, String) =
+      (stats.lift(2 * i).getOrElse(""), stats.lift(2 * i + 1).getOrElse(""))
+    /** True iff the file lives under partition directory `dir`. */
+    def under(dir: String): Boolean = path.startsWith(dir + "/")
+  }
+
+  /** One committed version: its header, its live file lines and its data
+    * schema — the recorded one (None on tables committed before schema
+    * versioning — those keep the original infer-from-files read), or the
+    * inferred one in a [[scanState]].
+    */
+  private[graft] final case class Snapshot(
+      version: Long,
+      header: Header,
+      lines: Seq[FileLine],
+      schema: Option[org.apache.spark.sql.types.StructType]) {
+    def batch: Long = header.batch
+    def statsCols: Seq[(String, String)] = header.statsCols
+    def paths: Seq[String] = lines.map(_.path)
+  }
+
+  private[graft] object Snapshot {
+    /** The never-committed table (version -1, batch -1, no files) — and
+      * the empty snapshot a DECLARED-but-uncommitted DSv2 table scans
+      * under its DDL schema (round 16's SQL creation lifecycle).
+      */
+    def empty(schema: Option[org.apache.spark.sql.types.StructType]): Snapshot =
+      Snapshot(-1L, Header(-1L, -1L), Nil, schema)
+  }
+
+  /** Version `version`'s snapshot, read and parsed once. Throws if its
+    * manifest is missing (never committed, or vacuumed away) or its header
+    * is malformed — a corrupt `schemaB64` included.
+    */
+  private def readSnapshot(
+      spark: SparkSession, root: String, version: Long): Snapshot = {
     val p = new Path(manifestDir(root), s"v$version.json")
     val in = fs(spark, p).open(p)
     val text =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    // line 1: {"version":N,"batch":B[,"statsCol":"c"|"statsCols":"a:long,b:string"]};
-    // following lines: one rel path each, optionally stats-suffixed
-    val lines = text.linesIterator.toList
-    val batch = "\"batch\":(-?\\d+)".r.findFirstMatchIn(lines.head)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"malformed manifest header at $p: ${lines.head}"))
-    val statsCols: Seq[(String, String)] =
-      "\"statsCols\":\"([^\"]+)\"".r.findFirstMatchIn(lines.head) match {
-        case Some(m) => m.group(1).split(',').toSeq.map { e =>
-          e.split(':') match {
-            case Array(n, t) if t == "long" || t == "string" => (n, t)
-            case _ => throw new IllegalStateException(
-              s"malformed statsCols entry '$e' at $p")
-          }
-        }
-        case None => "\"statsCol\":\"([^\"]+)\"".r
-          .findFirstMatchIn(lines.head).map(c => Seq((c.group(1), "long")))
-          .getOrElse(Seq.empty)
-      }
-    val schema = "\"schemaB64\":\"([^\"]+)\"".r
-      .findFirstMatchIn(lines.head).map { m =>
-        org.apache.spark.sql.types.DataType.fromJson(new String(
-          java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-    ManifestState(lines.tail.filter(_.nonEmpty), batch, statsCols, schema,
-      op = headerOp(lines.head), ts = headerTs(lines.head))
+    val all = text.linesIterator.toList
+    val header = Header.parse(all.head)
+    Snapshot(version, header, all.tail.filter(_.nonEmpty).map(FileLine(_)),
+      header.schemaB64.map(Header.decodeSchema))
   }
 
-  private def headerOp(header: String): Option[String] =
-    "\"op\":\"([^\"]+)\"".r.findFirstMatchIn(header).map(_.group(1))
-  private def headerTs(header: String): Option[Long] =
-    "\"ts\":(\\d+)".r.findFirstMatchIn(header).map(_.group(1).toLong)
+  /** [[readSnapshot]], except that version -1 — the head of a
+    * never-committed table — is the empty snapshot.
+    */
+  private[graft] def snapshot(
+      spark: SparkSession, root: String, version: Long): Snapshot =
+    if (version < 0) Snapshot.empty(None) else readSnapshot(spark, root, version)
+
+  private def head(spark: SparkSession, root: String): Snapshot =
+    snapshot(spark, root, currentVersion(spark, root))
 
   /** Read the latest committed version as a DataFrame (partition columns
     * like `bucket=` recovered via basePath), or None if never committed.
@@ -261,8 +384,8 @@ object ManifestTable {
     */
   def readVersionRaw(
       spark: SparkSession, root: String, version: Long): DataFrame = {
-    val st = readManifestLines(spark, root, version)
-    val files = st.lines.map(_.split('|')(0))
+    val st = readSnapshot(spark, root, version)
+    val files = st.paths
     // the recorded data schema (when present) drives the read: files
     // written before a column was added lack it physically, and parquet
     // null-fills missing columns under an explicit schema — S8's
@@ -311,10 +434,9 @@ object ManifestTable {
       fromVersion: Long, toVersion: Long): (DataFrame, DataFrame) = {
     require(fromVersion <= toVersion,
       s"changes($fromVersion, $toVersion): versions must ascend")
-    val fromSt = readManifestLines(spark, root, fromVersion)
-    val toSt = readManifestLines(spark, root, toVersion)
-    val fromFiles = fromSt.lines.map(_.split('|')(0)).toSet
-    val toFiles = toSt.lines.map(_.split('|')(0)).toSet
+    val fromFiles = readSnapshot(spark, root, fromVersion).paths.toSet
+    val toSt = readSnapshot(spark, root, toVersion)
+    val toFiles = toSt.paths.toSet
     val addedFiles = (toFiles -- fromFiles).toSeq.sorted
     val removedFiles = (fromFiles -- toFiles).toSeq.sorted
     def readSubset(files: Seq[String]): DataFrame = {
@@ -389,16 +511,9 @@ object ManifestTable {
     val versions = f.listStatus(dir).map(_.getPath.getName)
       .collect { case VersionRe(v) => v.toLong }.sorted
     versions.reverse.map { v =>
-      val h = readHeaderLine(spark, root, v)
-      val batch = "\"batch\":(-?\\d+)".r.findFirstMatchIn(h)
-        .map(_.group(1).toLong).getOrElse(-1L)
-      HistoryEntry(v, headerOp(h).getOrElse("unknown"), headerTs(h), batch,
-        numFiles = "\"nf\":(\\d+)".r.findFirstMatchIn(h)
-          .map(_.group(1).toInt),
-        numRows = "\"nr\":(\\d+)".r.findFirstMatchIn(h)
-          .map(_.group(1).toLong),
-        opKey = "\"opKey\":\"([^\"]+)\"".r.findFirstMatchIn(h)
-          .map(_.group(1).split(',').toSeq).getOrElse(Nil))
+      val h = Header.parse(readHeaderLine(spark, root, v))
+      HistoryEntry(v, h.op.getOrElse("unknown"), h.ts, h.batch,
+        numFiles = h.nf, numRows = h.nr, opKey = h.opKey)
     }.toSeq
   }
 
@@ -520,10 +635,8 @@ object ManifestTable {
     // an escaped value's files.
     val declaredParts =
       touchedValues.map(v => s"$partitionCol=${escapedPartValue(v)}")
-    var prev = currentVersion(spark, root)
-    var prevState =
-      if (prev < 0) None else Some(readManifestLines(spark, root, prev))
-    if (prevState.exists(batchId <= _.batch)) return prev
+    val start = head(spark, root)
+    if (fenced(start, batchId)) return start.version
     // the table's zone-map columns are a property of the TABLE, not of one
     // commit: a second writer registering different columns would leave
     // the manifest with suffixes meaning two different things. Validate
@@ -564,68 +677,47 @@ object ManifestTable {
           a
       }
     }
-    var effStats = effStatsFor(prevState.map(_.statsCols).getOrElse(Nil))
     // the table's recorded DATA schema evolves additively with every
     // commit (the partition column is directory-derived, never stored);
     // legacy tables without a recorded schema first INFER their base
     // schema from the carried files — see [[recordedOrInferredSchema]]
     val dataSchema = org.apache.spark.sql.types.StructType(
       touched.schema.fields.filterNot(_.name == partitionCol).toSeq)
-    def mergedSchemaFor(st: Option[ManifestState]) = evolveSchema(
-      st.flatMap(s => recordedOrInferredSchema(spark, root, s)), dataSchema)
-    var mergedSchema = mergedSchemaFor(prevState)
-    var next = prev + 1
+    def mergedSchemaFor(s: Snapshot) = evolveSchema(
+      recordedOrInferredSchema(spark, root, s), dataSchema)
+    val effStats = effStatsFor(start.statsCols)
+    mergedSchemaFor(start) // schema-conflict refusal BEFORE any file stages
     // 1. data files: write the touched partitions into a commit-private
     //    staging dir (unique names by construction), then move each file
     //    under its partition dir with a version-prefixed name. Files are
     //    never overwritten — versions share a dir but not files.
-    val (stagedParts, newFiles) =
-      stageDataFiles(f, rootPath, touched, Seq(partitionCol), next)
+    val (stagedParts, newFiles) = stageDataFiles(
+      f, rootPath, touched, Seq(partitionCol), start.version + 1)
     val touchedParts = (declaredParts ++ stagedParts).distinct
-    val myLines = statLines(spark, rootPath, newFiles, effStats)
-    // the touched partitions' lines as this derivation saw them — the
-    // conflict witness for the optimistic retry
-    val baseTouched = touchedLineSets(prevState, touchedParts)
-    beforePublish()
-    while (true) {
-      // 2. the new manifest: carry forward every untouched partition's
-      //    LINES (zone-map suffixes ride along — data files are immutable,
-      //    so a file's stats can never go stale)
-      val carried: Seq[String] = prevState match {
-        case None => Seq.empty
-        case Some(st) =>
-          st.lines.filterNot(l => touchedParts.exists(tp => l.startsWith(tp + "/")))
+    val myLines = newFiles.map(dataFileLine(spark, rootPath, _, effStats))
+    publishRetrying(spark, root, start, beforePublish) { s =>
+      // the winner carried this (or a later) batch — idempotent skip; my
+      // staged files are unreferenced and fall to vacuum
+      if (fenced(s, batchId)) Done(s.version)
+      else {
+        val conflicted = changedPartitions(start, s, touchedParts)
+        if (conflicted.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"commit of batch $batchId under $root lost its publish race to " +
+              s"a writer that modified touched partition(s) " +
+              s"${conflicted.mkString(", ")} — the replacement rows were " +
+              "derived from a superseded snapshot; recompute against the " +
+              "current snapshot and retry (staged files are unreferenced " +
+              "and vacuum-swept)")
+        // 2. the new manifest: carry forward every untouched partition's
+        //    LINES (zone-map suffixes ride along — data files are
+        //    immutable, so a file's stats can never go stale)
+        val carried = s.lines.filterNot(l => touchedParts.exists(l.under))
+        Publish("commit", batchId, effStatsFor(s.statsCols),
+          Some(Header.encodeSchema(mergedSchemaFor(s))),
+          carried ++ myLines, v => v)
       }
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, batchId, effStats, Some(mergedSchema),
-          op = "commit"),
-        carried ++ myLines)) return next
-      // lost the publish race: re-read the winning state and retry at the
-      // next slot (my staged files are already live under final names —
-      // only the manifest derivation re-runs)
-      val cur = currentVersion(spark, root)
-      val curState = readManifestLines(spark, root, cur)
-      if (batchId <= curState.batch) return cur // the winner carried this
-        // (or a later) batch — idempotent skip; my staged files are
-        // unreferenced and fall to vacuum
-      val curTouched = touchedLineSets(Some(curState), touchedParts)
-      val conflicted = touchedParts.filter(p =>
-        curTouched.getOrElse(p, Set.empty) != baseTouched.getOrElse(p, Set.empty))
-      if (conflicted.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"commit of batch $batchId under $root lost its publish race to " +
-            s"a writer that modified touched partition(s) " +
-            s"${conflicted.mkString(", ")} — the replacement rows were " +
-            "derived from a superseded snapshot; recompute against the " +
-            "current snapshot and retry (staged files are unreferenced " +
-            "and vacuum-swept)")
-      prev = cur
-      prevState = Some(curState)
-      effStats = effStatsFor(curState.statsCols)
-      mergedSchema = mergedSchemaFor(prevState)
-      next = cur + 1
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The widened type of a (recorded, committed) column pair, when the
@@ -700,11 +792,11 @@ object ManifestTable {
     */
   private def recordedOrInferredSchema(
       spark: SparkSession, root: String,
-      st: ManifestState): Option[org.apache.spark.sql.types.StructType] =
+      st: Snapshot): Option[org.apache.spark.sql.types.StructType] =
     st.schema.orElse {
       if (st.lines.isEmpty) None
       else Some(spark.read.option("mergeSchema", "true")
-        .parquet(st.lines.map(l => s"$root/${l.split('|')(0)}"): _*).schema)
+        .parquet(st.paths.map(r => s"$root/$r"): _*).schema)
     }
 
   /** Stage `touched` as partition-dir data files of version `next`: write
@@ -794,57 +886,54 @@ object ManifestTable {
     (parts.toList, newFiles.toList)
   }
 
-  /** Manifest lines for freshly-staged files: the `%#bytes:rows` file
-    * meta plus exact per-file (min, max) for the registered zone-map
-    * columns, all straight from the parquet FOOTERS the write just
-    * produced — metadata-only reads (the a22/a25 footer discipline), no
-    * data scan. A column whose footer carries no usable stats gets empty
-    * fields (readers keep the file conservatively).
+  /** One attempt of [[publishRetrying]]'s loop: end without publishing, or
+    * publish. A conflict is neither — the attempt throws it.
     */
-  private def statLines(
-      spark: SparkSession,
-      rootPath: Path,
-      newFiles: Seq[String],
-      effStats: Seq[(String, String)]): Seq[String] =
-    newFiles.map(rel => dataFileLine(spark, rootPath, rel, effStats))
+  private sealed trait Attempt[+R]
 
-  /** Manifest header. Round 18 adds COMMIT METADATA (additive — old
-    * manifests read as op/ts unknown): the producing operation's name and
-    * the wall-clock publish time, the two fields behind [[history]]
-    * (Delta's DESCRIBE HISTORY slot) and `TIMESTAMP AS OF` resolution
-    * ([[versionAtTimestamp]]).
+  /** End without publishing: fenced (the head already carries the batch)
+    * or nothing left to do.
     */
-  private def manifestHeader(
-      version: Long, batchId: Long, statsCols: Seq[(String, String)],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      op: String = "unknown",
-      opKey: Seq[String] = Nil): String =
-    s"""{"version":$version,"batch":$batchId,"op":"$op"""" +
-      // the keyed verbs RECORD their key columns (round 19): the CDF
-      // row-image pairing reads them to key-join a rewrite version's
-      // removed × added rows into update_preimage/update_postimage
-      (if (opKey.nonEmpty) s""","opKey":"${opKey.mkString(",")}"""" else "") +
-      s""","ts":${System.currentTimeMillis()}""" + (statsCols match {
-      case Nil => ""
-      case Seq((c, "long")) => s""","statsCol":"$c""""
-      case cols =>
-        s""","statsCols":"${cols.map(x => x._1 + ":" + x._2).mkString(",")}""""
-    }) + schema.map(sch =>
-      s""","schemaB64":"${java.util.Base64.getEncoder.encodeToString(
-        sch.json.getBytes("UTF-8"))}"""").getOrElse("") + "}"
+  private final case class Done[R](result: R) extends Attempt[R]
 
-  /** Publish a manifest version: attempt-private tmp write + ONE
-    * no-overwrite rename — the atomic commit point AND the
-    * optimistic-concurrency arbiter. Returns true iff THIS call created
-    * `v<version>.json`; false iff another writer already owns the slot
-    * (the loser re-reads the winning state and retries at the next slot —
-    * see [[commit]]). On `file:` schemes the arbiter is POSIX link(2)
-    * (atomic no-overwrite — RawLocal's Rename.NONE is check-then-rename
-    * and would lose a commit under true concurrency); elsewhere it is
-    * [[org.apache.hadoop.fs.FileContext]] with default `Rename.NONE`
-    * semantics: atomic rename-if-absent on HDFS — the slot where an
-    * object-store deployment plugs its conditional put.
+  /** Publish `lines` under a header of these fields at the next version
+    * slot; `onWin` maps the version won to the verb's result.
     */
+  private final case class Publish[R](
+      op: String, batch: Long, statsCols: Seq[(String, String)],
+      schemaB64: Option[String], lines: Seq[FileLine], onWin: Long => R,
+      opKey: Seq[String] = Nil) extends Attempt[R]
+
+  /** THE publish loop — the optimistic-concurrency commit (the
+    * Delta/Iceberg loop) behind every write verb. `beforePublish` fires
+    * once; then `attempt` derives the manifest from the snapshot it is
+    * handed — `start` (the head the verb planned against) first, the
+    * winning head after a lost race — and ends early ([[Done]]), refuses
+    * (`ConcurrentModificationException`: the winner changed what the verb
+    * depends on; its staged files are unreferenced and fall to [[vacuum]])
+    * or asks to [[Publish]] at head + 1. A publish that loses the version
+    * slot re-reads the head and retries: the verb's staged data files are
+    * already live under never-colliding names, so only the manifest
+    * derivation re-runs. Each verb's conflict rule lives in its attempt;
+    * this is the one place the commit protocol steps run in order.
+    */
+  private def publishRetrying[R](
+      spark: SparkSession, root: String, start: Snapshot,
+      beforePublish: () => Unit)(attempt: Snapshot => Attempt[R]): R = {
+    @scala.annotation.tailrec
+    def loop(s: Snapshot): R = attempt(s) match {
+      case Done(r) => r
+      case Publish(op, batch, statsCols, schemaB64, lines, onWin, opKey) =>
+        val next = s.version + 1
+        if (publishManifest(spark, root,
+          Header(next, batch, Some(op), opKey, statsCols = statsCols,
+            schemaB64 = schemaB64), lines)) onWin(next)
+        else loop(head(spark, root))
+    }
+    beforePublish()
+    loop(start)
+  }
+
   /** Raw-read GUARD: a non-underscore, non-parquet file in the table
     * root, planted on every publish win. A user's obvious-but-wrong
     * `spark.read.parquet(root)` then fails partition discovery LOUDLY
@@ -941,45 +1030,44 @@ object ManifestTable {
     } else renameArbiter()
   }
 
+  /** Publish `header`'s version with `lines`: attempt-private tmp write +
+    * ONE no-overwrite rename ([[publishSlot]]) — the atomic commit point
+    * AND the optimistic-concurrency arbiter. Returns true iff THIS call
+    * created `v<version>.json`; false iff another writer already owns the
+    * slot (the loser re-reads the winning state and retries at the next
+    * slot — see [[publishRetrying]]). Stamps the header's publish time
+    * (`ts`, now unless the header carries one) and operation metrics.
+    */
   private def publishManifest(
-      spark: SparkSession, root: String, version: Long,
-      header: String, lines: Seq[String]): Boolean = {
+      spark: SparkSession, root: String, header: Header,
+      lines: Seq[FileLine]): Boolean = {
     val f = fs(spark, new Path(root))
-    // OPERATION METRICS ride the header for free (round 18 — Delta's
-    // operationMetrics slot): the live file count is the line count, and
-    // when every line carries `%#` meta the live ROW count sums from
-    // them — both known at publish time, zero extra IO. Injected here so
-    // every publisher records them without threading parameters.
-    val rows = {
-      val ms = lines.map(lineFileMeta)
-      if (ms.nonEmpty && ms.forall(_.isDefined))
-        s""","nr":${ms.flatten.map(_._2).sum}"""
-      else ""
-    }
     // MONOTONIC publish stamps (round 19, ADVICE r18): ts clamps to
     // max(wallclock, previous version's ts + 1) so TIMESTAMP AS OF and
     // the feed's timestamp windows stay skew-proof — a writer with a
     // backdated clock still publishes a stamp that sorts after every
     // earlier version (one extra single-line header read per publish;
     // a vacuumed/pre-metadata predecessor clamps against nothing).
-    val headerTsClamped = {
-      val prevTs: Option[Long] =
-        if (version > 0)
-          scala.util.Try(readHeaderLine(spark, root, version - 1))
-            .toOption.flatMap(headerTs)
-        else None
-      prevTs match {
-        case Some(p) =>
-          "\"ts\":(\\d+)".r.replaceAllIn(header, m =>
-            s""""ts":${math.max(m.group(1).toLong, p + 1L)}""")
-        case None => header
-      }
-    }
-    val header2 =
-      headerTsClamped.stripSuffix("}") + s""","nf":${lines.size}""" + rows + "}"
-    val body = (header2 +: lines.sorted).mkString("\n")
-    val mDir = manifestDir(root)
-    val won = publishSlot(spark, mDir, s"v$version.json", body)
+    val prevTs: Option[Long] =
+      if (header.version > 0)
+        scala.util.Try(Header.parse(readHeaderLine(spark, root,
+          header.version - 1))).toOption.flatMap(_.ts)
+      else None
+    val ts = header.ts.getOrElse(System.currentTimeMillis())
+    // OPERATION METRICS ride the header for free (round 18 — Delta's
+    // operationMetrics slot): the live file count is the line count, and
+    // when every line carries `%#` meta the live ROW count sums from
+    // them — both known at publish time, zero extra IO. Stamped here so
+    // every publisher records them without threading parameters.
+    val metas = lines.map(_.meta)
+    val stamped = header.copy(
+      ts = Some(prevTs.fold(ts)(p => math.max(ts, p + 1L))),
+      nf = Some(lines.size),
+      nr = if (metas.nonEmpty && metas.forall(_.isDefined))
+        Some(metas.flatten.map(_._2).sum) else None)
+    val body = (stamped.render +: lines.map(_.raw).sorted).mkString("\n")
+    val won = publishSlot(spark, manifestDir(root),
+      s"v${header.version}.json", body)
     // the sentinel is best-effort bookkeeping and must NEVER influence
     // the win/lose verdict: planting it inside the arbiter's try turned
     // a transient post-publish IOException into a reported LOSS, and an
@@ -1029,10 +1117,9 @@ object ManifestTable {
     require(targetBytes > 0, "targetBytes must be positive")
     val rootPath = new Path(root)
     val f = fs(spark, rootPath)
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val st = readManifestLines(spark, root, v)
-    val (lines, statsCols) = (st.lines, st.statsCols)
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root")
+    val statsCols = st.statsCols
     // SCOPED compaction (round 18 — the Delta `OPTIMIZE t WHERE ...`
     // slot): `scope` names a partition directory PREFIX ("d=2024-01-01",
     // or a full leaf "d=2024-01-01/source=web") and only its leaves fold
@@ -1048,22 +1135,20 @@ object ManifestTable {
     // make a scoped pass clear a mask it never purged outside the scope
     // (a silently resurrected takedown).
     val dv = dvState(spark, root)
+    def inScope(leaf: String): Boolean = scope.forall(sc =>
+      leaf == sc || leaf.startsWith(sc + "/"))
     scope.foreach { sc =>
       require(dv.isEmpty,
         s"deferred deletes pending under $root — a scoped optimize " +
           "cannot purge (masked rows may live outside the scope); run " +
           "the unscoped optimize (the purge point) first")
-      require(lines.exists(l => {
-        val leaf = leafDirOf(l.split('|')(0))
-        leaf == sc || leaf.startsWith(sc + "/")
-      }), s"optimize scope '$sc' matches no live partition under $root")
+      require(st.lines.exists(l => inScope(leafDirOf(l.path))),
+        s"optimize scope '$sc' matches no live partition under $root")
     }
-    def inScope(leaf: String): Boolean = scope.forall(sc =>
-      leaf == sc || leaf.startsWith(sc + "/"))
     // the compaction unit is the LEAF partition directory (= the whole
     // partition name on single-level layouts; `a=x/b=y` on nested ones —
     // round 18: multi-level tables compact like any other)
-    val byPart = lines.groupBy(l => leafDirOf(l.split('|')(0)))
+    val byPart = st.lines.groupBy(l => leafDirOf(l.path))
       .filter { case (leaf, _) => inScope(leaf) }
     // DEFERRED-DELETE purge (see [[deleteRowsDeferred]]): partitions
     // holding masked rows are FORCED into the rewrite even when
@@ -1117,7 +1202,11 @@ object ManifestTable {
       }
     val toCompact =
       byPart.filter { case (p, ls) => ls.size > 1 || forced.contains(p) }
-    val baseLineSet0 = st.lines.toSet
+    // lines a concurrent winner landed while this pass ran: their rows
+    // were never purge-scanned, so they may keep a mask pending
+    val baseLines = st.lines.toSet
+    def winnerRisky(s: Snapshot): Boolean = winnerAddedRisky(
+      spark, root, s.lines.filterNot(baseLines), s.statsCols, masks)
     if (toCompact.isEmpty) {
       if (dv.isEmpty) return Nil
       // masks are pending but matched no physical row in THIS snapshot —
@@ -1130,38 +1219,21 @@ object ManifestTable {
       // that slipped in ahead is re-checked — if its added files could
       // hold a masked key the mask simply stays pending for the next
       // purge (never cleared from a superseded snapshot).
-      beforePublish()
-      var curSt0 = st
-      var next0 = v + 1
-      while (true) {
-        val winnerAdded = curSt0.lines.filterNot(baseLineSet0)
-        if (winnerAddedRisky(spark, root, winnerAdded, curSt0.statsCols, masks))
-          return Nil // keep the mask pending — the next purge owns it
-        if (publishManifest(spark, root, next0,
-          manifestHeader(next0, curSt0.batch, curSt0.statsCols, curSt0.schema,
-            op = "purge"),
-          curSt0.lines)) {
-          clearDvBatches(spark, root, dv)
-          return Nil
-        }
-        val cur = currentVersion(spark, root)
-        curSt0 = readManifestLines(spark, root, cur)
-        next0 = cur + 1
+      return publishRetrying(spark, root, st, beforePublish) { s =>
+        if (winnerRisky(s)) Done(Nil) // the next purge owns the mask
+        else Publish("purge", s.batch, s.statsCols, s.header.schemaB64,
+          s.lines, _ => { clearDvBatches(spark, root, dv); Nil })
       }
-      throw new IllegalStateException("unreachable")
     }
-    var next = v + 1
+    val next = st.version + 1
     val stage = new Path(rootPath,
       s"_stage-v$next-${java.util.UUID.randomUUID().toString.take(8)}")
     // per compacted partition: the exact input line set this pass owns and
     // the replacement lines it produced — the optimistic-retry merge unit
-    val myOutput = scala.collection.mutable.Map[String, Seq[String]]()
+    val myOutput = scala.collection.mutable.Map[String, Seq[FileLine]]()
     val stats = toCompact.toSeq.sortBy(_._1).map { case (partName, ls) =>
-      val rels = ls.map(_.split('|')(0))
-      // sizing from the manifest's own file meta; status-probe fallback
-      // only for pre-meta carried lines
-      val bytes = ls.map(l => lineFileMeta(l).map(_._1).getOrElse(
-        f.getFileStatus(new Path(rootPath, splitLine(l)._1)).getLen)).sum
+      val rels = ls.map(_.path)
+      val bytes = ls.map(fileBytes(f, rootPath, _)).sum
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       // read the live files DIRECTLY (no basePath: data columns only —
       // the partition value lives in the directory name, as commit wrote
@@ -1191,7 +1263,7 @@ object ManifestTable {
           .parquet(new Path(stage, partName).toString)
       }
       val dest = new Path(rootPath, partName)
-      val outLines = scala.collection.mutable.ListBuffer[String]()
+      val outLines = scala.collection.mutable.ListBuffer[FileLine]()
       for (df0 <- f.listStatus(new Path(stage, partName))
            if df0.isFile && !df0.getPath.getName.startsWith("_")
              && !df0.getPath.getName.startsWith(".")) {
@@ -1213,17 +1285,15 @@ object ManifestTable {
       OptimizeStats(partName, ls.size, outLines.size)
     }
     f.delete(stage, true)
-    val myInput: Map[String, Set[String]] =
+    val myInput: Map[String, Set[FileLine]] =
       toCompact.map { case (p, ls) => p -> ls.toSet }.toMap
-    beforePublish()
-    var curSt = st
-    while (true) {
+    publishRetrying(spark, root, st, beforePublish) { s =>
       // a compacted partition's new line set = its CURRENT lines minus the
       // exact inputs this pass folded, plus the folded output — lines a
       // concurrent writer landed elsewhere carry; a writer that removed
       // one of our inputs aborts (the output would resurrect rows the
       // other writer deleted or replaced)
-      val curByPart = curSt.lines.groupBy(l => leafDirOf(l.split('|')(0)))
+      val curByPart = s.lines.groupBy(l => leafDirOf(l.path))
       val gone = myInput.collect { case (p, ins)
         if !ins.subsetOf(curByPart.getOrElse(p, Nil).toSet) => p }
       if (gone.nonEmpty)
@@ -1233,35 +1303,27 @@ object ManifestTable {
             "— the compacted output would resurrect superseded rows; " +
             "re-run optimize against the current snapshot (staged output " +
             "is unreferenced and vacuum-swept)")
-      val merged = curSt.lines.filterNot(l =>
-        myInput.getOrElse(leafDirOf(l.split('|')(0)), Set.empty)
+      val merged = s.lines.filterNot(l =>
+        myInput.getOrElse(leafDirOf(l.path), Set.empty)
           .contains(l)) ++ myOutput.values.flatten
       // SAME batch id as the winning state: compaction must neither
       // advance nor regress the ingest fence
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, curSt.batch, curSt.statsCols, curSt.schema,
-          op = "optimize"),
-        merged)) {
-        // purge complete: clear exactly the delete batches this pass saw
-        // (a crash before this line leaves a redundant mask — the next
-        // read filters rows that no longer exist, the next optimize
-        // clears). Clearing is ONLY legal when no concurrent winner
-        // carried files that could hold masked keys: such files composed
-        // into the published manifest un-purged (the retry only aborts on
-        // REMOVED inputs — additions legitimately merge), so the mask
-        // must outlive this purge and the next one owns them.
-        if (dv.nonEmpty) {
-          val winnerAdded = curSt.lines.filterNot(baseLineSet0)
-          if (!winnerAddedRisky(spark, root, winnerAdded, curSt.statsCols,
-            masks)) clearDvBatches(spark, root, dv)
-        }
-        return stats
-      }
-      val cur = currentVersion(spark, root)
-      curSt = readManifestLines(spark, root, cur)
-      next = cur + 1
+      Publish("optimize", s.batch, s.statsCols, s.header.schemaB64, merged,
+        _ => {
+          // purge complete: clear exactly the delete batches this pass
+          // saw (a crash before this line leaves a redundant mask — the
+          // next read filters rows that no longer exist, the next
+          // optimize clears). Clearing is ONLY legal when no concurrent
+          // winner carried files that could hold masked keys: such files
+          // composed into the published manifest un-purged (the retry
+          // only aborts on REMOVED inputs — additions legitimately
+          // merge), so the mask must outlive this purge and the next one
+          // owns them.
+          if (dv.nonEmpty && !winnerRisky(s))
+            clearDvBatches(spark, root, dv)
+          stats
+        })
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Drop exactly the given deferred-delete batch directories (the purge
@@ -1329,41 +1391,6 @@ object ManifestTable {
     out.toArray
   }
 
-  /** Parse one manifest line into (path, optional file meta, stats
-    * fields). Round 16: freshly-written lines carry a self-describing
-    * `%#<bytes>:<rows>` FILE-META field right after the path, so scan
-    * planning (DSv2 `estimateStatistics`, bin packing) and maintenance
-    * sizing ([[optimize]]/[[optimizeRewritePartitions]], bloom tiers)
-    * need ZERO per-file filesystem calls beyond the one manifest read —
-    * at 10⁵ files on an object store the per-file `getFileStatus` probe
-    * was minutes of plan time. Carried pre-round-16 lines have no meta
-    * (readers fall back to the status probe), so mixed manifests parse
-    * uniformly. The `%#` tag is UNAMBIGUOUS against every legal stats
-    * field: [[encStat]] output never has a non-hex character after '%',
-    * and long stats are decimal — neither can begin `%#`.
-    */
-  private def splitLine(
-      l: String): (String, Option[(Long, Long)], Array[String]) = {
-    val parts = l.split('|')
-    val meta =
-      if (parts.length >= 2 && parts(1).startsWith("%#"))
-        parts(1).drop(2).split(':') match {
-          case Array(b, r) => scala.util.Try((b.toLong, r.toLong)).toOption
-          case _ => None
-        }
-      else None
-    meta match {
-      case Some(m) => (parts(0), Some(m), parts.drop(2))
-      case None => (parts(0), None, parts.drop(1))
-    }
-  }
-
-  /** The (bytes, rows) a manifest line records for its file, when the
-    * line is new enough to carry them.
-    */
-  private[graft] def lineFileMeta(l: String): Option[(Long, Long)] =
-    splitLine(l)._2
-
   /** One data-file manifest line: path, the `%#bytes:rows` file meta
     * (straight from the footer open this call performs anyway), and the
     * registered columns' zone-map stats. The SINGLE line producer — every
@@ -1373,16 +1400,23 @@ object ManifestTable {
     */
   private def dataFileLine(
       spark: SparkSession, rootPath: Path, rel: String,
-      cols: Seq[(String, String)]): String = {
+      cols: Seq[(String, String)]): FileLine = {
     val (len, rows, stats) =
       footerLineInfo(spark, new Path(rootPath, rel), cols)
     val meta = s"|%#$len:$rows"
-    if (stats.forall(_.isEmpty)) rel + meta
-    else rel + meta + stats.map {
-      case Some((mn, mx)) => s"|$mn|$mx"
-      case None => "||"
-    }.mkString
+    FileLine(
+      if (stats.forall(_.isEmpty)) rel + meta
+      else rel + meta + stats.map {
+        case Some((mn, mx)) => s"|$mn|$mx"
+        case None => "||"
+      }.mkString)
   }
+
+  /** A line's file size: its `%#` meta, or a status probe for pre-meta
+    * carried lines.
+    */
+  private def fileBytes(f: FileSystem, rootPath: Path, l: FileLine): Long =
+    l.meta.map(_._1).getOrElse(f.getFileStatus(new Path(rootPath, l.path)).getLen)
 
   /** Exact per-column (min, max) of the registered zone-map columns from
     * one parquet FOOTER — metadata-only, one footer read for all columns.
@@ -1476,11 +1510,9 @@ object ManifestTable {
       root: String,
       preds: Seq[ZonePred]): (Seq[String], Int) = {
     require(preds.nonEmpty, "need at least one zone-map predicate")
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val st = readManifestLines(spark, root, v)
-    val (lines, statsCols) = (st.lines, st.statsCols)
-    val idx = statsCols.map(_._1).zipWithIndex.toMap
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root")
+    val statsCols = st.statsCols
     preds.foreach { pr =>
       val reg = statsCols.find(_._1 == pr.column)
       require(reg.isDefined,
@@ -1495,7 +1527,7 @@ object ManifestTable {
         s"zone-map column '${pr.column}' is ${reg.get._2}-typed; the " +
           s"predicate is $want-typed — match the registered type")
     }
-    (pruneLines(lines, statsCols, preds), lines.length)
+    (pruneLines(st.lines, statsCols, preds), st.lines.length)
   }
 
   /** The line-level core of [[prunedFilesMulti]]: paths of the lines whose
@@ -1508,18 +1540,16 @@ object ManifestTable {
     * read.
     */
   private def pruneLines(
-      lines: Seq[String],
+      lines: Seq[FileLine],
       statsCols: Seq[(String, String)],
       preds: Seq[ZonePred]): Seq[String] = {
     val idx = statsCols.map(_._1).zipWithIndex.toMap
-    lines.flatMap { l =>
-      val (path, _, sf) = splitLine(l)
-      val parts = sf.padTo(2 * statsCols.length, "")
-      val keep = sf.isEmpty || preds.forall { pr =>
+    lines.filter { l =>
+      l.stats.isEmpty || preds.forall { pr =>
         idx.get(pr.column) match {
           case None => true // unregistered here: conservative keep
           case Some(i) =>
-            val (mnS, mxS) = (parts(2 * i), parts(2 * i + 1))
+            val (mnS, mxS) = l.bounds(i)
             if (mnS.isEmpty || mxS.isEmpty) true // no stats: conservative keep
             else pr match {
               case LongRange(_, lo, hi) => mxS.toLong >= lo && mnS.toLong <= hi
@@ -1529,8 +1559,7 @@ object ManifestTable {
             }
         }
       }
-      if (keep) Some(path) else None
-    }
+    }.map(_.path)
   }
 
   /** Read the latest version restricted to files that can contain rows
@@ -1609,9 +1638,8 @@ object ManifestTable {
     require(targetBytes > 0, "targetBytes must be positive")
     val rootPath = new Path(root)
     val f = fs(spark, rootPath)
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val st = readManifestLines(spark, root, v)
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root")
     val (lines, statsCols) = (st.lines, st.statsCols)
     // Z-ORDER fold (round 15, closing the r14 "secondary pruning decays"
     // finding): the default rewrite range-clusters on the PRIMARY
@@ -1639,17 +1667,16 @@ object ManifestTable {
     // `part=b1/source=s/…` and `part=b2/source=s/…` fold into
     // `part=<newValue>/source=s/…` — the lineage axis disappears, the
     // semantic axes survive with their pruning
-    val parts = lines.map(_.split('|')(0).takeWhile(_ != '/')).distinct
+    val rels = st.paths
+    val parts = rels.map(_.takeWhile(_ != '/')).distinct
     if (parts.size <= 1) return None
     val partitionCol = parts.head.takeWhile(_ != '=')
     val newPartName = s"$partitionCol=${escapedPartValue(newValue)}"
-    val rels = lines.map(_.split('|')(0))
     val pcsAll = partColsOf(rels.head)
     val restCols = pcsAll.drop(1)
-    val bytes = lines.map(l => lineFileMeta(l).map(_._1).getOrElse(
-      f.getFileStatus(new Path(rootPath, splitLine(l)._1)).getLen)).sum
+    val bytes = lines.map(fileBytes(f, rootPath, _)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    var next = v + 1
+    val next = st.version + 1
     val stage = new Path(rootPath,
       s"_stage-v$next-${java.util.UUID.randomUUID().toString.take(8)}")
     // the fold consumes EVERY live file, so it is a natural TOTAL purge
@@ -1681,10 +1708,7 @@ object ManifestTable {
     // otherwise (a fold rewrites everything anyway)
     def colBounds(c: String): (Long, Long) = {
       val i = statsCols.map(_._1).indexOf(c)
-      val vals = lines.map { l =>
-        val p = splitLine(l)._3.padTo(2 * statsCols.length, "")
-        (p(2 * i), p(2 * i + 1))
-      }
+      val vals = lines.map(_.bounds(i))
       if (vals.nonEmpty && vals.forall(x => x._1.nonEmpty && x._2.nonEmpty))
         (vals.map(_._1.toLong).min, vals.map(_._2.toLong).max)
       else {
@@ -1721,7 +1745,7 @@ object ManifestTable {
       (if (restCols.isEmpty) writer else writer.partitionBy(restCols: _*))
         .parquet(new Path(stage, newPartName).toString)
     }
-    val newLines = scala.collection.mutable.ListBuffer[String]()
+    val newLines = scala.collection.mutable.ListBuffer[FileLine]()
     def moveOut(dir: Path, prefix: String, depth: Int): Unit =
       if (depth == restCols.size) {
         val dest = new Path(rootPath, prefix)
@@ -1752,13 +1776,12 @@ object ManifestTable {
         }
     moveOut(new Path(stage, newPartName), newPartName, 0)
     f.delete(stage, true)
-    beforePublish()
     // whole-table rewrite: every live line is an input, so ANY concurrent
     // change (append, delete, another fold) invalidates it — unlike
     // [[optimize]] there is no disjoint slice to merge around
-    var curSt = st
-    while (true) {
-      if (curSt.lines.toSet != lines.toSet)
+    val baseLines = lines.toSet
+    publishRetrying(spark, root, st, beforePublish) { s =>
+      if (s.lines.toSet != baseLines)
         throw new java.util.ConcurrentModificationException(
           s"optimizeRewritePartitions under $root lost its publish race " +
             "to a writer that changed the table — the fold consumed every " +
@@ -1766,18 +1789,12 @@ object ManifestTable {
             "(staged output is unreferenced and vacuum-swept)")
       // SAME batch id as the winning state: the fold must neither advance
       // nor regress the ingest fence
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, curSt.batch, statsCols, curSt.schema,
-          op = "rewrite-partitions"),
-        newLines.toList)) {
-        if (dv.nonEmpty) clearDvBatches(spark, root, dv)
-        return Some(OptimizeStats(newPartName, rels.size, newLines.size))
-      }
-      val cur = currentVersion(spark, root)
-      curSt = readManifestLines(spark, root, cur)
-      next = cur + 1
+      Publish("rewrite-partitions", s.batch, statsCols, s.header.schemaB64,
+        newLines.toList, _ => {
+          if (dv.nonEmpty) clearDvBatches(spark, root, dv)
+          Some(OptimizeStats(newPartName, rels.size, newLines.size))
+        })
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** RESTORE the table to an earlier committed version (the Delta RESTORE
@@ -1819,34 +1836,26 @@ object ManifestTable {
       root: String,
       toVersion: Long,
       beforePublish: () => Unit = NoHook): Long = {
-    val v = currentVersion(spark, root)
+    val cur0 = head(spark, root)
+    val v = cur0.version
     require(v >= 0, s"no committed version under $root")
     if (toVersion == v) return v
     require(toVersion >= 0 && toVersion < v,
       s"restore($toVersion): target must be an earlier committed version " +
         s"(current is $v)")
-    val target = readManifestLines(spark, root, toVersion) // throws if vacuumed
-    val cur0 = readManifestLines(spark, root, v)
-    beforePublish()
-    var next = v + 1
-    var curSt = cur0
-    while (true) {
-      if (curSt.lines.toSet != cur0.lines.toSet)
+    val target = readSnapshot(spark, root, toVersion) // throws if vacuumed
+    val baseLines = cur0.lines.toSet
+    publishRetrying(spark, root, cur0, beforePublish) { s =>
+      if (s.lines.toSet != baseLines)
         throw new java.util.ConcurrentModificationException(
           s"restore under $root lost its publish race to a writer that " +
             "changed the table — a restore declares the entire state, so " +
             "retrying would silently undo the concurrent write; re-issue " +
             "the restore against the current snapshot")
       // CURRENT fence + schema + stats registration; toVersion's LINES
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, curSt.batch, curSt.statsCols, curSt.schema,
-          op = "restore"),
-        target.lines)) return next
-      val cur = currentVersion(spark, root)
-      curSt = readManifestLines(spark, root, cur)
-      next = cur + 1
+      Publish("restore", s.batch, s.statsCols, s.header.schemaB64,
+        target.lines, v => v)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** METADATA-ONLY partition drop — the retention fast path for
@@ -1877,44 +1886,30 @@ object ManifestTable {
       values: Seq[String],
       beforePublish: () => Unit = NoHook): Option[Long] = {
     require(values.nonEmpty, "dropPartitions needs at least one value")
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val st = readManifestLines(spark, root, v)
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root")
     // on multi-level layouts the drop unit is the FIRST level — the TTL
     // axis (`d=2024-01-01/**` goes in one metadata publish; round 18):
     // the prefix match below covers every nested line under it
     val partitionCol = st.lines.headOption
-      .map(_.split('|')(0).takeWhile(_ != '='))
+      .map(_.path.takeWhile(_ != '='))
       .getOrElse(return None)
     val dropNames = values.map(x => s"$partitionCol=${escapedPartValue(x)}")
-    val baseTouched = touchedLineSets(Some(st), dropNames)
-    val dropped = baseTouched.values.map(_.size.toLong).sum
+    def dropping(l: FileLine) = dropNames.exists(l.under)
+    val dropped = st.lines.count(dropping).toLong
     if (dropped == 0L) return None
-    beforePublish()
-    var next = v + 1
-    var curSt = st
-    while (true) {
-      val curTouched = touchedLineSets(Some(curSt), dropNames)
-      val conflicted = dropNames.filter(p =>
-        curTouched.getOrElse(p, Set.empty) != baseTouched.getOrElse(p, Set.empty))
+    publishRetrying(spark, root, st, beforePublish) { s =>
+      val conflicted = changedPartitions(st, s, dropNames)
       if (conflicted.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"dropPartitions under $root lost its publish race to a writer " +
             s"that modified dropped partition(s) ${conflicted.mkString(", ")} " +
             "— dropping them now would silently delete content this call " +
             "never saw; re-issue against the current snapshot")
-      val kept = curSt.lines.filterNot(l =>
-        dropNames.exists(dn => l.startsWith(dn + "/")))
       // SAME batch id as the winning state: a drop is not an ingest
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, curSt.batch, curSt.statsCols, curSt.schema,
-          op = "drop-partitions"),
-        kept)) return Some(dropped)
-      val cur = currentVersion(spark, root)
-      curSt = readManifestLines(spark, root, cur)
-      next = cur + 1
+      Publish("drop-partitions", s.batch, s.statsCols, s.header.schemaB64,
+        s.lines.filterNot(dropping), _ => Some(dropped))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Key-count ceiling under which a verb's key set is broadcast into
@@ -2049,10 +2044,9 @@ object ManifestTable {
     require(numHashes >= 1 && numHashes <= 16,
       s"numHashes must be in [1, 16], got $numHashes")
     val rootPath = new Path(root)
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val st = readManifestLines(spark, root, v)
-    val live = st.lines.map(_.split('|')(0))
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root")
+    val live = st.paths
     val kf = recordedOrInferredSchema(spark, root, st)
       .flatMap(_.fields.find(_.name == keyCol)).getOrElse(
         throw new IllegalArgumentException(
@@ -2106,8 +2100,8 @@ object ManifestTable {
       // nested ones (round 18) — and the extraction regex needs the
       // segment count, so each depth gets its own scan (depth is uniform
       // per table in practice; the grouping just never assumes it)
-      val rowsOf: Map[String, Long] = st.lines.flatMap(l =>
-        lineFileMeta(l).map(m => splitLine(l)._1 -> m._2)).toMap
+      val rowsOf: Map[String, Long] =
+        st.lines.flatMap(l => l.meta.map(m => l.path -> m._2)).toMap
       val byTier: Seq[((Int, Int), Seq[String])] = missing
         .map(r => ((bitsFor(rowsOf.getOrElse(r,
           footerRowCount(spark, new Path(rootPath, r)))),
@@ -2356,7 +2350,7 @@ object ManifestTable {
     */
   private def winnerAddedRisky(
       spark: SparkSession, root: String,
-      winnerAdded: Seq[String], statsCols: Seq[(String, String)],
+      winnerAdded: Seq[FileLine], statsCols: Seq[(String, String)],
       masks: Seq[(String, DataFrame)]): Boolean =
     winnerAdded.nonEmpty && masks.exists { case (c, keys0) =>
       keyCandidateLines(spark, root, winnerAdded, statsCols,
@@ -2371,7 +2365,7 @@ object ManifestTable {
     * frame's — loud refusal otherwise.
     */
   private def keyCandidateFiles(
-      spark: SparkSession, root: String, st: ManifestState,
+      spark: SparkSession, root: String, st: Snapshot,
       ks: DataFrame, keyCol: String): Seq[String] =
     keyCandidateLines(spark, root, st.lines, st.statsCols, ks, keyCol)
 
@@ -2382,9 +2376,9 @@ object ManifestTable {
     */
   private def keyCandidateLines(
       spark: SparkSession, root: String,
-      lines: Seq[String], statsCols: Seq[(String, String)],
+      lines: Seq[FileLine], statsCols: Seq[(String, String)],
       ks: DataFrame, keyCol: String): Seq[String] = {
-    val allRels = lines.map(_.split('|')(0))
+    val allRels = lines.map(_.path)
     if (allRels.isEmpty) return Nil
     val kf = ks.schema.fields.find(_.name == keyCol).getOrElse(
       throw new IllegalArgumentException(
@@ -2436,7 +2430,7 @@ object ManifestTable {
     */
   private[graft] def recordedSchemaJson(
       spark: SparkSession, root: String, version: Long): Option[String] =
-    readManifestLines(spark, root, version).schema.map(_.json)
+    readSnapshot(spark, root, version).schema.map(_.json)
 
   /** Publish side of the DSv2 WRITE path
     * ([[graft.sources.GraftManifestSource]]): executors have already
@@ -2495,22 +2489,18 @@ object ManifestTable {
     }
     // matched-leaf LINE sets of a state — the replace mode's conflict
     // witness (the deleteRows touched-partition rule)
-    def matchedLines(st: Option[ManifestState]): Map[String, Set[String]] =
+    def matchedLines(s: Snapshot): Map[String, Set[FileLine]] =
       replaceLeavesOf match {
         case None => Map.empty
         case Some(m) =>
-          val lines = st.map(_.lines).getOrElse(Nil)
-          val byLeaf = lines.groupBy(l => leafDirOf(l.split('|')(0)))
+          val byLeaf = s.lines.groupBy(l => leafDirOf(l.path))
           val matched = m(byLeaf.keys.toSeq.sorted)
           byLeaf.view.filterKeys(matched).mapValues(_.toSet).toMap
       }
-    var prev = currentVersion(spark, root)
-    var prevState =
-      if (prev < 0) None else Some(readManifestLines(spark, root, prev))
-    val baseMatched = matchedLines(prevState)
-    def fenced(st: Option[ManifestState]): Boolean =
-      batchId.exists(b => st.exists(b <= _.batch))
-    if (fenced(prevState)) return prev // staged files are vacuum debris
+    val start = head(spark, root)
+    val baseMatched = matchedLines(start)
+    def batchFenced(s: Snapshot) = batchId.exists(fenced(s, _))
+    if (batchFenced(start)) return start.version // staged files are vacuum debris
     def effStatsFor(prevStats: Seq[(String, String)]): Seq[(String, String)] = {
       val asked = statsColumns.distinct.map { c =>
         val field = dataSchema.fields.find(_.name == c).getOrElse(
@@ -2543,14 +2533,13 @@ object ManifestTable {
           a
       }
     }
-    var effStats = effStatsFor(prevState.map(_.statsCols).getOrElse(Nil))
+    val effStats0 = effStatsFor(start.statsCols)
     // truncate keeps the ADDITIVE schema contract too: replaced rows may
     // narrow, the recorded schema never does (a column delete is a
     // rewrite job, not a write mode — the commit() rule, unchanged here)
-    def mergedSchemaFor(st: Option[ManifestState]) = evolveSchema(
-      st.flatMap(s => recordedOrInferredSchema(spark, root, s)), dataSchema)
-    var mergedSchema = mergedSchemaFor(prevState)
-    var next = prev + 1
+    def mergedSchemaFor(s: Snapshot) = evolveSchema(
+      recordedOrInferredSchema(spark, root, s), dataSchema)
+    mergedSchemaFor(start) // schema-conflict refusal BEFORE any file moves
     // a per-commit UUID in the destination names: v$next + (partitionId,
     // taskId) is unique only WITHIN one Spark application — two concurrent
     // applications appending can compute the same next and identical
@@ -2564,7 +2553,7 @@ object ManifestTable {
           "delimiter)")
       val dest = new Path(rootPath, partName)
       f.mkdirs(dest)
-      val name = s"v$next-$commitTag-${src.getName}"
+      val name = s"v${start.version + 1}-$commitTag-${src.getName}"
       if (!f.rename(src, new Path(dest, name)))
         throw new IllegalStateException(
           s"could not stage written file $src -> $dest/$name")
@@ -2575,54 +2564,40 @@ object ManifestTable {
     // re-derive them (footers are still there), or the new files would
     // permanently lack the new column's zone maps (review finding,
     // round 15)
-    var linesStats = effStats
-    var myLines = statLines(spark, rootPath, newFiles, effStats)
-    val baseLines = prevState.map(_.lines.toSet).getOrElse(Set.empty)
-    while (true) {
-      if (effStats != linesStats) {
-        linesStats = effStats
-        myLines = statLines(spark, rootPath, newFiles, effStats)
+    def linesFor(stats: Seq[(String, String)]) =
+      (stats, newFiles.map(dataFileLine(spark, rootPath, _, stats)))
+    var myLines = linesFor(effStats0)
+    val baseLines = start.lines.toSet
+    val op =
+      if (truncate) "overwrite"
+      else if (replaceLeavesOf.isDefined) "replace" else "append"
+    publishRetrying(spark, root, start, NoHook) { s =>
+      if (batchFenced(s)) Done(s.version) // idempotent skip
+      else {
+        if (truncate && s.lines.toSet != baseLines)
+          throw new java.util.ConcurrentModificationException(
+            s"overwrite-write under $root lost its publish race to a " +
+              "writer that changed the table — an overwrite declares the " +
+              "entire state; re-run against the current snapshot (staged " +
+              "files are unreferenced and vacuum-swept)")
+        val matched = matchedLines(s)
+        if (matched != baseMatched)
+          throw new java.util.ConcurrentModificationException(
+            s"partition overwrite under $root lost its publish race to a " +
+              "writer that changed a REPLACED leaf — the staged rows were " +
+              "derived against a superseded region; re-run (staged files " +
+              "are unreferenced and vacuum-swept). Changes to leaves " +
+              "outside the region compose and never hit this.")
+        val effStats = effStatsFor(s.statsCols)
+        if (effStats != myLines._1) myLines = linesFor(effStats)
+        val carried =
+          if (truncate) Nil
+          else s.lines.filterNot(l => matched.contains(leafDirOf(l.path)))
+        Publish(op, batchId.getOrElse(s.batch + 1), effStats,
+          Some(Header.encodeSchema(mergedSchemaFor(s))),
+          carried ++ myLines._2, v => v)
       }
-      val carried: Seq[String] =
-        if (truncate) Nil
-        else replaceLeavesOf match {
-          case Some(_) =>
-            val lines = prevState.map(_.lines).getOrElse(Nil)
-            val dropped = matchedLines(prevState).keySet
-            lines.filterNot(l => dropped.contains(leafDirOf(l.split('|')(0))))
-          case None => prevState.map(_.lines).getOrElse(Nil)
-        }
-      val effBatch = batchId.getOrElse(
-        prevState.map(_.batch).getOrElse(-1L) + 1)
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, effBatch, effStats, Some(mergedSchema),
-        op = if (truncate) "overwrite"
-          else if (replaceLeavesOf.isDefined) "replace" else "append"),
-        carried ++ myLines)) return next
-      val cur = currentVersion(spark, root)
-      val curState = readManifestLines(spark, root, cur)
-      if (fenced(Some(curState))) return cur // idempotent skip
-      if (truncate && curState.lines.toSet != baseLines)
-        throw new java.util.ConcurrentModificationException(
-          s"overwrite-write under $root lost its publish race to a " +
-            "writer that changed the table — an overwrite declares the " +
-            "entire state; re-run against the current snapshot (staged " +
-            "files are unreferenced and vacuum-swept)")
-      if (replaceLeavesOf.isDefined &&
-        matchedLines(Some(curState)) != baseMatched)
-        throw new java.util.ConcurrentModificationException(
-          s"partition overwrite under $root lost its publish race to a " +
-            "writer that changed a REPLACED leaf — the staged rows were " +
-            "derived against a superseded region; re-run (staged files " +
-            "are unreferenced and vacuum-swept). Changes to leaves " +
-            "outside the region compose and never hit this.")
-      prev = cur
-      prevState = Some(curState)
-      effStats = effStatsFor(curState.statsCols)
-      mergedSchema = mergedSchemaFor(prevState)
-      next = cur + 1
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** COPY-ON-WRITE file replacement — the publish half of the SQL
@@ -2682,34 +2657,17 @@ object ManifestTable {
       s"deferred deletes pending under $root — the mask would silently " +
         "apply to the restored snapshot; run optimize (the purge point) " +
         "first")
-    val p = new Path(manifestDir(root), s"v$toVersion.json")
-    val in = fs(spark, p).open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val all = text.linesIterator.toList
+    val src = readSnapshot(spark, root, toVersion)
     val next = head + 1
-    var header = all.head
-      .replaceFirst("\"version\":-?\\d+", s""""version":$next""")
-      // publishManifest re-appends live nf/nr; the copied ones would
-      // duplicate the keys — and a restore-of-a-restore must not carry
-      // the source's own restoredFrom breadcrumb (review, round 20)
-      .replaceAll(",\"nf\":\\d+", "").replaceAll(",\"nr\":\\d+", "")
-      .replaceAll(",\"restoredFrom\":-?\\d+", "")
-      // the restore is UNKEYED (no pre/post pairing — its CDF delta is
-      // the honest file-level net change back to the old state)
-      .replaceAll(",\"opKey\":\"[^\"]*\"", "")
-    header =
-      if (header.contains("\"op\":"))
-        header.replaceFirst("\"op\":\"[^\"]*\"", "\"op\":\"restore\"")
-      else header.stripSuffix("}") + ""","op":"restore"}"""
-    if (!header.contains("\"ts\":"))
-      header = header.stripSuffix("}") +
-        s""","ts":${System.currentTimeMillis()}}"""
-    header = header.stripSuffix("}") + s""","restoredFrom":$toVersion}"""
     beforePublish()
-    if (!publishManifest(spark, root, next, header,
-        all.tail.filter(_.nonEmpty)))
+    // the source header verbatim but for the version, the op and the
+    // restoredFrom breadcrumb (a restore-of-a-restore names its own
+    // target); the restore is UNKEYED (no pre/post pairing — its CDF
+    // delta is the honest file-level net change back to the old state);
+    // publishManifest re-stamps the live nf/nr
+    if (!publishManifest(spark, root,
+        src.header.copy(version = next, op = Some("restore"), opKey = Nil,
+          restoredFrom = Some(toVersion)), src.lines))
       throw new java.util.ConcurrentModificationException(
         s"restoreVersion under $root: lost the v$next slot to a " +
           "concurrent writer — re-plan against the new head")
@@ -2720,7 +2678,7 @@ object ManifestTable {
       spark: SparkSession,
       root: String,
       baseVersion: Long,
-      baseLines: Seq[String],
+      baseLines: Seq[FileLine],
       removedRels: Seq[String],
       staged: Seq[(String, Path)],
       beforePublish: () => Unit = NoHook): Long = {
@@ -2732,21 +2690,20 @@ object ManifestTable {
       s"deferred deletes pending under $root — a copy-on-write rewrite " +
         "would strand the mask's purge bookkeeping; run optimize (the " +
         "purge point) first")
-    val st = readManifestLines(spark, root, baseVersion)
+    val st = readSnapshot(spark, root, baseVersion)
     val baseSet = baseLines.toSet
     require(st.lines.toSet == baseSet,
       s"replaceFiles under $root: the planning snapshot (v$baseVersion) " +
         "no longer matches its own manifest — stale handle")
     val removedSet = removedRels.toSet
-    val basePaths = baseLines.map(_.split('|')(0)).toSet
+    val basePaths = baseLines.map(_.path).toSet
     require(removedSet.subsetOf(basePaths),
       s"replaceFiles under $root: removed file(s) " +
         s"${removedSet.diff(basePaths).take(3).mkString(", ")} are not in " +
         "the planning snapshot")
     // stage the replacement files live (same naming discipline as
     // appendStagedFiles: version + commit UUID + task-local name)
-    var cur = currentVersion(spark, root)
-    var next = cur + 1
+    val cur = currentVersion(spark, root)
     val commitTag = java.util.UUID.randomUUID().toString.take(8)
     val newFiles = staged.map { case (partName, src) =>
       require(!partName.contains('|'),
@@ -2754,89 +2711,47 @@ object ManifestTable {
           "delimiter)")
       val dest = new Path(rootPath, partName)
       f.mkdirs(dest)
-      val name = s"v$next-$commitTag-${src.getName}"
+      val name = s"v${cur + 1}-$commitTag-${src.getName}"
       if (!f.rename(src, new Path(dest, name)))
         throw new IllegalStateException(
           s"could not stage replacement file $src -> $dest/$name")
       s"$partName/$name"
     }
-    val myLines = statLines(spark, rootPath, newFiles, st.statsCols)
-    val carried = baseLines.filterNot(l => removedSet.contains(l.split('|')(0)))
-    beforePublish()
+    val myLines = newFiles.map(dataFileLine(spark, rootPath, _, st.statsCols))
+    val carried = baseLines.filterNot(l => removedSet.contains(l.path))
     // the conflict witness is the CURRENT head, never the base itself —
     // a writer that committed between planning and this publish must
     // abort the verb even before the first rename race
-    var curSt = if (cur == baseVersion) st else readManifestLines(spark, root, cur)
-    while (true) {
-      if (curSt.lines.toSet != baseSet)
+    val start = if (cur == baseVersion) st else readSnapshot(spark, root, cur)
+    publishRetrying(spark, root, start, beforePublish) { s =>
+      if (s.lines.toSet != baseSet)
         throw new java.util.ConcurrentModificationException(
           s"row-level rewrite under $root lost its publish race to a " +
             "writer that changed the table — the replacement rows were " +
             "derived from a superseded snapshot (the SQL condition cannot " +
             "be re-checked against the winner's files); re-run the " +
             "statement (staged files are unreferenced and vacuum-swept)")
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, curSt.batch, curSt.statsCols, curSt.schema,
-          op = "replace"),
-        carried ++ myLines)) return next
-      cur = currentVersion(spark, root)
-      curSt = readManifestLines(spark, root, cur)
-      next = cur + 1
+      Publish("replace", s.batch, s.statsCols, s.header.schemaB64,
+        carried ++ myLines, v => v)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Planning surface for the DSv2 `graft-manifest` scan
     * ([[graft.sources.GraftManifestSource]]): one committed version's
-    * live lines, stats registration and recorded schema (legacy tables
-    * fall back to the mergeSchema inference, paid once at plan time).
+    * snapshot, its schema resolved for reading (legacy tables fall back
+    * to the mergeSchema inference, paid once at plan time).
     */
-  private[graft] final case class ScanState(
-      version: Long,
-      lines: Seq[String],
-      statsCols: Seq[(String, String)],
-      schema: Option[org.apache.spark.sql.types.StructType])
-
-  /** The empty snapshot a DECLARED-but-uncommitted DSv2 table scans
-    * (round 16's SQL creation lifecycle): no files, no stats, the DDL
-    * data schema.
-    */
-  private[graft] def emptyScanState(
-      schema: org.apache.spark.sql.types.StructType): ScanState =
-    ScanState(-1L, Nil, Nil, Some(schema))
-
-  /** One committed version's raw lines — the streaming tail's per-batch
-    * diff source ([[graft.sources.GraftMicroBatchStream]]).
-    */
-  private[graft] def versionLines(
-      spark: SparkSession, root: String, v: Long): Seq[String] =
-    if (v < 0) Nil else readManifestLines(spark, root, v).lines
-
-  /** One committed version's raw lines AND stats registration — the CDF
-    * planner's per-version unit (it prunes each version's changed-file
-    * subset under that version's own registration).
-    */
-  private[graft] def versionLineState(
-      spark: SparkSession, root: String,
-      v: Long): (Seq[String], Seq[(String, String)], Option[Long]) =
-    if (v < 0) (Nil, Nil, None)
-    else {
-      val st = readManifestLines(spark, root, v)
-      (st.lines, st.statsCols, st.ts)
-    }
-
   private[graft] def scanState(
       spark: SparkSession, root: String,
-      versionAsOf: Option[Long]): ScanState = {
+      versionAsOf: Option[Long]): Snapshot = {
     val v = versionAsOf.getOrElse {
       val cur = currentVersion(spark, root)
       require(cur >= 0, s"no committed version under $root — not a " +
         "graft-manifest table (or never committed)")
       cur
     }
-    val st = readManifestLines(spark, root, v)
-    ScanState(v, st.lines, st.statsCols,
-      recordedOrInferredSchema(spark, root, st))
+    val st = readSnapshot(spark, root, v)
+    st.copy(schema = recordedOrInferredSchema(spark, root, st))
   }
 
   /** Zone-map + bloom file pruning for the DSv2 scan: `preds` intersect
@@ -2846,11 +2761,11 @@ object ManifestTable {
     * open — a proven SUPERSET of the matching rows' files.
     */
   private[graft] def pruneScanFiles(
-      spark: SparkSession, root: String, st: ScanState,
+      spark: SparkSession, root: String, st: Snapshot,
       preds: Seq[ZonePred],
       bloomEqKeys: Map[String, Seq[Long]]): Seq[String] = {
     val zoned =
-      if (preds.isEmpty) st.lines.map(_.split('|')(0))
+      if (preds.isEmpty) st.paths
       else pruneLines(st.lines, st.statsCols, preds)
     bloomEqKeys.foldLeft(zoned) { case (cands, (c, ks)) =>
       if (ks.isEmpty) cands
@@ -2917,10 +2832,9 @@ object ManifestTable {
     * zero file IO. Exactness holds because commits record counts from
     * the footers of the immutable files they land.
     */
-  private[graft] def manifestRowCount(st: ScanState): Option[Long] = {
-    val ms = st.lines.map(lineFileMeta)
-    if (ms.exists(_.isEmpty)) None else Some(ms.flatten.map(_._2).sum)
-  }
+  private[graft] def manifestRowCount(st: Snapshot): Option[Long] =
+    if (st.lines.exists(_.meta.isEmpty)) None
+    else Some(st.lines.flatMap(_.meta).map(_._2).sum)
 
   /** EXACT global [min, max] of a LONG-registered zone-map column from
     * the manifest alone, or None when any line lacks the column's stats
@@ -2932,14 +2846,11 @@ object ManifestTable {
     * as a MAX value), so string columns never serve aggregates.
     */
   private[graft] def manifestLongBounds(
-      st: ScanState, column: String): Option[(Long, Long)] = {
+      st: Snapshot, column: String): Option[(Long, Long)] = {
     val idx = st.statsCols.map(_._1).indexOf(column)
     if (idx < 0 || st.statsCols(idx)._2 != "long" || st.lines.isEmpty)
       return None
-    val vals = st.lines.map { l =>
-      val sf = splitLine(l)._3.padTo(2 * st.statsCols.length, "")
-      (sf(2 * idx), sf(2 * idx + 1))
-    }
+    val vals = st.lines.map(_.bounds(idx))
     if (vals.exists(v => v._1.isEmpty || v._2.isEmpty)) None
     else Some((vals.map(_._1.toLong).min, vals.map(_._2.toLong).max))
   }
@@ -2990,9 +2901,8 @@ object ManifestTable {
       root: String,
       keys: DataFrame,
       keyCol: String): DeferredDeleteStats = {
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val st = readManifestLines(spark, root, v)
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root")
     val kf = recordedOrInferredSchema(spark, root, st)
       .flatMap(_.fields.find(_.name == keyCol)).getOrElse(
         throw new IllegalArgumentException(
@@ -3117,18 +3027,17 @@ object ManifestTable {
     val keyCol = keyCols.head // the pruning/envelope anchor
     val rootPath = new Path(root)
     val f = fs(spark, rootPath)
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root — merge needs a " +
-      "committed table; use commit for the first batch")
-    val st = readManifestLines(spark, root, v)
-    if (batchId <= st.batch) return None // redelivered batch: fence no-op
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root — merge " +
+      "needs a committed table; use commit for the first batch")
+    if (fenced(st, batchId)) return None // redelivered batch: fence no-op
     require(st.lines.nonEmpty, s"the current snapshot under $root is " +
       "empty — merge derives the partition column from it; use commit")
     require(dvState(spark, root).isEmpty,
       s"deferred deletes pending under $root — the merge's survivor " +
         "rewrite reads raw files and would resurrect masked rows into " +
         "fresh files; run optimize (the purge point) first")
-    val allRels = st.lines.map(_.split('|')(0))
+    val allRels = st.paths
     val pcs = partColsOf(allRels.head) // every level of the layout
     keyCols.foreach(kc => require(updates.schema.fieldNames.contains(kc),
       s"merge key column '$kc' absent from the update frame"))
@@ -3222,68 +3131,59 @@ object ManifestTable {
         .unionByName(upd, allowMissingColumns = true)
     val updSchema = org.apache.spark.sql.types.StructType(
       upd.schema.fields.filterNot(fd => pcs.contains(fd.name)).toSeq)
-    def mergedSchemaFor(s0: ManifestState) = evolveSchema(
-      recordedOrInferredSchema(spark, root, s0), updSchema)
+    def mergedSchemaFor(s: Snapshot) = evolveSchema(
+      recordedOrInferredSchema(spark, root, s), updSchema)
     mergedSchemaFor(st) // schema-conflict refusal BEFORE any file stages
-    var next = v + 1
     val (stagedParts, newFiles) =
-      stageDataFiles(f, rootPath, toWrite, pcs, next)
-    val myLines = statLines(spark, rootPath, newFiles, st.statsCols)
+      stageDataFiles(f, rootPath, toWrite, pcs, st.version + 1)
+    val myLines = newFiles.map(dataFileLine(spark, rootPath, _, st.statsCols))
     val witnessNames = (touchedRewriteNames ++ targetNames).distinct
-    val baseTouched = touchedLineSets(Some(st), witnessNames)
-    val baseLineSet = st.lines.toSet
-    beforePublish()
-    var curSt = st
-    while (true) {
-      if (batchId <= curSt.batch) return None // the winner carried this
-        // (or a later) batch — idempotent skip; staged files fall to vacuum
-      val curTouched = touchedLineSets(Some(curSt), witnessNames)
-      val conflicted = witnessNames.filter(p =>
-        curTouched.getOrElse(p, Set.empty) != baseTouched.getOrElse(p, Set.empty))
-      if (conflicted.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"merge of batch $batchId under $root lost its publish race to " +
-            s"a writer that modified touched partition(s) " +
-            s"${conflicted.mkString(", ")} — the replacement rows were " +
-            "derived from a superseded snapshot; re-run the merge against " +
-            "the current snapshot (staged files are unreferenced and " +
-            "vacuum-swept)")
-      // the ConcurrentAppend hazard: a winner-added file that could hold
-      // one of this merge's keys invalidates the no-match evidence behind
-      // every insert (and could hide a row a matched update should have
-      // replaced). The winner's own zone maps decide "could hold".
-      val winnerAdded = curSt.lines.filterNot(baseLineSet)
-      val risky = envelope match {
-        case Some(env) => pruneLines(winnerAdded, curSt.statsCols, Seq(env))
-        case None => winnerAdded.map(_.split('|')(0))
+    val baseLines = st.lines.toSet
+    val stats = MergeStats(
+      rowsUpdated = rowsUpdated,
+      rowsInserted = rowsInserted,
+      partitionsRewritten = touchedRewriteNames.size,
+      partitionsAppended = stagedParts.count(!touchedRewriteNames.contains(_)),
+      filesScanned = candidates.size,
+      filesTotal = allRels.size)
+    publishRetrying[Option[MergeStats]](spark, root, st, beforePublish) { s =>
+      // the winner carried this (or a later) batch — idempotent skip;
+      // staged files fall to vacuum
+      if (fenced(s, batchId)) Done(None)
+      else {
+        val conflicted = changedPartitions(st, s, witnessNames)
+        if (conflicted.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"merge of batch $batchId under $root lost its publish race to " +
+              s"a writer that modified touched partition(s) " +
+              s"${conflicted.mkString(", ")} — the replacement rows were " +
+              "derived from a superseded snapshot; re-run the merge against " +
+              "the current snapshot (staged files are unreferenced and " +
+              "vacuum-swept)")
+        // the ConcurrentAppend hazard: a winner-added file that could hold
+        // one of this merge's keys invalidates the no-match evidence behind
+        // every insert (and could hide a row a matched update should have
+        // replaced). The winner's own zone maps decide "could hold".
+        val winnerAdded = s.lines.filterNot(baseLines)
+        val risky = envelope match {
+          case Some(env) => pruneLines(winnerAdded, s.statsCols, Seq(env))
+          case None => winnerAdded.map(_.path)
+        }
+        if (risky.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"merge of batch $batchId under $root lost its publish race to " +
+              s"a writer that added file(s) which may hold merge keys " +
+              s"(${risky.take(3).mkString(", ")}${if (risky.size > 3) ", …" else ""}) " +
+              "— the match/no-match split was derived from a superseded " +
+              "snapshot; re-run the merge (register the merge key as a " +
+              "zone-map column to let key-disjoint ingests compose)")
+        val carried =
+          s.lines.filterNot(l => touchedRewriteNames.exists(l.under))
+        Publish("merge", batchId, s.statsCols,
+          Some(Header.encodeSchema(mergedSchemaFor(s))), carried ++ myLines,
+          _ => Some(stats), opKey = keyCols)
       }
-      if (risky.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"merge of batch $batchId under $root lost its publish race to " +
-            s"a writer that added file(s) which may hold merge keys " +
-            s"(${risky.take(3).mkString(", ")}${if (risky.size > 3) ", …" else ""}) " +
-            "— the match/no-match split was derived from a superseded " +
-            "snapshot; re-run the merge (register the merge key as a " +
-            "zone-map column to let key-disjoint ingests compose)")
-      val carried = curSt.lines.filterNot(l =>
-        touchedRewriteNames.exists(tp => l.startsWith(tp + "/")))
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, batchId, curSt.statsCols,
-          Some(mergedSchemaFor(curSt)), op = "merge", opKey = keyCols),
-        carried ++ myLines))
-        return Some(MergeStats(
-          rowsUpdated = rowsUpdated,
-          rowsInserted = rowsInserted,
-          partitionsRewritten = touchedRewriteNames.size,
-          partitionsAppended =
-            stagedParts.count(!touchedRewriteNames.contains(_)),
-          filesScanned = candidates.size,
-          filesTotal = allRels.size))
-      val cur = currentVersion(spark, root)
-      curSt = readManifestLines(spark, root, cur)
-      next = cur + 1
     }
-    throw new IllegalStateException("unreachable")
   }
 
   final case class DeleteStats(
@@ -3344,15 +3244,14 @@ object ManifestTable {
       beforePublish: () => Unit = NoHook): Option[DeleteStats] = {
     val rootPath = new Path(root)
     val f = fs(spark, rootPath)
-    val v = currentVersion(spark, root)
-    require(v >= 0, s"no committed version under $root")
-    val st = readManifestLines(spark, root, v)
+    val st = head(spark, root)
+    require(st.version >= 0, s"no committed version under $root")
     if (st.lines.isEmpty) return None // zero-file snapshot: nothing to delete
     require(dvState(spark, root).isEmpty,
       s"deferred deletes pending under $root — the copy-on-write rewrite " +
         "reads raw files and would resurrect masked rows into fresh " +
         "files; run optimize (the purge point) first")
-    val allRels = st.lines.map(_.split('|')(0))
+    val allRels = st.paths
     val pcs = partColsOf(allRels.head) // every level of the layout
     val ks = keys.select(col(keyCol)).distinct().localCheckpoint(true)
     val nKeys = ks.count()
@@ -3394,25 +3293,19 @@ object ManifestTable {
     // rebalance exchange and the metric never fires (reproduced — a
     // takedown emptying all touched partitions crashed on `obs.get`).
     val nIn = st.lines
-      .filter(l => touchedNames.contains(leafDirOf(l.split('|')(0))))
-      .map(l => lineFileMeta(l).map(_._2).getOrElse(
-        footerRowCount(spark, new Path(rootPath, splitLine(l)._1))))
+      .filter(l => touchedNames.contains(leafDirOf(l.path)))
+      .map(l => l.meta.map(_._2).getOrElse(
+        footerRowCount(spark, new Path(rootPath, l.path))))
       .sum
     // survivors of the touched partitions only (anti-join); the write
     // re-derives the partition dirs it came from
     val survivors = readFiles(touchedRels)
       .join(hintedKeys(spark, ks, nKeys), Seq(keyCol), "left_anti")
-    var next = v + 1
     val (stagedParts, newFiles) =
-      stageDataFiles(f, rootPath, survivors, pcs, next)
-    val myLines = statLines(spark, rootPath, newFiles, st.statsCols)
-    val baseTouched = touchedLineSets(Some(st), touchedNames)
-    beforePublish()
-    var curSt = st
-    while (true) {
-      val curTouched = touchedLineSets(Some(curSt), touchedNames)
-      val conflicted = touchedNames.filter(p =>
-        curTouched.getOrElse(p, Set.empty) != baseTouched.getOrElse(p, Set.empty))
+      stageDataFiles(f, rootPath, survivors, pcs, st.version + 1)
+    val myLines = newFiles.map(dataFileLine(spark, rootPath, _, st.statsCols))
+    publishRetrying(spark, root, st, beforePublish) { s =>
+      val conflicted = changedPartitions(st, s, touchedNames)
       if (conflicted.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"deleteRows under $root lost its publish race to a writer that " +
@@ -3420,29 +3313,22 @@ object ManifestTable {
             "the survivor rewrite was derived from a superseded snapshot; " +
             "re-run the delete against the current snapshot (staged files " +
             "are unreferenced and vacuum-swept)")
-      val carried = curSt.lines.filterNot(l =>
-        touchedNames.exists(tp => l.startsWith(tp + "/")))
+      val carried = s.lines.filterNot(l => touchedNames.exists(l.under))
       // SAME batch id as the winning state: a delete must neither advance
       // nor regress the ingest fence
-      if (publishManifest(spark, root, next,
-        manifestHeader(next, curSt.batch, curSt.statsCols, curSt.schema,
-          op = "delete", opKey = Seq(keyCol)),
-        carried ++ myLines)) {
-        val nKept = if (newFiles.isEmpty) 0L
-          else spark.read.option("basePath", root)
-            .parquet(newFiles.map(nf => s"$root/$nf"): _*).count()
-        return Some(DeleteStats(
-          partitionsRewritten = stagedParts.size,
-          partitionsEmptied = touchedNames.diff(stagedParts).size,
-          rowsDeleted = nIn - nKept,
-          filesScanned = cands.size,
-          filesTotal = allRels.size))
-      }
-      val cur = currentVersion(spark, root)
-      curSt = readManifestLines(spark, root, cur)
-      next = cur + 1
+      Publish("delete", s.batch, s.statsCols, s.header.schemaB64,
+        carried ++ myLines, _ => {
+          val nKept = if (newFiles.isEmpty) 0L
+            else spark.read.option("basePath", root)
+              .parquet(newFiles.map(nf => s"$root/$nf"): _*).count()
+          Some(DeleteStats(
+            partitionsRewritten = stagedParts.size,
+            partitionsEmptied = touchedNames.diff(stagedParts).size,
+            rowsDeleted = nIn - nKept,
+            filesScanned = cands.size,
+            filesTotal = allRels.size))
+        }, opKey = Seq(keyCol))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   final case class FsckReport(
@@ -3497,7 +3383,7 @@ object ManifestTable {
     val f = fs(spark, rootPath)
     val v = currentVersion(spark, root)
     require(v >= 0, s"no committed version under $root")
-    val st = try readManifestLines(spark, root, v) catch {
+    val st = try readSnapshot(spark, root, v) catch {
       case _: Exception =>
         // the current header itself doesn't parse (schemaB64 / statsCols
         // corruption): nothing below it can be trusted — report and stop
@@ -3505,7 +3391,7 @@ object ManifestTable {
           schemaUnreadable = true, Map.empty, Map.empty)
     }
     val schemaUnreadable = false
-    val live = st.lines.map(_.split('|')(0))
+    val live = st.paths
     val missing = live.filterNot(r => f.exists(new Path(rootPath, r)))
     val badStats = scala.collection.mutable.ListBuffer[String]()
     // every file ANY retained manifest references (time travel must keep
@@ -3527,27 +3413,27 @@ object ManifestTable {
     // recorded file meta must match the physical file exactly — a drifted
     // byte length or row count would corrupt scan planning (bin packing,
     // estimateStatistics, bloom tiers) silently
-    for (l <- st.lines; (len, rows) <- lineFileMeta(l)) {
-      val rel = splitLine(l)._1
+    for (l <- st.lines; (len, rows) <- l.meta) {
+      val rel = l.path
       if (!missing.contains(rel)) {
         val p = new Path(rootPath, rel)
         if (f.getFileStatus(p).getLen != len) statViol += s"$rel[%#bytes]"
         else if (footerRowCount(spark, p) != rows) statViol += s"$rel[%#rows]"
       }
     }
-    if (st.statsCols.nonEmpty) for (l <- st.lines if splitLine(l)._3.nonEmpty) {
-      // the writers' legal shapes: split('|') drops TRAILING empty
-      // fields ('rel|mn|mx||' reads back 3 parts) and pre-migration
+    if (st.statsCols.nonEmpty) for (l <- st.lines if l.stats.nonEmpty) {
+      // the writers' legal shapes: the line parse drops TRAILING empty
+      // fields ('rel|mn|mx||' reads back one pair) and pre-migration
       // lines carry stats for a PREFIX of the registered columns — both
-      // pad conservatively exactly as pruneLines reads them. Malformed =
+      // read as empty pairs exactly as pruneLines reads them. Malformed =
       // longer than the registration allows, or a dangling half pair.
-      val (rel, _, sf) = splitLine(l)
-      if (sf.length > 2 * st.statsCols.length ||
-        sf.length % 2 == 1) badStats += rel
+      val rel = l.path
+      if (l.stats.length > 2 * st.statsCols.length ||
+        l.stats.length % 2 == 1) badStats += rel
       else {
-        val parts = sf.padTo(2 * st.statsCols.length, "")
         val recorded = st.statsCols.zipWithIndex.map { case ((c, t), i) =>
-          (c, t, parts(2 * i), parts(2 * i + 1))
+          val (mn, mx) = l.bounds(i)
+          (c, t, mn, mx)
         }
         val parseOk = recorded.forall { case (_, t, mn, mx) =>
           (mn.isEmpty && mx.isEmpty) || ((mn.nonEmpty && mx.nonEmpty) &&

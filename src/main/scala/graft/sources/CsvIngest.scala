@@ -33,10 +33,13 @@ object CsvIngest {
 
   /** S1 — all-string read (current-source parity: every column String,
     * `""` preserved, "NA" literal). Schema is taken from the header.
+    * Quoted fields may span lines (RFC 4180, as [[parseUpload]] reads
+    * them): `multiLine` parses each file whole rather than by line splits.
     */
   def readAllString(spark: SparkSession, path: String, delimiter: String = ","): DataFrame = {
     val df = spark.read
       .option("header", "true")
+      .option("multiLine", "true")
       .option("sep", delimiter)
       .option("nullValue", NeverNull)
       .option("emptyValue", "")
@@ -52,11 +55,13 @@ object CsvIngest {
 
   /** S1 (inferred mode) — the old-revision behavior recovered from the
     * reference's `.pyc` (SURVEY.md §8): numeric → Float64/Int64, datetime →
-    * DateTime, else String. Spark's schema inference subsumes it.
+    * DateTime, else String. Spark's schema inference subsumes it. Quoted
+    * fields may span lines, as in [[readAllString]].
     */
   def readInferred(spark: SparkSession, path: String, delimiter: String = ","): DataFrame = {
     val df = spark.read
       .option("header", "true")
+      .option("multiLine", "true")
       .option("sep", delimiter)
       .option("inferSchema", "true")
       .csv(path)
@@ -181,26 +186,38 @@ object CsvIngest {
       status: String, count: Long, columns: Seq[String], table: String,
       importedAt: String)
 
+  /** One lock per target table name (case-insensitive, as the catalog
+    * resolves names): two appends into one managed table share its
+    * `_temporary` job dir, and the second job's commit fails on files the
+    * first one moved or cleaned.
+    */
+  private val importLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
   /** Import end-to-end (flatfile→table): ensure table, append rows, return
     * the envelope — parity with main.py:288-294; failures wrap as
-    * `Import failed: …` (main.py:295-302).
+    * `Import failed: …` (main.py:295-302). Imports into one table run one
+    * at a time; imports into different tables run concurrently.
     */
   def importInto(df: DataFrame, table: String = DefaultImportTable): ImportResult =
-    try {
-      createIfNotExists(df, table)
-      append(df, table)
-      val n = df.count()
-      logger.info(s"Inserted $n/$n rows") // main.py:286 (single distributed batch)
-      ImportResult(
-        "success", n, df.columns.toSeq, table,
-        java.time.LocalDateTime.now().toString)
-    } catch {
-      case e: IngestError =>
-        logger.error(s"Import error: ${e.getMessage}")
-        throw e
-      case e: Exception =>
-        logger.error(s"Import error: ${e.getMessage}")
-        throw IngestError.ImportFailed(e.getMessage)
+    importLocks.computeIfAbsent(table.toLowerCase(java.util.Locale.ROOT),
+      _ => new AnyRef).synchronized {
+      try {
+        createIfNotExists(df, table)
+        append(df, table)
+        val n = df.count()
+        logger.info(s"Inserted $n/$n rows") // main.py:286 (single distributed batch)
+        ImportResult(
+          "success", n, df.columns.toSeq, table,
+          java.time.LocalDateTime.now().toString)
+      } catch {
+        case e: IngestError =>
+          logger.error(s"Import error: ${e.getMessage}")
+          throw e
+        case e: Exception =>
+          logger.error(s"Import error: ${e.getMessage}")
+          throw IngestError.ImportFailed(e.getMessage)
+      }
     }
 
   /** All-string schema helper for symmetric round-trips. */

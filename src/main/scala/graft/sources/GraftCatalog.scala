@@ -1022,7 +1022,7 @@ class GraftProcedure(catalog: GraftCatalog, verb: String)
           if (cur < 0) (0, None: Option[Long], None: Option[Long], "")
           else {
             val st = ManifestTable.scanState(spark, root, None)
-            val metas = st.lines.map(ManifestTable.lineFileMeta)
+            val metas = st.lines.map(_.meta)
             val b = if (metas.nonEmpty && metas.forall(_.isDefined))
               Some(metas.flatten.map(_._1).sum) else None
             val r = if (metas.nonEmpty && metas.forall(_.isDefined))

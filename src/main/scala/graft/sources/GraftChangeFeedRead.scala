@@ -332,11 +332,11 @@ object GraftCdfScan {
     *
     * Plan cost discipline (round 18, closing VERDICT r17 "what's wrong"
     * #1): the path→line map is maintained INCREMENTALLY across the loop
-    * — each version splits its own lines once (unavoidable: the path set
-    * IS the diff), but line meta parses only for files the version
-    * ADDED, and removed files drop out of the map at their removal
-    * version. A 10⁴-version, 10⁵-file history plans in O(Σ per-version
-    * lines), not O(versions × files) re-splits.
+    * — each version's lines parse once, when its manifest is read
+    * (unavoidable: the path set IS the diff); the map takes only the
+    * files a version ADDED, and removed files drop out of it at their
+    * removal version. A 10⁴-version, 10⁵-file history plans in O(Σ
+    * per-version lines), not O(versions × files) re-splits.
     */
   private[sources] def planVersionRange(
       spark: SparkSession, root: String,
@@ -346,12 +346,12 @@ object GraftCdfScan {
     val conf = spark.sparkContext.hadoopConfiguration
     val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
     // live files' manifest lines, maintained across the version loop
-    val lineOf = scala.collection.mutable.HashMap[String, String]()
-    ManifestTable.versionLines(spark, root, fromVersion - 1)
-      .foreach(l => lineOf(l.split('|')(0)) = l)
+    val lineOf = scala.collection.mutable.HashMap[String, ManifestTable.FileLine]()
+    ManifestTable.snapshot(spark, root, fromVersion - 1).lines
+      .foreach(l => lineOf(l.path) = l)
     var prevPaths = lineOf.keySet.toSet
     def lenOf(rel: String): Long =
-      lineOf.get(rel).flatMap(l => ManifestTable.lineFileMeta(l).map(_._1))
+      lineOf.get(rel).flatMap(_.meta.map(_._1))
         .getOrElse {
           lenProbeCount.incrementAndGet()
           val p = new Path(root, rel)
@@ -371,14 +371,10 @@ object GraftCdfScan {
             }
         }
     for (v <- fromVersion to toVersion) {
-      val (lines, statsCols, verTs) =
-        ManifestTable.versionLineState(spark, root, v)
-      val pathed = lines.map(l => (l.split('|')(0), l))
-      val paths = pathed.map(_._1).toSet
+      val st = ManifestTable.snapshot(spark, root, v)
+      val paths = st.paths.toSet
       val addedPaths = paths -- prevPaths
-      pathed.foreach { case (p0, l) =>
-        if (addedPaths.contains(p0)) lineOf(p0) = l
-      }
+      st.lines.foreach(l => if (addedPaths.contains(l.path)) lineOf(l.path) = l)
       val removedPaths = prevPaths -- paths
       // zone/bloom/partition pruning of THIS version's changed subset,
       // under this version's own stats registration — sound superset
@@ -391,8 +387,7 @@ object GraftCdfScan {
             if (pruning.preds.isEmpty && pruning.bloomKeys.isEmpty)
               ps.toSeq
             else ManifestTable.pruneScanFiles(spark, root,
-              ManifestTable.ScanState(
-                v, ps.toSeq.sorted.map(lineOf), statsCols, None),
+              st.copy(lines = ps.toSeq.sorted.map(lineOf)),
               pruning.preds, pruning.bloomKeys)
           zoned.filter(keepPart)
         }
@@ -401,7 +396,7 @@ object GraftCdfScan {
           spark, rels.sorted.map(r => (r, lenOf(r))))
           .foreach {
             case g: GraftFilesPartition =>
-              out += GraftCdfPartition(g.files, changeType, v, verTs)
+              out += GraftCdfPartition(g.files, changeType, v, st.header.ts)
             case other => throw new IllegalStateException(
               s"unexpected packed partition $other")
           }

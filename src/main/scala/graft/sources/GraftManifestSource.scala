@@ -275,6 +275,17 @@ object GraftManifestSource {
       case _ => keep.contains(dirValue)
     }
 
+  /** A directory partition value as the readers' row value of type `dt`
+    * (dates as epoch days, non-numeric levels as UTF-8 strings).
+    */
+  private[sources] def typedPartValue(dt: DataType, dirValue: String): Any =
+    dt match {
+      case IntegerType => dirValue.trim.toInt
+      case LongType => dirValue.trim.toLong
+      case DateType => dateDays(dirValue)
+      case _ => UTF8String.fromString(dirValue)
+    }
+
   private[sources] def partSegments(rel: String): Seq[(String, String)] =
     rel.split('/').dropRight(1).toSeq.map { seg =>
       val i = seg.indexOf('=')
@@ -530,7 +541,7 @@ class GraftManifestTable(
   private[sources] def tableExists: Boolean =
     ManifestTable.currentVersion(spark, root) >= 0
 
-  private[sources] lazy val state: ManifestTable.ScanState =
+  private[sources] lazy val state: ManifestTable.Snapshot =
     if (tableExists || declaredSchema.isEmpty)
       ManifestTable.scanState(spark, root, versionAsOf)
     else {
@@ -538,9 +549,9 @@ class GraftManifestTable(
       // schema (minus IDENTITY partition columns — they are
       // directory-derived; a transform's SOURCE column is data and stays)
       val ds = declaredSchema.get
-      ManifestTable.emptyScanState(StructType(
+      ManifestTable.Snapshot.empty(Some(StructType(
         ds.fields.filterNot(f =>
-          identityDeclaredCols.contains(f.name)).toSeq))
+          identityDeclaredCols.contains(f.name)).toSeq)))
     }
 
   /** Declared partition SPECS (round 19 — hidden-partition transforms):
@@ -569,8 +580,7 @@ class GraftManifestTable(
     * (one per level — every file of a table has the same level names).
     */
   private[sources] lazy val filePartValues: Map[String, Seq[String]] =
-    state.lines.map { l =>
-      val rel = l.split('|')(0)
+    state.paths.map { rel =>
       rel -> GraftManifestSource.partSegments(rel).map(_._2)
     }.toMap
 
@@ -580,7 +590,7 @@ class GraftManifestTable(
   private[sources] lazy val partitionCols: Seq[String] =
     state.lines.headOption match {
       case Some(l) =>
-        GraftManifestSource.partSegments(l.split('|')(0)).map(_._1)
+        GraftManifestSource.partSegments(l.path).map(_._1)
       case None => declaredSpecs.map(_.levelName)
     }
 
@@ -605,8 +615,8 @@ class GraftManifestTable(
     * `load(root)` path, type-identical to the Scala read, spec-pinned).
     */
   private[sources] lazy val partitionTypes: Seq[DataType] = {
-    lazy val perFile = state.lines.map(l =>
-      GraftManifestSource.partSegments(l.split('|')(0)).map(_._2))
+    lazy val perFile = state.paths.map(rel =>
+      GraftManifestSource.partSegments(rel).map(_._2))
     partitionCols.zipWithIndex.map { case (pc, i) =>
       // a DERIVED level (days/bucket) compares as its rendered STRING —
       // type inference would respell '2024-01-15' as DATE and diverge
@@ -1290,7 +1300,8 @@ class GraftManifestScan(
       keep.forall { case (c, ks) =>
         val li = table.partitionCols.indexOf(c)
         li < 0 || li >= vals.size ||
-          partValueKept(table.partitionTypes(li), ks, vals(li))
+          GraftManifestSource.partValueKept(
+            table.partitionTypes(li), ks, vals(li))
       } && partRanges.forall { case (c, (lo, hi)) =>
         val li = table.partitionCols.indexOf(c)
         li < 0 || li >= vals.size ||
@@ -1376,17 +1387,12 @@ class GraftManifestScan(
     runtimeChosen = Some(keep)
   }
 
-  private def partValueKept(
-      dt: DataType, keep: Set[String], dirValue: String): Boolean =
-    GraftManifestSource.partValueKept(dt, keep, dirValue)
-
   /** Per-file (bytes, rows) from the manifest's own `%#` line meta —
     * planning needs ZERO per-file filesystem calls on tables written
     * since the meta landed (round 16).
     */
   private lazy val lineMetaOf: Map[String, (Long, Long)] =
-    table.state.lines.flatMap(l =>
-      ManifestTable.lineFileMeta(l).map(m => l.split('|')(0) -> m)).toMap
+    table.state.lines.flatMap(l => l.meta.map(l.path -> _)).toMap
 
   /** Chosen files the manifest carries NO meta for (pre-meta lines) —
     * exactly the files [[fileLens]] must status-probe. The spec pins 0
@@ -1728,11 +1734,10 @@ class GraftMicroBatchStream(
     if (to <= from) return Array.empty
     val added = scala.collection.mutable.ArrayBuffer[String]()
     var prevPaths =
-      ManifestTable.versionLines(spark, table.root, from)
-        .map(_.split('|')(0)).toSet
+      ManifestTable.snapshot(spark, table.root, from).paths.toSet
     for (v <- (from + 1) to to) {
-      val lines = ManifestTable.versionLines(spark, table.root, v)
-      val paths = lines.map(_.split('|')(0)).toSet
+      val lines = ManifestTable.snapshot(spark, table.root, v).lines
+      val paths = lines.map(_.path).toSet
       val removed = prevPaths -- paths
       if (removed.nonEmpty) throw new IllegalStateException(
         s"graft-manifest streaming: version $v of ${table.root} REMOVED " +
@@ -1740,19 +1745,15 @@ class GraftMicroBatchStream(
           "removals are not representable in an append stream; consume " +
           "rewriting tables through graft.streaming.ChangeFeed")
       // per-batch zone/bloom pruning over the ADDED lines only
-      val addedLines = lines.filter(l => !prevPaths.contains(l.split('|')(0)))
-      val st = ManifestTable.emptyScanState(new StructType())
-        .copy(version = v, lines = addedLines,
-          statsCols = table.state.statsCols)
-      added ++= ManifestTable.pruneScanFiles(
-        spark, table.root, st, preds, bloomKeys)
+      val addedLines = lines.filter(l => !prevPaths.contains(l.path))
+      added ++= ManifestTable.pruneScanFiles(spark, table.root,
+        table.state.copy(lines = addedLines), preds, bloomKeys)
       prevPaths = paths
     }
     val conf = spark.sparkContext.hadoopConfiguration
-    val metaOf: Map[String, Long] = (ManifestTable
-      .versionLines(spark, table.root, to))
-      .flatMap(l => ManifestTable.lineFileMeta(l)
-        .map(m => l.split('|')(0) -> m._1)).toMap
+    val metaOf: Map[String, Long] =
+      ManifestTable.snapshot(spark, table.root, to).lines
+        .flatMap(l => l.meta.map(m => l.path -> m._1)).toMap
     GraftManifestSource.packFiles(spark, added.toSeq.map { rel =>
       val len = metaOf.getOrElse(rel, {
         val p = new Path(table.root, rel)
@@ -1843,14 +1844,6 @@ class GraftPartitionReader(
   private var maskOrd: Array[Int] = _
   private var maskPrim: Array[org.apache.parquet.schema.PrimitiveType] = _
 
-  private def typedPartValue(dt: DataType, dirValue: String): Any =
-    dt match {
-      case IntegerType => dirValue.trim.toInt
-      case LongType => dirValue.trim.toLong
-      case DateType => GraftManifestSource.dateDays(dirValue)
-      case _ => UTF8String.fromString(dirValue)
-    }
-
   private def openNextFile(): Boolean = {
     if (reader != null) { reader.close(); reader = null }
     fileIdx += 1
@@ -1858,7 +1851,8 @@ class GraftPartitionReader(
     val (rel, _) = files(fileIdx)
     val segVals = GraftManifestSource.partSegments(rel).map(_._2)
     partValues = partCols.zipWithIndex.map { case ((_, dt), li) =>
-      if (li < segVals.size) typedPartValue(dt, segVals(li)) else null
+      if (li < segVals.size) GraftManifestSource.typedPartValue(dt, segVals(li))
+      else null
     }.toArray
     fileValue = UTF8String.fromString(rel)
     val p = new Path(root, rel)
@@ -2146,14 +2140,6 @@ class GraftColumnarReader(
       }
     }
 
-  private def typedPartValue(dt: DataType, dirValue: String): Any =
-    dt match {
-      case IntegerType => dirValue.trim.toInt
-      case LongType => dirValue.trim.toLong
-      case DateType => GraftManifestSource.dateDays(dirValue)
-      case _ => UTF8String.fromString(dirValue)
-    }
-
   private var fileIdx = -1
   // vectorized mode state
   private var vec: VectorizedParquetRecordReader = _
@@ -2199,7 +2185,7 @@ class GraftColumnarReader(
     def constValueFor(i: Int): Any = constSrc(i) match {
       case -2 => UTF8String.fromString(rel)
       case li if li < segVals.size =>
-        typedPartValue(partCols(li)._2, segVals(li))
+        GraftManifestSource.typedPartValue(partCols(li)._2, segVals(li))
       case _ => null
     }
     val present = neededData.map(_.name).filter(fileSchema.containsField)

@@ -689,6 +689,62 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.read(spark, root2).get.count() == 38L)
   }
 
+  test("manifest header codec: parse inverts render over every optional field; legacy headers still parse") {
+    import ManifestTable.Header
+    val b64 = Header.encodeSchema(org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType))))
+    val full = Header(7L, 3L, Some("merge"), Seq("a", "b"), Some(1700000000000L),
+      Seq(("k", "long"), ("s", "string")), Some(b64), Some(2L), Some(4), Some(40L))
+    // the on-disk key order and spelling, pinned byte for byte
+    assert(full.render == "{\"version\":7,\"batch\":3,\"op\":\"merge\"," +
+      "\"opKey\":\"a,b\",\"ts\":1700000000000," +
+      "\"statsCols\":\"k:long,s:string\",\"schemaB64\":\"" + b64 + "\"," +
+      "\"restoredFrom\":2,\"nf\":4,\"nr\":40}")
+    Seq(
+      Header(0L, -1L),
+      full,
+      full.copy(statsCols = Seq(("k", "long"))),
+      full.copy(statsCols = Seq(("s", "string"))),
+      full.copy(opKey = Nil, restoredFrom = None, nr = None),
+      full.copy(op = None, ts = None, statsCols = Nil, schemaB64 = None,
+        nf = None)
+    ).foreach(h => assert(Header.parse(h.render) == h, h.render))
+    // one long column keeps the original single "statsCol" key (U5 pin)
+    assert(full.copy(statsCols = Seq(("k", "long"))).render
+      .contains("\"statsCol\":\"k\","))
+    // the legacy shapes specs write by hand: a single statsCol, no
+    // op/ts/nf/nr, no schemaB64 — and a header without batch refuses
+    assert(Header.parse("{\"version\":0,\"batch\":0,\"statsCol\":\"k\"}") ==
+      Header(0L, 0L, statsCols = Seq(("k", "long"))))
+    assert(Header.parse("{\"version\":0,\"batch\":0,\"schemaB64\":\"" + b64 +
+      "\"}") == Header(0L, 0L, schemaB64 = Some(b64)))
+    intercept[IllegalStateException](Header.parse("{broken"))
+  }
+
+  test("optimistic concurrency: a partition fold losing its publish race to a disjoint commit aborts; the winner's rows stand") {
+    val root = tmpDir("graft_manifest_occ_fold") + "/t"
+    for (b <- 0 until 3)
+      ManifestTable.commit(spark, root,
+        Seq((b, 100L + b)).toDF("k", "v").withColumn("part", lit(s"b$b")),
+        "part", batchId = b.toLong)
+    // the fold consumes every live file, so even a commit that only ADDS
+    // a new partition invalidates it: the retry must refuse, never carry
+    intercept[java.util.ConcurrentModificationException] {
+      ManifestTable.optimizeRewritePartitions(spark, root, "folded",
+        beforePublish = () => {
+          ManifestTable.commit(spark, root,
+            Seq((9, 109L)).toDF("k", "v").withColumn("part", lit("b9")),
+            "part", batchId = 9L): Unit
+        })
+    }
+    assert(rows(ManifestTable.read(spark, root).get) ==
+      Set((0, 100L), (1, 101L), (2, 102L), (9, 109L)))
+    assert(ManifestTable.lastBatch(spark, root) == 9L)
+    // the fold's staged output is unreferenced debris, never corruption
+    assert(ManifestTable.fsck(spark, root).ok)
+  }
+
   test("optimistic concurrency: deleteRows racing a disjoint ingest converges; a same-partition race aborts") {
     val root = tmpDir("graft_manifest_occ6") + "/t"
     val data = (0 until 8).map(i => (i, 100L + i))

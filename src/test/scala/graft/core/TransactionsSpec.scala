@@ -423,5 +423,26 @@ class TransactionsSpec extends SparkSpec {
     assert(ManifestTable.history(spark, root).head.operation == "restore")
     // restoring to the head is a no-op
     assert(ManifestTable.restoreVersion(spark, root, 2L) == 2L)
+    // a restore of a restore (v2), then of a keyed merge version (v3):
+    // the new raw header names its own target, carries nf/nr once each,
+    // matching the live lines, and drops the source's opKey
+    ManifestTable.merge(spark, root, Seq((1L, "p0")).toDF("k", "part"), "k",
+      batchId = 5L)
+    def raw(v: Long): (String, Int) = {
+      val all = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s"$root/_manifest/v$v.json"))
+      (all.get(0), all.size - 1)
+    }
+    assert(raw(3L)._1.contains("\"opKey\":\"k\""), raw(3L)._1)
+    for ((target, restoredAt) <- Seq(2L -> 4L, 3L -> 5L)) {
+      assert(ManifestTable.restoreVersion(spark, root, target) == restoredAt)
+      val (h, nLines) = raw(restoredAt)
+      def nums(key: String) = s""""$key":(-?\\d+)""".r.findAllMatchIn(h)
+        .map(_.group(1).toLong).toList
+      assert(nums("nf") == List(nLines.toLong), h)
+      assert(nums("nr") == List(ManifestTable.read(spark, root).get.count()), h)
+      assert(nums("restoredFrom") == List(target), h)
+      assert(!h.contains("opKey"), h)
+    }
   }
 }

@@ -199,6 +199,24 @@ class HttpFacadeSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  test("concurrent uploads into one table all succeed and every row lands") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val tbl = s"graft_http_conc_${System.nanoTime()}"
+    try {
+      val csv = "city,pop\nparis,2100000\nlyon,520000\n"
+      val clients = (0 until 2).map(_ => Future {
+        (0 until 4).map(_ =>
+          post(s"/flatfile-to-clickhouse?table=$tbl&filename=up.csv", csv))
+      })
+      val responses = clients.flatMap(c =>
+        Await.result(c, scala.concurrent.duration.Duration(5, "min")))
+      assert(responses.forall(_.statusCode() == 200),
+        responses.map(r => s"${r.statusCode()} ${r.body()}").mkString("; "))
+      assert(spark.table(tbl).count() == 2L * 4 * 2)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
   test("multipart rejections: missing conn part → 422; bad filename → 400") {
     val boundary = "GraftBoundary7431"
     def mpPost(bodyText: String): HttpResponse[String] =

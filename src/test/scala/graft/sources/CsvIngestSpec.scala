@@ -61,6 +61,20 @@ class CsvIngestSpec extends SparkSpec {
     assert(rows(1).getString(1) == "plain")
   }
 
+  test("file reads keep quoted embedded LF and CRLF: the same rows as parseUpload") {
+    val content =
+      "id,note\n1,\"line one\nline two\"\n2,\"crlf one\r\ncrlf two\"\n3,plain\n"
+    val p = write("nl.csv", content)
+    val expected = CsvIngest.parseUpload(spark, "nl.csv", content)
+      .orderBy("id").collect().toSeq
+    assert(expected.map(_.getString(1)) ==
+      Seq("line one\nline two", "crlf one\r\ncrlf two", "plain"))
+    assert(CsvIngest.readAllString(spark, p).orderBy("id").collect().toSeq ==
+      expected)
+    assert(CsvIngest.readInferred(spark, p).orderBy("id").collect().toSeq
+      .map(_.getString(1)) == expected.map(_.getString(1)))
+  }
+
   test("parseUpload: CRLF records, quoted delimiter, short rows padded") {
     val content = "id,a,b\r\n1,\"x,y\",z\r\n2,only\r\n"
     val df = CsvIngest.parseUpload(spark, "u.csv", content)
