@@ -3,6 +3,7 @@ package graft.catalog
 import graft.api.{IngestError, Validation}
 import graft.core.Types
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Catalog / metadata operators — SURVEY.md §2.1 (C1–C5).
@@ -19,14 +20,23 @@ object Catalog {
   val ListCap = 1000
 
   def listTables(spark: SparkSession): Seq[String] =
-    spark.catalog.listTables().limit(ListCap).collect().map(_.name).toSeq.sorted
+    sessionTables(spark).take(ListCap).map(_.table).sorted
 
   /** Temp-view-only listing — deterministic under concurrent persistent-table
     * churn (e.g. the import round-trip's managed table); sorted then capped.
     */
   def listTempViews(spark: SparkSession): Seq[String] =
-    spark.catalog.listTables().collect().toSeq
-      .filter(_.isTemporary).map(_.name).sorted.take(ListCap)
+    sessionTables(spark).filter(_.database.isEmpty).map(_.table).sorted.take(ListCap)
+
+  /** The current database's tables plus the session's temp views (the
+    * latter without a database) — the identifiers `spark.catalog.listTables()`
+    * reports, read from the session catalog instead of built into a
+    * Dataset and collected, which cost a Spark job per call.
+    */
+  private def sessionTables(spark: SparkSession): Seq[TableIdentifier] = {
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase)
+  }
 
   def listTablesDf(spark: SparkSession): DataFrame = {
     val rows = listTables(spark).map(Row(_))
@@ -63,9 +73,16 @@ object Catalog {
     describeTable(spark, table).toDF()
   }
 
-  /** C4 — connectivity probe (`SELECT 1`, main.py:310-328). */
-  def health(spark: SparkSession): Boolean =
-    spark.sql("SELECT 1").collect().head.getInt(0) == 1
+  /** C4 — connectivity probe (main.py:310-328), metadata-only: the
+    * session is usable iff its SparkContext is running and its catalog can
+    * answer for the current database. The reference sends `SELECT 1` to
+    * its remote ClickHouse; here the session IS the database, so asking
+    * its catalog is that probe — a `SELECT 1` cost a Spark job per call.
+    */
+  def health(spark: SparkSession): Boolean = {
+    val catalog = spark.sessionState.catalog
+    !spark.sparkContext.isStopped && catalog.databaseExists(catalog.getCurrentDatabase)
+  }
 
   /** Health envelope — field parity with main.py:321-328 ({status,
     * timestamp, services}); a failed probe raises ServiceUnavailable, the
@@ -76,7 +93,8 @@ object Catalog {
 
   def healthEnvelope(spark: SparkSession): HealthResult =
     try {
-      require(health(spark), "probe returned unexpected result")
+      require(health(spark),
+        "session unusable: SparkContext stopped or current database missing")
       HealthResult(
         "healthy",
         java.time.LocalDateTime.now().toString,

@@ -385,12 +385,19 @@ object ManifestTable {
   def readVersionRaw(
       spark: SparkSession, root: String, version: Long): DataFrame = {
     val st = readSnapshot(spark, root, version)
-    val files = st.paths
-    // the recorded data schema (when present) drives the read: files
-    // written before a column was added lack it physically, and parquet
-    // null-fills missing columns under an explicit schema — S8's
-    // mergeSchema semantics without paying schema inference over every
-    // file. Partition columns stay directory-derived via basePath.
+    readSnapshotFiles(spark, root, st, st.paths)
+  }
+
+  /** `files` (relative paths of `st`'s lines) read under `st`'s schema.
+    * The recorded data schema (when present) drives the read: files
+    * written before a column was added lack it physically, and parquet
+    * null-fills missing columns under an explicit schema — S8's
+    * mergeSchema semantics without paying schema inference (a Spark job)
+    * over the files. Partition columns stay directory-derived via basePath.
+    */
+  private def readSnapshotFiles(
+      spark: SparkSession, root: String, st: Snapshot,
+      files: Seq[String]): DataFrame = {
     val reader = st.schema match {
       case Some(sch) => spark.read.schema(sch)
       case None => spark.read
@@ -1509,8 +1516,14 @@ object ManifestTable {
       spark: SparkSession,
       root: String,
       preds: Seq[ZonePred]): (Seq[String], Int) = {
-    require(preds.nonEmpty, "need at least one zone-map predicate")
     val st = head(spark, root)
+    (prunedPaths(root, st, preds), st.lines.length)
+  }
+
+  /** [[prunedFilesMulti]]'s paths, over an already-read snapshot. */
+  private def prunedPaths(
+      root: String, st: Snapshot, preds: Seq[ZonePred]): Seq[String] = {
+    require(preds.nonEmpty, "need at least one zone-map predicate")
     require(st.version >= 0, s"no committed version under $root")
     val statsCols = st.statsCols
     preds.foreach { pr =>
@@ -1527,7 +1540,7 @@ object ManifestTable {
         s"zone-map column '${pr.column}' is ${reg.get._2}-typed; the " +
           s"predicate is $want-typed — match the registered type")
     }
-    (pruneLines(st.lines, statsCols, preds), st.lines.length)
+    pruneLines(st.lines, statsCols, preds)
   }
 
   /** The line-level core of [[prunedFilesMulti]]: paths of the lines whose
@@ -1565,16 +1578,20 @@ object ManifestTable {
   /** Read the latest version restricted to files that can contain rows
     * matching ALL the zone predicates — a SUPERSET of the matching rows
     * (the PushedFilters contract: callers still apply the row filter).
+    * One head read serves both the pruning and the read, which takes the
+    * head's recorded schema: the columns are [[read]]'s, not those of
+    * whichever pruned file comes first, and no schema inference job runs.
     */
   def readPrunedMulti(
       spark: SparkSession,
       root: String,
       preds: Seq[ZonePred]): DataFrame = {
-    val (files, _) = prunedFilesMulti(spark, root, preds)
+    val st = head(spark, root)
+    val files = prunedPaths(root, st, preds)
+    // no candidate file: the head's frame, emptied
     if (files.isEmpty)
-      readVersion(spark, root, currentVersion(spark, root)).limit(0)
-    else applyDvMask(spark, root, spark.read.option("basePath", root)
-      .parquet(files.map(f => s"$root/$f"): _*))
+      applyDvMask(spark, root, readSnapshotFiles(spark, root, st, st.paths)).limit(0)
+    else applyDvMask(spark, root, readSnapshotFiles(spark, root, st, files))
   }
 
   /** ZONE-MAP file pruning (U6 — the manifest-resident data-skipping move
@@ -3318,9 +3335,9 @@ object ManifestTable {
       // nor regress the ingest fence
       Publish("delete", s.batch, s.statsCols, s.header.schemaB64,
         carried ++ myLines, _ => {
-          val nKept = if (newFiles.isEmpty) 0L
-            else spark.read.option("basePath", root)
-              .parquet(newFiles.map(nf => s"$root/$nf"): _*).count()
+          // the survivors' rows, from the `%#bytes:rows` meta that
+          // dataFileLine read off the new files' footers
+          val nKept = myLines.map(_.meta.get._2).sum
           Some(DeleteStats(
             partitionsRewritten = stagedParts.size,
             partitionsEmptied = touchedNames.diff(stagedParts).size,

@@ -75,6 +75,19 @@ class CatalogSpec extends SparkSpec {
     assert(Types.fromExternalName("SomethingElse") == StringType)
   }
 
+  test("listings, existence, describe and health launch no Spark job in any group") {
+    Tables.registerAll(spark, sf)
+    val calls = Seq[(String, () => Any)](
+      "listTables" -> (() => Catalog.listTables(spark)),
+      "listTempViews" -> (() => Catalog.listTempViews(spark)),
+      "tableExists" -> (() => Catalog.tableExists(spark, "lineitem")),
+      "describeTable" -> (() => Catalog.describeTable(spark, "lineitem")),
+      "health" -> (() => Catalog.health(spark)),
+      "healthEnvelope" -> (() => Catalog.healthEnvelope(spark)))
+    val launched = calls.map { case (name, call) => name -> jobGroupsDuring(call()).size }
+    assert(launched.forall(_._2 == 0), s"jobs launched per call: $launched")
+  }
+
   test("catalog ops launch no Spark job (lightweight-metadata parity)") {
     Tables.registerAll(spark, sf)
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length

@@ -20,6 +20,16 @@ class CompactionSpec extends SparkSpec {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
+  test("compacting zero-row input files reports 0 rows") {
+    val in = tmpDir("graft_compact_empty_in_")
+    val out = tmpDir("graft_compact_empty_out_")
+    Tables.load(spark, sf, "nation").limit(0).write.mode("overwrite").parquet(in)
+    val stats = Compaction.compact(spark, in, out)
+    assert(stats.inputFiles >= 1, "the fixture wrote no file")
+    assert(stats.rows == 0L)
+    assert(spark.read.parquet(out).count() == 0L)
+  }
+
   test("output file count tracks the byte target") {
     val in = tmpDir("graft_compact_in2_")
     val out = tmpDir("graft_compact_out2_")

@@ -139,6 +139,16 @@ class IndexOptimizeSpec extends SparkSpec {
       "heavy-hitters search")
   }
 
+  test("a fold whose tombstones delete every row reports 0 rows") {
+    val few = docs.filter(col("doc_id") < 10).localCheckpoint(true)
+    val path = tmpDir("opt_all_deleted")
+    Retrieval.buildTextIndex(few, path)
+    Retrieval.deleteFromTextIndex(spark, path, few.select("doc_id"))
+    val stats = Retrieval.optimizeTextIndex(spark, path)
+    assert(stats.map(s => (s.rel, s.rows)) == Seq(("postings", 0L)))
+    assert(spark.read.parquet(s"$path/postings").count() == 0L)
+  }
+
   test("mid-swap crash recovery: recover promotes __optnext, next optimize self-heals") {
     val c1 = docs.filter(col("doc_id") % 2 === 0)
     val c2 = docs.filter(col("doc_id") % 2 === 1)

@@ -130,6 +130,32 @@ class ManifestTableSpec extends SparkSpec {
       folded.filter(col("v").isNull).count() == 1L)
   }
 
+  test("readPruned reads under the head's schema: a pre-column file gets read's columns, no inference job") {
+    import org.apache.spark.sql.functions.lit
+    val root = tmpDir("graft_manifest_pruned_evo") + "/t"
+    // keys 0-9 land before the column `extra` exists, keys 10-19 with it
+    ManifestTable.commit(spark, root,
+      (0L until 10L).map(k => (k, 2 * k)).toDF("k", "v").withColumn("part", lit("b0")),
+      "part", batchId = 0L, statsCol = Some("k"))
+    ManifestTable.commit(spark, root,
+      (10L until 20L).map(k => (k, 2 * k, s"x$k")).toDF("k", "v", "extra")
+        .withColumn("part", lit("b1")),
+      "part", batchId = 1L, statsCol = Some("k"))
+    val full = ManifestTable.read(spark, root).get
+    var pruned: org.apache.spark.sql.DataFrame = null
+    val jobs = jobGroupsDuring {
+      pruned = ManifestTable.readPruned(spark, root, "k", 5L, 12L)
+    }
+    assert(jobs.isEmpty, s"building the pruned frame ran ${jobs.size} job(s)")
+    assert(pruned.schema == full.schema,
+      s"pruned ${pruned.schema.simpleString} vs read ${full.schema.simpleString}")
+    val range = col("k").between(5L, 12L)
+    val want = full.filter(range)
+    val got = pruned.filter(range)
+    assert(got.count() == 8L && got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(got.filter(col("extra").isNull).count() == 5L) // keys 5-9 null-fill
+  }
+
   test("schema evolution: int->long and float->double widen losslessly in either order; other changes refuse") {
     import org.apache.spark.sql.types.{DoubleType, LongType}
     val root = tmpDir("graft_manifest_widen") + "/t"

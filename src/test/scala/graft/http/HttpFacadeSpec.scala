@@ -273,6 +273,65 @@ class HttpFacadeSpec extends SparkSpec {
     assert(jobj(missing)("detail").str.contains("Not Found"))
   }
 
+  test("responses leave without waiting for the client's delayed ACK: median 404 under 20 ms") {
+    assert(get("/no-such-route").statusCode() == 404) // connection warm-up
+    val ms = (1 to 30).map { _ =>
+      val t0 = System.nanoTime()
+      assert(get("/no-such-route").statusCode() == 404)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    // with Nagle on, the body segment waits for the ACK of the headers
+    // segment, which a delaying client sends after 40 ms or more
+    assert(ms(ms.length / 2) < 20.0, s"404 latencies (ms, sorted): ${ms.map(_.round)}")
+  }
+
+  test("each request's Spark jobs run under its own http-<route>-<n> job group") {
+    val body =
+      s"""{"conn":$conn,"selection":{"table":"region","columns":["r_regionkey","r_name"]}}"""
+    def exportGroups() =
+      jobGroupsDuring(assert(post("/clickhouse-to-flatfile", body).statusCode() == 200))
+    val first = exportGroups()
+    val second = exportGroups()
+    for (g <- Seq(first, second)) {
+      assert(g.nonEmpty, "the export launched no Spark job")
+      assert(g.forall(_.startsWith("http-clickhouse-to-flatfile-")), s"groups: $g")
+      assert(g.distinct.size == 1, s"one request, several groups: $g")
+    }
+    assert(first.head != second.head, "two requests shared a job group")
+  }
+
+  test("a pooled handler thread carries no job group into its next request") {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    def onPool[T](body: => T): T =
+      pool.submit(new java.util.concurrent.Callable[T] { def call(): T = body }).get()
+    def group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+    try {
+      assert(onPool(HttpFacade.inJobGroup(spark, "get-columns", 7)(group)) ==
+        "http-get-columns-7")
+      assert(onPool(group) == null)
+      intercept[java.util.concurrent.ExecutionException] {
+        onPool(HttpFacade.inJobGroup(spark, "health", 8)(throw new IllegalStateException("boom")))
+      }
+      assert(onPool(group) == null, "a failed request left its group on the thread")
+    } finally pool.shutdown()
+  }
+
+  test("GET /health answers 503 when the session's current database is gone") {
+    val db = "graft_health_dropped_db"
+    val lost = spark.newSession()
+    lost.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    lost.sql(s"USE $db")
+    spark.sql(s"DROP DATABASE $db CASCADE") // the shared session keeps `default`
+    val other = new HttpFacade(lost, name => lost.table(name), port = 0).start()
+    try {
+      val r = send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${other.boundPort}/health")).GET().build())
+      assert(r.statusCode() == 503)
+      assert(jobj(r)("detail").str.exists(_.startsWith("Service unavailable: ")))
+    } finally other.stop()
+    assert(get("/health").statusCode() == 200, "the shared session must stay healthy")
+  }
+
   test("malformed JSON body maps to 422, the body-validation slot") {
     assert(post("/connect-clickhouse", "{not json").statusCode() == 422)
     assert(post("/connect-clickhouse", """{"port":8123}""").statusCode() == 422)

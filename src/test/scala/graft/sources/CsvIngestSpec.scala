@@ -75,6 +75,22 @@ class CsvIngestSpec extends SparkSpec {
       .map(_.getString(1)) == expected.map(_.getString(1)))
   }
 
+  test("writeCsvCounted counts 0 for an empty result, filtered or emptied by a join") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val nation = graft.core.Tables.load(spark, sf, "nation")
+    val region = graft.core.Tables.load(spark, sf, "region")
+    assert(CsvIngest.writeCsvCounted(nation.filter(lit(false)), tmpDir("csv_counted_a")) == 0L)
+    val noRegion = region.filter(col("r_regionkey") < 0)
+    val joined = nation.join(noRegion, nation("n_regionkey") === noRegion("r_regionkey"))
+    assert(CsvIngest.writeCsvCounted(joined, tmpDir("csv_counted_b")) == 0L)
+    // the same join shuffled: an empty stage lets AQE drop operators above it
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try assert(CsvIngest.writeCsvCounted(joined, tmpDir("csv_counted_c")) == 0L)
+    finally spark.conf.set(key, prior)
+  }
+
   test("parseUpload: CRLF records, quoted delimiter, short rows padded") {
     val content = "id,a,b\r\n1,\"x,y\",z\r\n2,only\r\n"
     val df = CsvIngest.parseUpload(spark, "u.csv", content)
