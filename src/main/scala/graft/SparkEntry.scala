@@ -300,8 +300,8 @@ object SparkEntry {
 
   /** Recursive-CTE connected-components truth over the brute-force J>=0.6
     * near-dup pair set — min reachable id = cluster id. Shared by d7
-    * (min-label propagation) and d13 (alternating star operations): two
-    * distributed algorithms, one answer.
+    * (driver union-find under its pair gate) and d13 (alternating star
+    * operations): two algorithms, one answer.
     */
   private val ccClustersOracleSql: String = ccClustersOracleSqlOver("")
 
@@ -1907,13 +1907,15 @@ object SparkEntry {
       graft.operators.Dedup.audioNearDup(
         s.read.parquet(d15Media.get((s, dir))))),
     // Pairs -> clusters -> survivors: connected components over the d2
-    // near-dup pair set (min-label propagation vs the oracle's recursive CTE).
+    // near-dup pair set (union-find under Dedup.clusters' pair gate vs the
+    // oracle's recursive CTE).
     // Stage reuse: d7 clusters d2's memoized pair set; d8 joins d7's memoized
     // clusters — one pipeline, evaluated once.
     "d7_dedup_clusters" -> Entry((s, dir) => dedupClusters.get((s, dir))),
     // The O(log n)-round CC (alternating star operations) over the same
-    // memoized pair set — the algorithm for duplicate CHAINS whose diameter
-    // defeats bounded-round label propagation; same truth as d7.
+    // memoized pair set — the algorithm Dedup.clusters falls back to past
+    // its driver gate, exact on duplicate CHAINS of any diameter; same
+    // truth as d7.
     "d13_cc_twophase" -> Entry((s, dir) =>
       graft.operators.Dedup.clustersTwoPhase(
         t(s, dir, "documents").select(col("doc_id").as("id")),
@@ -4803,7 +4805,7 @@ object SparkEntry {
     // pair set d2 is gated on; min reachable id = cluster id.
     "d7_dedup_clusters" -> ccClustersOracleSql,
     // d13 answers the SAME question as d7 through a different distributed
-    // algorithm (alternating star operations vs min-label propagation) —
+    // algorithm (alternating star operations vs driver union-find) —
     // identical truth, so identical oracle.
     "d13_cc_twophase" -> ccClustersOracleSql,
     "d8_clean_corpus" ->

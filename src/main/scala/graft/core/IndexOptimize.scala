@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * partition and silently duplicate the index. The marker file
   * `_folded_batches` at the artifact root (one id per line, written
   * atomically BEFORE any partition is rewritten) closes that hole: absorb
-  * implementations consult [[isFolded]] and no-op on a folded id — correct
+  * implementations run under [[absorbBatch]] and no-op on a folded id — correct
   * in every crash ordering, because the marker is written only when the
   * batch's rows are durably present (either still in their own partition or
   * already consolidated).
@@ -111,6 +111,29 @@ object IndexOptimize {
     */
   def isFolded(root: String, batchId: String): Boolean =
     foldedBatches(root).contains(batchId)
+
+  /** The absorb fence every streamed artifact runs its batch write under:
+    * refuses an empty or reserved `batchId`; no-ops (one stderr line) on a
+    * batch a fold has taken in — its rows live in the consolidated
+    * partition, and re-absorbing would duplicate them (or, for heavy
+    * hitters, re-grow the layout the fold just collapsed); otherwise runs
+    * `write` (one `batch=<id>` partition per relation, mode Overwrite) and
+    * drops the session's cached listing of each `root/rel`, so a retried
+    * absorb's replaced part files are what same-session readers see.
+    */
+  def absorbBatch(spark: SparkSession, root: String, batchId: String,
+      rels: Seq[String])(write: => Unit): Unit = {
+    require(batchId.nonEmpty, "batchId must be a non-empty ingest-batch name")
+    require(batchId != FoldedPartition,
+      s"batch id '$batchId' is reserved for the consolidated OPTIMIZE partition")
+    if (isFolded(root, batchId)) {
+      System.err.println(s"[index-optimize] batch=$batchId already folded " +
+        s"into $root — absorb is a no-op")
+    } else {
+      write
+      rels.foreach(rel => spark.catalog.refreshByPath(s"$root/$rel"))
+    }
+  }
 
   private def writeMarker(root: String, ids: Set[String]): Unit = {
     val rootPath = new Path(root)

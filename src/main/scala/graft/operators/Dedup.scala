@@ -374,24 +374,16 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16): Unit = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    require(batchId.nonEmpty && batchId != "base",
-      "batchId must be a non-empty ingest-batch name other than the reserved 'base'")
-    require(batchId != graft.core.IndexOptimize.FoldedPartition,
-      s"batch id '$batchId' is reserved for the consolidated OPTIMIZE partition")
-    if (graft.core.IndexOptimize.isFolded(index, batchId)) {
-      // retry-after-OPTIMIZE fence: rows already in the consolidated
-      // partition — re-absorbing would duplicate every downstream pair
-      System.err.println(s"[index-optimize] batch=$batchId already folded " +
-        s"into $index — absorb is a no-op")
-      return
+    require(batchId != "base", "batch id 'base' is reserved for writeIndex")
+    graft.core.IndexOptimize.absorbBatch(
+        delta.sparkSession, index, batchId, IndexRels) {
+      writeIndexBatch(delta, index, batchId, textCol, idCol, shingleWords,
+        numHashes, bands, rightsizeFiles = false)
     }
-    writeIndexBatch(delta, index, batchId, textCol, idCol, shingleWords,
-      numHashes, bands, rightsizeFiles = false)
-    // retried absorbs replace their partition's files — invalidate the
-    // session's cached listings so same-session readers see the new parts
-    Seq("sets", "bands").foreach(rel =>
-      delta.sparkSession.catalog.refreshByPath(s"$index/$rel"))
   }
+
+  /** The stored index's batch-partitioned relations (absorb and OPTIMIZE). */
+  private val IndexRels = Seq("sets", "bands")
 
   /** DELETE documents from the stored dedup index ([[graft.core
     * .Tombstones]]): a taken-down doc must stop surfacing as a near-dup
@@ -419,7 +411,7 @@ object Dedup {
       targetBytes: Long = graft.core.Compaction.DefaultTargetBytes)
       : Seq[graft.core.IndexOptimize.RelOptStats] =
     graft.core.IndexOptimize.optimize(
-      spark, index, Seq("sets", "bands"), targetBytes,
+      spark, index, IndexRels, targetBytes,
       tombstoneIdCol = Some("id"))
 
   /** Shared index-batch writer: sets/bands land under `batch=<id>` hive
@@ -1147,7 +1139,7 @@ object Dedup {
     *    any collapsed cell so one dense semantic cluster cannot go
     *    quadratic (same guard as the LSH band joins);
     *  - exact cosine verify on candidates only (native [[graft_dot]]);
-    *  - duplicate groups = [[clusters]] min-label connected components;
+    *  - duplicate groups = [[clusters]] connected components (min id);
     *  - the keep rule ranks on the micro-quantized assignment cosine the
     *    coarse leg already computed — no extra corpus pass.
     *
@@ -1220,138 +1212,83 @@ object Dedup {
 
   /** Connected components over near-dup pairs → cluster ids + survivor
     * flags: the step that turns pairwise detection into an actionable
-    * dedup (keep one representative per duplicate cluster).
+    * dedup (keep one representative per duplicate cluster). Cluster id =
+    * the component's minimum id; survivor = the row whose id IS its
+    * cluster id. Exact on any topology — the full-reachability semantics
+    * the recursive d7 oracle replays.
     *
-    * Min-label propagation: every vertex starts labeled with itself; each
-    * round every vertex takes the minimum label among itself and its
-    * neighbors; converges in ≤ diameter rounds to the component's minimum
-    * id — deterministic, and each round is one broadcast-free equi-join +
-    * partial-min aggregation (the standard large-graph CC shape; diameter
-    * of near-dup clusters is tiny in practice, `maxIter` caps pathology).
-    * Survivor = the row whose id IS its cluster id. For graphs whose
-    * diameter may EXCEED the round budget (gradually-drifting duplicate
-    * chains), use [[clustersTwoPhase]] — O(log n) rounds on any topology.
-    *
-    * TIERING (optimization round 22): when the pair set fits the driver
-    * gate ([[DriverCcMaxPairsConf]]), labels come from exact union-find —
-    * full-reachability semantics on any topology (what the recursive d7
-    * oracle replays); the bounded-round propagation below is the
-    * distributed fallback for pair sets past the gate.
+    * Two paths, one answer:
+    *  - `bigint` ids and at most `DriverCcMaxPairs` pairs: exact
+    *    driver-side union-find (optimization round 22, the k11 precedent);
+    *  - otherwise [[clustersTwoPhase]] — O(log n) star rounds on any
+    *    graph, and an `IllegalStateException` rather than unconverged
+    *    labels if it cannot reach its fixed point.
     */
-  /** Pair-count bound for [[clusters]]' driver-side union-find: 4M pairs
-    * ≈ 64 MB of endpoint longs on the driver — the k11/centroid-collect
-    * discipline (guide §1.2/§5: parameter-bounded driver state only).
-    * Above it, the distributed min-label loop runs unchanged. Tunable via
-    * `spark.graft.cc.driverMaxPairs` (0 forces the distributed loop —
-    * also how DedupSpec pins the loop's bounded-round behavior).
-    */
-  private[operators] val DriverCcMaxPairsConf = "spark.graft.cc.driverMaxPairs"
-  private[operators] val DriverCcMaxPairsDefault = 4000000L
-
   def clusters(
       vertices: DataFrame, // one column: id
-      pairs: DataFrame,    // columns: a_id, b_id
-      maxIter: Int = 15): DataFrame = {
-    // DRIVER-SIDE union-find under a pair-count gate (optimization round
-    // 22, the k11 precedent): the near-dup PAIR set is the small side of
-    // this operator — every call site derives it from a capped band join
-    // over the vertex set — while the round loop below pays per-round
-    // join + aggregation + checkpoint jobs whose scheduling overhead
-    // dominates at bench scale (d11: 48-job floor). Collect the pairs,
-    // run exact union-find rooted at the component MINIMUM (union always
-    // points the larger root at the smaller, so the final root IS the
-    // min label the propagation converges to), and label the DISTRIBUTED
-    // vertex frame through one broadcast join. Endpoints are ⊆ vertices
-    // at every call site (pairs are generated from the vertex set), so
-    // the labels are identical to the converged loop's. The corpus-sized
-    // vertex frame never moves to the driver.
+      pairs: DataFrame     // columns: a_id, b_id
+  ): DataFrame = {
     val idsAreLong = {
       import org.apache.spark.sql.types.LongType
       vertices.schema.fields.exists(f => f.name == "id" && f.dataType == LongType) &&
         pairs.schema.fields.exists(f => f.name == "a_id" && f.dataType == LongType) &&
         pairs.schema.fields.exists(f => f.name == "b_id" && f.dataType == LongType)
     }
-    val driverMax = vertices.sparkSession.conf
-      .get(DriverCcMaxPairsConf, DriverCcMaxPairsDefault.toString).toLong
-    var pairsMat = pairs.select("a_id", "b_id")
-    if (idsAreLong && driverMax > 0L) {
-      val p = pairsMat.localCheckpoint(true)
-      pairsMat = p // a failed gate reuses the materialization below
-      if (p.count() <= driverMax) {
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (c != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-          r
-        }
-        p.collect().foreach { row =>
-          val a = row.getLong(0); val b = row.getLong(1)
-          if (!parent.containsKey(a)) parent.put(a, a)
-          if (!parent.containsKey(b)) parent.put(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-        import scala.jdk.CollectionConverters._
-        val session = vertices.sparkSession
-        import session.implicits._
-        val mapping = parent.keySet().asScala.iterator
-          .map(idv => (idv, find(idv))).toSeq.toDF("id", "__lbl")
-        return vertices.select("id")
-          .join(broadcast(mapping), Seq("id"), "left")
-          .select(
-            col("id"),
-            coalesce(col("__lbl"), col("id")).as("cluster_id"),
-            (col("id") === coalesce(col("__lbl"), col("id")))
-              .cast("int").as("is_survivor"))
-      }
+    if (!idsAreLong) return clustersTwoPhase(vertices, pairs)
+    // a failed gate hands the materialized pairs to the star loop
+    val p = pairs.select("a_id", "b_id").localCheckpoint(true)
+    if (p.count() > DriverCcMaxPairs) return clustersTwoPhase(vertices, p)
+    // The near-dup PAIR set is the small side of this operator — every
+    // call site derives it from a capped band join over the vertex set.
+    // Collect the pairs, run union-find rooted at the component MINIMUM
+    // (union always points the larger root at the smaller, so the final
+    // root IS the min label), and label the DISTRIBUTED vertex frame
+    // through one broadcast join. Endpoints are ⊆ vertices at every call
+    // site (pairs are generated from the vertex set). The corpus-sized
+    // vertex frame never moves to the driver.
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
+      r
     }
-    val edges = pairsMat.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(pairsMat.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint (eager) each round: truncates the growing lineage so
-    // per-iteration planning stays O(1) — with plain persist the logical
-    // plan doubles every round and planning time dominates (35s -> ~8s
-    // for the whole query at sf0.1)
-    var labels = vertices.select(col("id"), col("id").as("label")).localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("label").as("nlabel"))
-      // the previous label rides INSIDE the checkpointed frame, so the
-      // convergence probe is a local scan of the checkpoint blocks — the
-      // old formulation re-joined two O(V) checkpointed frames every round
-      // just to count changes, a per-round shuffle that grows with the
-      // vertex set (noise at sf0.1, real at corpus scale)
-      val next = labels.join(neighborMin, Seq("id"), "left")
-        .select(
-          col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          col("label").as("old"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("label") =!= col("old")).count()
-      labels = next.select("id", "label")
-      converged = changed == 0L
-      iter += 1
+    p.collect().foreach { row =>
+      val a = row.getLong(0); val b = row.getLong(1)
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
     }
-    labels.select(
-      col("id"),
-      col("label").as("cluster_id"),
-      (col("id") === col("label")).cast("int").as("is_survivor"))
+    import scala.jdk.CollectionConverters._
+    val session = vertices.sparkSession
+    import session.implicits._
+    val mapping = parent.keySet().asScala.iterator
+      .map(idv => (idv, find(idv))).toSeq.toDF("id", "__lbl")
+    vertices.select("id")
+      .join(broadcast(mapping), Seq("id"), "left")
+      .select(
+        col("id"),
+        coalesce(col("__lbl"), col("id")).as("cluster_id"),
+        (col("id") === coalesce(col("__lbl"), col("id")))
+          .cast("int").as("is_survivor"))
   }
+
+  /** Pair-count bound for [[clusters]]' driver-side union-find: 4M pairs
+    * ≈ 64 MB of endpoint longs on the driver — the k11/centroid-collect
+    * discipline (guide §1.2/§5: parameter-bounded driver state only).
+    */
+  private val DriverCcMaxPairs = 4000000L
 
   /** Connected components by ALTERNATING STAR OPERATIONS (Kiveris et al.
     * 2014, "Connected Components in MapReduce and Beyond" — the industrial
     * CC for graphs whose diameter is NOT small): converges in O(log n)
-    * rounds on ANY graph, where [[clusters]]' min-label propagation needs
-    * diameter rounds — a duplicate CHAIN (doc A ≈ B ≈ C ≈ … — common when
-    * a template drifts gradually across a crawl) defeats a bounded-round
-    * label propagation but not this.
+    * rounds on ANY graph, where label propagation needs diameter rounds —
+    * a duplicate CHAIN (doc A ≈ B ≈ C ≈ … — common when a template drifts
+    * gradually across a crawl) defeats a bounded-round propagation but not
+    * this. [[clusters]] falls back to it above its driver gate.
     *
     * Each round rewires the edge set toward rooted stars:
     *  - large-star: every node u computes m = min(Γ(u) ∪ {u}) over its FULL
@@ -1370,10 +1307,9 @@ object Dedup {
     * once, at the end.
     *
     * Same output contract as [[clusters]]: (id, cluster_id, is_survivor),
-    * survivor = the component-minimum id. The two implementations are
-    * interchangeable; spec-pinned equal on near-dup pair sets, and this one
-    * additionally solves the high-diameter graphs the bounded-round
-    * propagation cannot (also spec-pinned, on a 64-node path).
+    * survivor = the component-minimum id; spec-pinned equal to its
+    * union-find path on near-dup pair sets, random graphs and a 64-node
+    * path.
     */
   def clustersTwoPhase(
       vertices: DataFrame, // one column: id

@@ -237,27 +237,18 @@ object Retrieval {
     * pure per-doc map, base-build + delta-absorb ≡ one-shot build
     * (spec-pinned), so absorption order can never change the index.
     */
-  def absorbTextIndex(path: String, batch: DataFrame, batchId: String): Unit = {
-    require(batchId.nonEmpty, "batchId must be a non-empty ingest-batch name")
-    require(batchId != graft.core.IndexOptimize.FoldedPartition,
-      s"batch id '$batchId' is reserved for the consolidated OPTIMIZE partition")
-    if (graft.core.IndexOptimize.isFolded(path, batchId)) {
-      // retry-after-OPTIMIZE fence: the batch's postings already live in
-      // the consolidated partition — re-absorbing would double its tf rows
-      System.err.println(s"[index-optimize] batch=$batchId already folded " +
-        s"into $path — absorb is a no-op")
-      return
+  def absorbTextIndex(path: String, batch: DataFrame, batchId: String): Unit =
+    graft.core.IndexOptimize.absorbBatch(
+        batch.sparkSession, path, batchId, TextIndexRels) {
+      // rebalance before the stored write (guide §6 file sizing): postings
+      // of a small absorb batch otherwise fan into one near-empty file per
+      // task, and every search re-lists and re-opens them all
+      textIndexPostings(batch).hint("rebalance")
+        .write.mode("overwrite").parquet(s"$path/postings/batch=$batchId")
     }
-    // rebalance before the stored write (guide §6 file sizing): postings
-    // of a small absorb batch otherwise fan into one near-empty file per
-    // task, and every search re-lists and re-opens them all
-    textIndexPostings(batch).hint("rebalance")
-      .write.mode("overwrite").parquet(s"$path/postings/batch=$batchId")
-    // a RETRIED absorb replaces the partition's files — drop the session's
-    // cached file listing so a same-session reader can't chase the old
-    // part files (the idempotency contract includes the re-read)
-    batch.sparkSession.catalog.refreshByPath(s"$path/postings")
-  }
+
+  /** The stored index's batch-partitioned relations (absorb and OPTIMIZE). */
+  private val TextIndexRels = Seq("postings")
 
   /** DELETE documents from the stored text index ([[graft.core
     * .Tombstones]]): O(|takedown list|) now, physical at the next
@@ -289,7 +280,7 @@ object Retrieval {
       targetBytes: Long = graft.core.Compaction.DefaultTargetBytes)
       : Seq[graft.core.IndexOptimize.RelOptStats] =
     graft.core.IndexOptimize.optimize(
-      spark, path, Seq("postings"), targetBytes,
+      spark, path, TextIndexRels, targetBytes,
       tombstoneIdCol = Some("doc_id"))
 
   /** BM25 top-k answered from the STORED postings — value-identical to

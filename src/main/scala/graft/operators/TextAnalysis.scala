@@ -997,30 +997,24 @@ object TextAnalysis {
       batchId: String,
       k: Int = 64,
       textCol: String = "text"): Unit = {
-    require(batchId.nonEmpty, "batchId must be a non-empty ingest-batch name")
-    require(batchId != graft.core.IndexOptimize.FoldedPartition,
-      s"batch id '$batchId' is reserved for the consolidated OPTIMIZE partition")
-    if (graft.core.IndexOptimize.isFolded(path, batchId)) {
-      // retry-after-OPTIMIZE fence: the batch's candidates already live in
-      // the consolidated partition. A duplicate would not change the
-      // candidate UNION (the search exact-verifies), but it would re-grow
-      // the layout the fold just collapsed — no-op like the sibling fences
-      System.err.println(s"[index-optimize] batch=$batchId already folded " +
-        s"into $path — absorb is a no-op")
-      return
+    graft.core.IndexOptimize.absorbBatch(
+        batch.sparkSession, path, batchId, HeavyHitterRels) {
+      graft.functions.GraftFunctions.register(batch.sparkSession)
+      batch.select(explode(split(col(textCol), " ")).as("token"))
+        .agg(expr(s"graft_mg(token, $k)").as("cands"), count(lit(1)).as("n"))
+        .select(explode(col("cands")).as("c"), col("n"))
+        // summary_k rides with the batch: the superset guarantee only
+        // covers searches at k' <= k (a coarser threshold than the
+        // summary's) — the search validates against it instead of
+        // silently under-reporting
+        .select(col("c.item").as("token"), col("c.lb").as("lb"),
+          col("n").as("batch_n"), lit(k).as("summary_k"))
+        .write.mode("overwrite").parquet(s"$path/cands/batch=$batchId")
     }
-    graft.functions.GraftFunctions.register(batch.sparkSession)
-    batch.select(explode(split(col(textCol), " ")).as("token"))
-      .agg(expr(s"graft_mg(token, $k)").as("cands"), count(lit(1)).as("n"))
-      .select(explode(col("cands")).as("c"), col("n"))
-      // summary_k rides with the batch: the superset guarantee only covers
-      // searches at k' <= k (a coarser threshold than the summary's) — the
-      // search validates against it instead of silently under-reporting
-      .select(col("c.item").as("token"), col("c.lb").as("lb"),
-        col("n").as("batch_n"), lit(k).as("summary_k"))
-      .write.mode("overwrite").parquet(s"$path/cands/batch=$batchId")
-    batch.sparkSession.catalog.refreshByPath(s"$path/cands")
   }
+
+  /** The summary's batch-partitioned relations (absorb and OPTIMIZE). */
+  private val HeavyHitterRels = Seq("cands")
 
   /** OPTIMIZE the stored summaries: fold accumulated `batch=*` absorb
     * partitions into one consolidated partition ([[graft.core
@@ -1034,7 +1028,7 @@ object TextAnalysis {
       targetBytes: Long = graft.core.Compaction.DefaultTargetBytes)
       : Seq[graft.core.IndexOptimize.RelOptStats] =
     graft.core.IndexOptimize.optimize(
-      spark, path, Seq("cands"), targetBytes)
+      spark, path, HeavyHitterRels, targetBytes)
 
   /** Heavy-hitter tokens answered from the STORED per-batch summaries —
     * value-identical to [[heavyTokens]] on the same corpus (shared oracle):

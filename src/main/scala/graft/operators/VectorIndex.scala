@@ -134,41 +134,33 @@ object VectorIndex {
       batch: DataFrame,
       batchId: String,
       m: Int = 8,
-      dim: Int = 64): Unit = {
-    require(batchId.nonEmpty, "batchId must be a non-empty ingest-batch name")
-    require(batchId != graft.core.IndexOptimize.FoldedPartition,
-      s"batch id '$batchId' is reserved for the consolidated OPTIMIZE partition")
-    if (graft.core.IndexOptimize.isFolded(path, batchId)) {
-      // retry-after-OPTIMIZE fence: the batch's rows already live in the
-      // consolidated partition — re-absorbing would duplicate the index
-      System.err.println(s"[index-optimize] batch=$batchId already folded " +
-        s"into $path — absorb is a no-op")
-      return
+      dim: Int = 64): Unit =
+    graft.core.IndexOptimize.absorbBatch(spark, path, batchId, VectorRels) {
+      requireMeta(spark, path, m, dim)
+      val v = Similarity.asVectors(batch)
+      val cents = spark.read.parquet(s"$path/centroids")
+      // rebalance before every stored-relation write (guide §6 file
+      // sizing): a full-width write of a small absorb batch fans into one
+      // near-empty file per task, and every search re-lists and re-opens
+      // them all; AQE coalesces to right-sized files and still splits
+      // genuinely large batches at the advisory size
+      Similarity.ivfAssign(v, cents).select("id", "cid").hint("rebalance")
+        .write.mode("overwrite").parquet(s"$path/assign/batch=$batchId")
+      val codebook = spark.read.parquet(s"$path/codebook")
+      Similarity.pqEncode(v, codebook, m, dim).hint("rebalance")
+        .write.mode("overwrite").parquet(s"$path/codes/batch=$batchId")
+      // packed 1-bit signatures ride in the same artifact (64x smaller than
+      // raw vectors — the binary tier the cascade's stage 1 scans): the
+      // hyperplanes are md5-derived, so a batch's signatures are a pure map
+      // of the frozen (nBits, dim) — frozen-quantizer semantics for free
+      Similarity.binarySignatures(v, SigBits, dim).hint("rebalance")
+        .write.mode("overwrite").parquet(s"$path/sigs/batch=$batchId")
     }
-    requireMeta(spark, path, m, dim)
-    val v = Similarity.asVectors(batch)
-    val cents = spark.read.parquet(s"$path/centroids")
-    // rebalance before every stored-relation write (guide §6 file
-    // sizing): a full-width write of a small absorb batch fans into one
-    // near-empty file per task, and every search re-lists and re-opens
-    // them all; AQE coalesces to right-sized files and still splits
-    // genuinely large batches at the advisory size
-    Similarity.ivfAssign(v, cents).select("id", "cid").hint("rebalance")
-      .write.mode("overwrite").parquet(s"$path/assign/batch=$batchId")
-    val codebook = spark.read.parquet(s"$path/codebook")
-    Similarity.pqEncode(v, codebook, m, dim).hint("rebalance")
-      .write.mode("overwrite").parquet(s"$path/codes/batch=$batchId")
-    // packed 1-bit signatures ride in the same artifact (64x smaller than
-    // raw vectors — the binary tier the cascade's stage 1 scans): the
-    // hyperplanes are md5-derived, so a batch's signatures are a pure map
-    // of the frozen (nBits, dim) — frozen-quantizer semantics for free
-    Similarity.binarySignatures(v, SigBits, dim).hint("rebalance")
-      .write.mode("overwrite").parquet(s"$path/sigs/batch=$batchId")
-    // retried absorbs replace their partition's files — invalidate the
-    // session's cached listings so same-session readers see the new parts
-    Seq("assign", "codes", "sigs").foreach(rel =>
-      spark.catalog.refreshByPath(s"$path/$rel"))
-  }
+
+  /** The per-vector relations: batch-partitioned by absorb, folded by
+    * OPTIMIZE. Quantizer relations are bounded and never folded.
+    */
+  private val VectorRels = Seq("assign", "codes", "sigs")
 
   /** Signature width of the stored binary tier — fixed at the packed-long
     * maximum; a narrower width would change stored signatures' meaning, so
@@ -224,7 +216,7 @@ object VectorIndex {
       targetBytes: Long = graft.core.Compaction.DefaultTargetBytes)
       : Seq[graft.core.IndexOptimize.RelOptStats] =
     graft.core.IndexOptimize.optimize(
-      spark, path, Seq("assign", "codes", "sigs"), targetBytes,
+      spark, path, VectorRels, targetBytes,
       tombstoneIdCol = Some("id"))
 
   /** IVF-PQ top-k answered from the STORED index — value-identical to

@@ -281,19 +281,39 @@ object CsvIngest {
   /** Prepend the UTF-8 BOM to every part file of a written CSV directory
     * (each part carries its own header+BOM so any single part is a valid
     * `utf-8-sig` flat file, as downstream pandas consumers expect).
+    *
+    * Goes through the Hadoop FileSystem API, so `path` may be any URI
+    * [[writeCsv]] accepts (`file:`, HDFS, an object store) — a
+    * `java.io.File` listing finds nothing there and silently writes no
+    * BOM. Each part is streamed into a hidden sibling behind the BOM and
+    * renamed over the original; on a checksummed filesystem the rename
+    * carries the sibling's fresh `.crc` along, so the sidecar stays valid.
     */
   def bomPrefixParts(path: String): Unit = {
-    val dir = new java.io.File(path)
-    val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-    parts.foreach { f =>
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      val bom = Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
-      if (bytes.length < 3 || bytes(0) != bom(0)) {
-        java.nio.file.Files.write(f.toPath, bom ++ bytes)
-        // The rewrite invalidates Hadoop LocalFileSystem's sidecar checksum.
-        val crc = new java.io.File(f.getParentFile, "." + f.getName + ".crc")
-        if (crc.exists()) crc.delete()
+    import org.apache.hadoop.fs.{FileContext, Options, Path}
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    val bom = Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
+    val parts = fs.listStatus(dir)
+      .filter(st => st.getPath.getName.startsWith("part-") &&
+        st.getPath.getName.endsWith(".csv"))
+    parts.foreach { st =>
+      val p = st.getPath
+      val first =
+        if (st.getLen < 3) -1
+        else { val in = fs.open(p); try in.read() finally in.close() }
+      if (first != 0xEF) {
+        val tmp = fs.makeQualified(new Path(dir, s".${p.getName}.bom"))
+        val out = fs.create(tmp, true)
+        try {
+          out.write(bom)
+          val src = fs.open(p)
+          try org.apache.hadoop.io.IOUtils.copyBytes(src, out, 1 << 16, false)
+          finally src.close()
+        } finally out.close()
+        FileContext.getFileContext(fs.getUri, conf)
+          .rename(tmp, p, Options.Rename.OVERWRITE)
       }
     }
   }

@@ -139,6 +139,63 @@ class IndexOptimizeSpec extends SparkSpec {
       "heavy-hitters search")
   }
 
+  /** One streamed artifact under the absorb fence: `init` lays down its
+    * first batch, `absorb` lands one more, `rel` is counted, and `rebuild`
+    * (where the artifact has one) rebuilds in place.
+    */
+  private case class Fenced(
+      name: String,
+      rel: String,
+      init: String => Unit,
+      absorb: (String, String) => Unit,
+      optimize: String => Unit,
+      rebuild: Option[String => Unit])
+
+  test("absorb fence on all four artifacts: folded retry no-ops, reserved id and in-place rebuild refused") {
+    val c1 = docs.filter(col("doc_id") % 2 === 0)
+    val c2 = docs.filter(col("doc_id") % 2 === 1)
+    val e1 = emb.filter(col("vec_id") % 2 === 0)
+    val e2 = emb.filter(col("vec_id") % 2 === 1)
+    val artifacts = Seq(
+      Fenced("vector index", "codes",
+        VectorIndex.build(e1, _),
+        (p, id) => VectorIndex.absorb(spark, p, e2, id),
+        VectorIndex.optimize(spark, _),
+        Some(VectorIndex.build(emb, _))),
+      Fenced("dedup index", "sets",
+        Dedup.writeIndex(c1, _),
+        (p, id) => Dedup.appendToIndex(p, c2, id),
+        Dedup.optimizeIndex(spark, _),
+        Some(Dedup.writeIndex(c1, _))),
+      Fenced("text index", "postings",
+        Retrieval.buildTextIndex(c1, _),
+        (p, id) => Retrieval.absorbTextIndex(p, c2, id),
+        Retrieval.optimizeTextIndex(spark, _),
+        Some(Retrieval.buildTextIndex(c1, _))),
+      Fenced("heavy hitters", "cands",
+        TextAnalysis.absorbHeavyHitters(_, c1, "b0", k = 32),
+        (p, id) => TextAnalysis.absorbHeavyHitters(p, c2, id, k = 32),
+        TextAnalysis.optimizeHeavyHitters(spark, _),
+        None))
+    for (a <- artifacts) {
+      val path = tmpDir("opt_fence")
+      a.init(path)
+      a.absorb(path, "b1")
+      a.optimize(path)
+      val n = spark.read.parquet(s"$path/${a.rel}").count()
+      a.absorb(path, "b1") // folded retry
+      assert(spark.read.parquet(s"$path/${a.rel}").count() == n,
+        s"${a.name}: retried absorb after OPTIMIZE changed the row count")
+      assert(batchDirs(s"$path/${a.rel}") == Seq(s"batch=${IndexOptimize.FoldedPartition}"),
+        s"${a.name}: retried absorb re-grew the folded layout")
+      intercept[IllegalArgumentException] {
+        a.absorb(path, IndexOptimize.FoldedPartition)
+      }
+      intercept[IllegalArgumentException] { a.absorb(path, "") }
+      a.rebuild.foreach(r => intercept[IllegalArgumentException] { r(path) })
+    }
+  }
+
   test("a fold whose tombstones delete every row reports 0 rows") {
     val few = docs.filter(col("doc_id") < 10).localCheckpoint(true)
     val path = tmpDir("opt_all_deleted")

@@ -177,11 +177,27 @@ class DedupSpec extends SparkSpec {
       val pairs = (1 to n * 2).map { _ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
       }.filter(p => p._1 != p._2).toDF("a_id", "b_id")
-      // maxIter = n: propagation provably converges within diameter < n
-      val a = Dedup.clusters(verts, pairs, maxIter = n)
+      val a = Dedup.clusters(verts, pairs)
       val b = Dedup.clustersTwoPhase(verts, pairs)
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         s"CC algorithms disagree on random graph trial $trial (n=$n)")
+    }
+  }
+
+  test("clusters past the driver branch (Int ids) equals clustersTwoPhase on bigint ids (random graphs, fixed seed)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 2) {
+      val n = 20 + rnd.nextInt(20)
+      val edges = (1 to n * 2).map(_ => (rnd.nextInt(n), rnd.nextInt(n)))
+        .filter(p => p._1 != p._2)
+      val a = Dedup.clusters((0 until n).toDF("id"), edges.toDF("a_id", "b_id"))
+        .select(col("id").cast("bigint"), col("cluster_id").cast("bigint"),
+          col("is_survivor"))
+      val b = Dedup.clustersTwoPhase((0L until n.toLong).toDF("id"),
+        edges.map(p => (p._1.toLong, p._2.toLong)).toDF("a_id", "b_id"))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        s"Int-id clusters disagrees with clustersTwoPhase on trial $trial (n=$n)")
     }
   }
 
@@ -232,24 +248,20 @@ class DedupSpec extends SparkSpec {
     assert(two.filter(col("cluster_id") =!= 0L).count() == 0L,
       "two-phase CC failed to collapse the chain to its minimum")
     assert(two.filter(col("is_survivor") === 1).count() == 1L)
-    // re-tiered in optimization round 22 (as this pin's old comment
-    // prescribed): the DEFAULT clusters() now runs exact driver-side
-    // union-find under its pair-count gate — the same full-reachability
-    // semantics the recursive d7 oracle replays — so it solves ANY
-    // diameter too
+    // the DEFAULT clusters() runs exact driver-side union-find under its
+    // pair-count gate — the same full-reachability semantics the recursive
+    // d7 oracle replays — so it solves ANY diameter too
     val exact = Dedup.clusters(verts, pairs)
     assert(exact.filter(col("cluster_id") =!= 0L).count() == 0L,
       "gated clusters() must match exact reachability")
-    // the MOTIVATION pin moves to the DISTRIBUTED fallback (forced via
-    // the gate conf): bounded-round propagation really does leave the far
-    // end of the chain unconverged — clustersTwoPhase's reason to exist
-    spark.conf.set(Dedup.DriverCcMaxPairsConf, "0")
-    try {
-      val propagated = Dedup.clusters(verts, pairs)
-      assert(propagated.filter(col("cluster_id") =!= 0L).count() > 0L,
-        "clusters(maxIter=15, distributed) unexpectedly solved a " +
-          "63-diameter chain")
-    } finally spark.conf.unset(Dedup.DriverCcMaxPairsConf)
+    // Int ids skip the driver branch: clusters() falls back to the star
+    // loop, which must collapse the chain too — never stop short of it
+    val intVerts = (0 until n).toDF("id")
+    val intPairs = (0 until n - 1).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val fallback = Dedup.clusters(intVerts, intPairs)
+    assert(fallback.filter(col("cluster_id") =!= 0).count() == 0L,
+      "clusters() past the driver branch failed to collapse the chain")
+    assert(fallback.filter(col("is_survivor") === 1).count() == 1L)
   }
 
   test("blocked ngram jaccard joins only within blocks") {

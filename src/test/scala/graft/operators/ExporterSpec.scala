@@ -146,6 +146,26 @@ class ExporterSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("export over-cap path BOM-prefixes parts under a file: URI spill dir") {
+    val dir = tmpDir("export_spill_uri")
+    val r = Exporter.export(
+      spark, ColumnSelection("nation", Seq("n_nationkey", "n_name")), resolve,
+      inlineRowCap = 10, spillDir = Some("file:" + dir))
+    assert(r.count == 25)
+    val files = new java.io.File(dir).listFiles().map(_.getName)
+    val parts = files.filter(n => n.startsWith("part-") && n.endsWith(".csv"))
+    assert(parts.nonEmpty)
+    for (n <- parts) {
+      val bytes = java.nio.file.Files.readAllBytes(new java.io.File(dir, n).toPath)
+      assert(bytes.take(3).sameElements(Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)),
+        s"$n has no UTF-8 BOM")
+    }
+    assert(!files.exists(_.endsWith(".bom")), "a BOM staging file was left behind")
+    // a checksummed re-read fails on a stale .crc sidecar; each part
+    // carries its own header line
+    assert(spark.read.text("file:" + dir).count() == 25L + parts.length)
+  }
+
   test("export envelope: empty result short-circuits with message") {
     val r = Exporter.export(
       spark,
